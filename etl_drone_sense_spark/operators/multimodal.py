@@ -2718,7 +2718,7 @@ def decode_wav_adpcm_batch(bufs):
                 lanes, out, hdr = ima_lanes, ima_out, 1
             else:
                 lanes, out, hdr = ms_lanes, ms_out, 2
-                if ms_ovf[lo:hi].any():
+                if lo < hi and ms_ovf[lo:hi].any():
                     results[i] = parse_wav(bufs[i])
                     continue
             blocks = []
@@ -2734,7 +2734,10 @@ def decode_wav_adpcm_batch(bufs):
                         mat[1, c] = ln[3]  # then s1
                     mat[hdr:, c] = out[b + c, :n]
                 blocks.append(mat)
-            allf = blocks[0] if len(blocks) == 1 else np.concatenate(blocks)
+            if not blocks:  # empty data chunk: zero frames, like parse_wav
+                allf = np.empty((0, channels), dtype=np.int64)
+            else:
+                allf = blocks[0] if len(blocks) == 1 else np.concatenate(blocks)
             if fact is not None:
                 if fact > allf.shape[0]:
                     raise ValueError(

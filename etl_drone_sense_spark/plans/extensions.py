@@ -262,7 +262,7 @@ def _simhash_oracle(nbits: int, blocks: int, max_hamming: int = 3) -> str:
     """
 
 
-# RETIRED from the registry in r8 (VERDICT r7 item 6): the fixed 16-bit
+# Retired from the registry: the fixed 16-bit
 # "dedup_simhash" config was the one registry entry that could never be
 # sf1-certified — 16-bit fingerprints on a dup-deepened corpus emit 312M
 # hamming≤3 pairs BY DESIGN (that is the answer at that config, not a

@@ -1,8 +1,8 @@
 """Query registry: every operator the engine claims, as a named pair of
 (a Spark DataFrame program, an ANSI-SQL DuckDB oracle).
 
-This drives ``__spark_entry__.queries()`` / ``oracle_sql()`` (the driver's
-correctness gate), ``bench.py``, and the differential tests.
+This feeds ``__spark_entry__.queries()`` / ``oracle_sql()``, ``bench.py``
+and the differential tests.
 
 Numeric-parity conventions (SURVEY §7.4):
 * double sums over UNBOUNDED groups go through the ``dsum``/``dsum_sql``
@@ -47,128 +47,6 @@ class QuerySpec:
 
 
 REGISTRY: dict[str, QuerySpec] = {}
-
-# Queries already checked by the driver's correctness gate in a previous round.
-# The driver records the FIRST ~50 queries in the order ``all_queries()`` yields
-# them, so ``_ordered_specs`` sorts STALEST-CHECKED FIRST: never-checked
-# queries, then round-1-only greens (whose modules round 2 touched — the
-# evidence-staleness risk VERDICT r2 flagged), then round-2 greens last
-# (every query is still parity-tested locally each session by
-# tests/test_oracle_parity.py).
-# ``dedup_embedding`` is deliberately NOT listed in R01: its round-1 pass was
-# vacuous (0 rows vs 0 rows) and the reworked query needed a fresh check (got
-# one in r2: 50 real pairs).
-DRIVER_CHECKED_R01: frozenset[str] = frozenset(
-    {
-        "geo_bearing_distance",
-        "drone_features_flat",
-        "drone_features_multivideo",
-        "dedup_exact",
-        "dedup_minhash",
-        "dedup_simhash",
-        "dedup_ngram_jaccard",
-        "sim_topk_bruteforce",
-        "sim_ivf_topk",
-        "text_quality",
-        "text_langid",
-        "text_token_freq",
-        "text_fingerprint",
-        "sessionize_events",
-        "window_tumbling_events",
-        "window_sliding_events",
-        "multimodal_bytes",
-        "multimodal_features",
-        "agg_approx_distinct",
-        "stream_tumbling_counts",
-        "text_tfidf_topk",
-        "grouped_map_centroids",
-        "corpus_chunking",
-        "corpus_split_stats",
-        "corpus_contamination",
-        "vector_normalize_quantize",
-        "corpus_sample_per_lang",
-        "events_funnel",
-        "multimodal_frame_sample",
-        "dedup_keep_rows",
-        "sim_kmeans_ivf_topk",
-        "text_winnowing",
-        "dedup_cluster_stats",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_region_revenue",
-        "agg_distinct",
-        "agg_stats",
-        "having_filter",
-        "rollup_region_nation",
-        "cube_status_priority",
-        "grouping_sets",
-        "pivot_priority_status",
-        "join_left_count",
-        "join_semi",
-        "join_anti",
-        "join_full_outer",
-        "join_cross",
-        "join_range_nonequi",
-    }
-)
-
-# CORRECTNESS_r02.json: 49 fully-oracled green + 1 rows-only-by-design
-# (agg_approx_percentile). These have the FRESHEST driver evidence, so they
-# rotate to the very tail of the window ordering.
-DRIVER_CHECKED_R02: frozenset[str] = frozenset(
-    {
-        "stream_drone_features_flat",
-        "dedup_incremental",
-        "corpus_pack_sequences",
-        "dedup_embedding",
-        "dedup_embedding_lsh",
-        "udtf_sentences",
-        "text_gopher_quality",
-        "text_redact_pii",
-        "text_langid_predict",
-        "stream_session_counts",
-        "filter_in_between_like",
-        "sort_limit",
-        "set_ops",
-        "window_topk_per_group",
-        "window_running_sum",
-        "window_lag_lead",
-        "window_rank_navigation",
-        "string_funcs",
-        "date_funcs",
-        "math_funcs",
-        "json_funcs",
-        "case_bucketing",
-        "subquery_exists_notin",
-        "subquery_scalar_correlated",
-        "array_funcs",
-        "map_funcs",
-        "agg_percentiles",
-        "join_asof",
-        "events_gapfill",
-        "window_range_frame",
-        "agg_skew_salted",
-        "string_distance",
-        "agg_approx_percentile",
-        "unpivot_metrics",
-        "null_semantics",
-        "set_ops_all",
-        "join_range_binned",
-        "join_skewed_salted",
-        "geo_bearing_distance",
-        "drone_features_flat",
-        "drone_features_multivideo",
-        "dedup_exact",
-        "dedup_minhash",
-        "dedup_simhash",
-        "dedup_ngram_jaccard",
-        "sim_topk_bruteforce",
-        "sim_ivf_topk",
-        "text_quality",
-        "text_langid",
-        "text_token_freq",
-    }
-)
 
 
 def register(
@@ -290,1062 +168,14 @@ def _load() -> None:
     from . import curation, drone, extensions, relational  # noqa: F401
 
 
-# CORRECTNESS_r03.json: 46 fully-oracled green + 4 rows-only-by-design.
-# The r3 window re-certified every round-1-only green (VERDICT r2 #1) plus
-# the 13 new round-3 queries — so after round 3 the STALEST evidence is the
-# round-2 tier (DRIVER_CHECKED_R02: its window ran against round-2 code and
-# rounds 3-4 touched merge/sinks/text modules some of them exercise).
-DRIVER_CHECKED_R03: frozenset[str] = frozenset(
-    {
-        "text_repetition",
-        "text_boilerplate_strip",
-        "text_unigram_logprob",
-        "multimodal_decode",
-        "stream_watermark_eviction",
-        "stream_interval_join",
-        "corpus_prepare_pipeline",
-        "sim_ivf_topk_frozen",
-        "merge_upsert",
-        "dedup_paragraph",
-        "sample_stratified",
-        "text_html_strip",
-        "sim_pq_topk",
-        "text_fingerprint",
-        "sessionize_events",
-        "window_tumbling_events",
-        "window_sliding_events",
-        "multimodal_bytes",
-        "multimodal_features",
-        "agg_approx_distinct",
-        "stream_tumbling_counts",
-        "text_tfidf_topk",
-        "grouped_map_centroids",
-        "corpus_chunking",
-        "corpus_split_stats",
-        "corpus_contamination",
-        "vector_normalize_quantize",
-        "corpus_sample_per_lang",
-        "events_funnel",
-        "multimodal_frame_sample",
-        "dedup_keep_rows",
-        "sim_kmeans_ivf_topk",
-        "text_winnowing",
-        "dedup_cluster_stats",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_region_revenue",
-        "agg_distinct",
-        "agg_stats",
-        "having_filter",
-        "rollup_region_nation",
-        "cube_status_priority",
-        "grouping_sets",
-        "pivot_priority_status",
-        "join_left_count",
-        "join_semi",
-        "join_anti",
-        "join_full_outer",
-        "join_cross",
-        "join_range_nonequi",
-    }
-)
-
-
-# CORRECTNESS_r04.json: the 50 queries the round-4 window checked (all green).
-DRIVER_CHECKED_R04: frozenset[str] = frozenset(
-    {
-        "array_funcs",
-        "case_bucketing",
-        "cdc_snapshot_diff",
-        "corpus_mixture_sample",
-        "corpus_pack_sequences",
-        "date_funcs",
-        "dedup_embedding",
-        "dedup_embedding_lsh",
-        "dedup_exact",
-        "dedup_incremental",
-        "dedup_minhash",
-        "dedup_ngram_jaccard",
-        "dedup_semantic",
-        "dedup_simhash",
-        "drone_features_flat",
-        "drone_features_multivideo",
-        "events_pattern_match",
-        "events_retention_cohorts",
-        "filter_in_between_like",
-        "geo_bearing_distance",
-        "json_funcs",
-        "layout_zorder",
-        "math_funcs",
-        "sample_importance",
-        "sample_reservoir_group",
-        "set_ops",
-        "sim_ivf_topk",
-        "sim_topk_batch",
-        "sim_topk_bruteforce",
-        "sort_limit",
-        "stream_dedup_exact",
-        "stream_drone_features_flat",
-        "stream_interval_join_outer",
-        "stream_running_totals",
-        "stream_session_counts",
-        "string_funcs",
-        "subquery_exists_notin",
-        "subquery_scalar_correlated",
-        "text_bigram_lm",
-        "text_gopher_quality",
-        "text_langid",
-        "text_langid_predict",
-        "text_quality",
-        "text_redact_pii",
-        "text_token_freq",
-        "udtf_sentences",
-        "window_lag_lead",
-        "window_rank_navigation",
-        "window_running_sum",
-        "window_topk_per_group",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 5 — their last green
-# driver row is evidence about code that no longer exists, so they jump to
-# the head of the window regardless of tier:
-# * dedup_cluster_stats — full recursive-CTE oracle landed AFTER its last
-#   driver check (r4 VERDICT item 1: the one oracled-but-unconfirmed query);
-# * text_html_strip — URL canonicalization changed in both renderers
-#   (the '&'-in-path fix, r4 ADVICE);
-# * agg_approx_distinct / agg_approx_percentile — upgraded from rows-only
-#   to bounded-error oracles this round (r4 VERDICT item 3);
-# * dedup_semantic — mega-cell re-shard added (r4 VERDICT item 4; output
-#   must stay hash-identical, which is exactly what a driver row proves).
-TOUCHED_R05: tuple[str, ...] = (
-    "sim_kmeans_ivf_topk",  # rows-only → bounded-quality oracle (recall gate)
-    "dedup_cluster_stats",
-    "text_html_strip",
-    "agg_approx_distinct",
-    "agg_approx_percentile",
-    "dedup_semantic",
-    # Staged-tokenization refactor (shingles built from a projected tokens
-    # column — the O(tokens²) lambda fix) rewired every shingle consumer:
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "dedup_incremental",
-    "dedup_simhash",
-    "corpus_contamination",
-    "corpus_chunking",
-    "corpus_prepare_pipeline",
-    "text_winnowing",
-)
-
-
-# CORRECTNESS_r05.json: the 50 queries the round-5 window checked (all green).
-DRIVER_CHECKED_R05: frozenset[str] = frozenset(
-    {
-        "sim_kmeans_ivf_topk",
-        "dedup_cluster_stats",
-        "text_html_strip",
-        "agg_approx_distinct",
-        "agg_approx_percentile",
-        "dedup_semantic",
-        "dedup_minhash",
-        "dedup_ngram_jaccard",
-        "dedup_incremental",
-        "dedup_simhash",
-        "corpus_contamination",
-        "corpus_chunking",
-        "corpus_prepare_pipeline",
-        "text_winnowing",
-        "dedup_simhash_wide",
-        "dedup_exact_substring",
-        "dedup_embedding_lsh_wide",
-        "multimodal_resize",
-        "agg_hll_mergeable",
-        "agg_heavy_hitters",
-        "udaf_weighted_price",
-        "events_ewma",
-        "schema_evolution_read",
-        "table_incremental_feed",
-        "stream_merge_apply",
-        "table_bloom_probe",
-        "stream_interval_join_full",
-        "stream_static_enrich",
-        "geo_radius_join",
-        "q10_returned_items",
-        "q13_customer_distribution",
-        "q14_promo_revenue",
-        "q18_large_volume",
-        "q19_bracket_disjunction",
-        "q22_dormant_balance",
-        "q6_forecast_revenue",
-        "q7_volume_shipping",
-        "q8_market_share",
-        "q15_top_supplier",
-        "q17_small_quantity",
-        "json_variant_agg",
-        "profile_columns",
-        "validate_expectations",
-        "profile_drift_psi",
-        "map_funcs",
-        "agg_percentiles",
-        "join_asof",
-        "events_gapfill",
-        "window_range_frame",
-        "agg_skew_salted",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 6, plus this round's
-# new registrations — all need a fresh driver row:
-# * stream_tumbling_counts — rows-only → FULL oracle (bounded two-batch
-#   complete-mode replay);
-# * udaf_weighted_price — partial sums moved to decimal(38,0) + Python-int
-#   finals (the r5 ADVICE overflow fix; result must stay hash-identical);
-# * table_bloom_probe — _bloom_key canonicalization changed every bloom
-#   hash input (r5 ADVICE false-negative fix);
-# * dedup_embedding_lsh_adaptive / governance_quarantine_split /
-#   stream_running_totals_tws / multimodal_decode_png — new in r6 (never
-#   driver-checked);
-# * multimodal_decode / multimodal_resize — the shared decode operator now
-#   dispatches per payload on magic bytes (parse_image), so their decode
-#   path changed even though results must not.
-TOUCHED_R06: tuple[str, ...] = (
-    "stream_tumbling_counts",
-    "stream_running_totals_tws",
-    "dedup_embedding_lsh_adaptive",
-    "governance_quarantine_split",
-    "multimodal_decode_png",
-    "avro_scan",  # new in r6: dependency-free avrolite DataSource readback
-    "udaf_weighted_price",
-    "table_bloom_probe",
-    "multimodal_decode",
-    "multimodal_resize",
-)
-
-
-# CORRECTNESS_r06.json: the 50 queries the round-6 window checked (all
-# green — the first round with zero rows-only and zero err).
-DRIVER_CHECKED_R06: frozenset[str] = frozenset(
-    {
-        "agg_distinct",
-        "agg_stats",
-        "avro_scan",
-        "corpus_sample_per_lang",
-        "corpus_split_stats",
-        "cube_status_priority",
-        "dedup_embedding_lsh_adaptive",
-        "dedup_keep_rows",
-        "dedup_paragraph",
-        "events_funnel",
-        "governance_quarantine_split",
-        "grouped_map_centroids",
-        "grouping_sets",
-        "having_filter",
-        "join_range_binned",
-        "join_skewed_salted",
-        "merge_upsert",
-        "multimodal_bytes",
-        "multimodal_decode",
-        "multimodal_decode_png",
-        "multimodal_features",
-        "multimodal_frame_sample",
-        "multimodal_resize",
-        "null_semantics",
-        "pivot_priority_status",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_region_revenue",
-        "rollup_region_nation",
-        "sample_stratified",
-        "sessionize_events",
-        "set_ops_all",
-        "sim_ivf_topk_frozen",
-        "sim_pq_topk",
-        "stream_interval_join",
-        "stream_running_totals_tws",
-        "stream_tumbling_counts",
-        "stream_watermark_eviction",
-        "string_distance",
-        "table_bloom_probe",
-        "text_boilerplate_strip",
-        "text_fingerprint",
-        "text_repetition",
-        "text_tfidf_topk",
-        "text_unigram_logprob",
-        "udaf_weighted_price",
-        "unpivot_metrics",
-        "vector_normalize_quantize",
-        "window_sliding_events",
-        "window_tumbling_events",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 7, plus new
-# registrations — all need a fresh driver row:
-# * dedup_simhash_adaptive — NEW: corpus-count-derived pigeonhole key
-#   width (r6 VERDICT item 1);
-# * dedup_simhash / dedup_simhash_wide — the shared simhash_pairs
-#   operator gained the key_bits hook (output must be unchanged, which
-#   is exactly what a driver row proves);
-# * avro_scan — the avrolite reader was rewritten (streaming block
-#   iteration, spec-conformant union branch order, split index);
-# * udaf_weighted_price — sum_long all-NULL semantics fix (r6 ADVICE);
-# * multimodal_decode_png — fixture + oracle now MIX colour types
-#   2/3/6 (palette + RGBA support) and the filter reconstruction is
-#   numpy-vectorized;
-# * multimodal_decode / multimodal_bytes / multimodal_features —
-#   share the parse_image → parse_png path whose unfilter changed
-#   (results must not).
-TOUCHED_R07: tuple[str, ...] = (
-    "multimodal_decode_wav",  # NEW r7: real RIFF/WAVE PCM codec
-    "avro_sink_roundtrip",  # NEW r7: executor-parallel Avro WRITE sink
-    "stream_avro_scan",  # NEW r7: Avro landing zone as a micro-batch stream
-    "dedup_simhash_adaptive",
-    "dedup_simhash",
-    "dedup_simhash_wide",
-    "avro_scan",
-    "udaf_weighted_price",
-    "multimodal_decode_png",
-    "multimodal_decode",
-    "multimodal_bytes",
-    "multimodal_features",
-)
-
-
-# CORRECTNESS_r07.json: the 50 queries the round-7 window checked (all
-# green — rows+schema+hash, zero err). This fold cleared the r3-stale
-# join-primitive tier; the stalest surviving evidence is now the
-# 13-query round-4 tier (r7 VERDICT item 4), which the r8 rotation puts
-# at the head of the window right after this round's touched queries.
-DRIVER_CHECKED_R07: frozenset[str] = frozenset(
-    {
-        "avro_scan",
-        "avro_sink_roundtrip",
-        "cdc_snapshot_diff",
-        "corpus_mixture_sample",
-        "corpus_pack_sequences",
-        "dedup_embedding",
-        "dedup_embedding_lsh",
-        "dedup_exact",
-        "dedup_simhash",
-        "dedup_simhash_adaptive",
-        "dedup_simhash_wide",
-        "drone_features_flat",
-        "drone_features_multivideo",
-        "events_pattern_match",
-        "events_retention_cohorts",
-        "filter_in_between_like",
-        "geo_bearing_distance",
-        "join_anti",
-        "join_cross",
-        "join_full_outer",
-        "join_left_count",
-        "join_range_nonequi",
-        "join_semi",
-        "layout_zorder",
-        "multimodal_bytes",
-        "multimodal_decode",
-        "multimodal_decode_png",
-        "multimodal_decode_wav",
-        "multimodal_features",
-        "sample_importance",
-        "sample_reservoir_group",
-        "sim_ivf_topk",
-        "sim_topk_batch",
-        "sim_topk_bruteforce",
-        "sort_limit",
-        "stream_avro_scan",
-        "stream_dedup_exact",
-        "stream_drone_features_flat",
-        "stream_interval_join_outer",
-        "stream_running_totals",
-        "stream_session_counts",
-        "text_bigram_lm",
-        "text_gopher_quality",
-        "text_langid",
-        "text_langid_predict",
-        "text_quality",
-        "text_redact_pii",
-        "text_token_freq",
-        "udaf_weighted_price",
-        "udtf_sentences",
-    }
-)
-
-# Names RETIRED from the registry but still present in historical
-# DRIVER_CHECKED/TOUCHED bookkeeping (those sets are a record of what the
-# driver checked, not of what exists today):
-# * dedup_simhash — the fixed 16-bit teaching config, retired r8
-#   (r7 VERDICT item 6: the one sf1-incapable default path). Lives on in
-#   tests/test_plans.py::test_simhash_narrow_config.
-RETIRED: frozenset[str] = frozenset({"dedup_simhash"})
-
-# Queries whose Spark code OR oracle changed in round 8, plus new
-# registrations — all need a fresh driver row:
-# * table_pruned_read — NEW: min/max-stats file skipping through the
-#   manifest (r7 VERDICT item 1);
-# * avro_scan / avro_sink_roundtrip / stream_avro_scan — avrolite
-#   hardening: per-attempt tmp names, header varint validation, and
-#   timestamp-micros now hold TRUE epoch micros (naive = local wall
-#   time) with the reader mirroring (r7 ADVICE; results must not
-#   change on this UTC host — exactly what a driver row proves);
-# * multimodal_decode_wav — parse_wav now quarantines zeroed fmt
-#   fields (channels/rate < 1) as ValueError (r7 ADVICE medium).
-# * multimodal_decode_jpeg — NEW: dependency-free baseline JFIF decode
-#   with a bit-exact constant-block fixture (r7 VERDICT item 5);
-# * stream_interval_join — now horizon-PACED (half-month chunk files ×
-#   maxFilesPerTrigger=1; r7 VERDICT item 2) — output must be unchanged;
-# * text_boilerplate_strip / sample_importance — constant-factor rework
-#   (scoped-persist + folded aggregates; r7 VERDICT item 3) — hashes
-#   must be unchanged.
-# Round 9 head tier. NOTE: no CORRECTNESS_r08.json ever landed on disk, so
-# round 8's additions have no driver evidence at all — they stay in-window
-# automatically via the never-checked rule. This tuple is the r9 TOUCHED
-# set: the five NEW queries, plus the four image-decode queries whose
-# shared decode path changed this round (decode_image_features now emits
-# the order-sensitive row_moment column — outputs unchanged, but changed
-# code needs fresh driver evidence).
-TOUCHED_R09: tuple[str, ...] = (
-    "hierarchy_flatten",  # NEW r9: WITH RECURSIVE class via pointer doubling
-    "table_time_travel",  # NEW r9: VERSION AS OF snapshot read
-    "ml_ols_regression",  # NEW r9: closed-form OLS, exact-hash certified
-    "multimodal_decode_bmp",  # NEW r9: real BMP codec (both row orders)
-    "events_anomaly_mad",  # NEW r9: exact median/MAD outlier detection
-    "agg_exact_quantiles",  # NEW r9: rank-selected per-group quantiles
-    "sketch_theta_kmv",  # NEW r9: mergeable KMV distinct/intersection
-    "graph_triangle_count",  # NEW r9: oriented wedge-join triangles
-    "stream_sketch_kmv",  # NEW r9: incremental KMV merge vs batch oracle
-    "events_markov_transitions",  # NEW r9: transition-matrix estimation
-    "ml_pca_power_iteration",  # NEW r9: exact-integer PCA top component
-    "join_asof_tolerance",  # NEW r9: staleness-bounded as-of enrichment
-    "corpus_split_leakage_safe",  # NEW r9: cluster-level train/test split
-    "events_cusum_changepoint",  # NEW r9: CUSUM drift detector fold
-    "agg_exact_quantiles_binned",  # NEW r9: 3-pass selection twin
-    "table_rollback_read",  # NEW r9: forward-commit rollback recovery
-    "multimodal_decode",
-    "multimodal_decode_png",
-    "multimodal_decode_jpeg",
-    "multimodal_decode_gif",
-    # r9 GIF-LZW encoder fix (tail-emit width sync) also touches:
-    "multimodal_gif_frame_sample",
-)
-
-TOUCHED_R08: tuple[str, ...] = (
-    "table_pruned_read",
-    "table_incremental_agg",  # NEW r8: materialized-view maintenance
-    "join_bloom_prefiltered",  # NEW r8: engine-owned bloom-prefiltered join
-    "multimodal_decode_video",  # NEW r8: real MJPEG-in-AVI per-frame decode
-    "multimodal_video_frame_sample",  # NEW r8: strided decode-side sampling
-    "multimodal_decode_jpeg",
-    "stream_interval_join",
-    "text_boilerplate_strip",
-    "sample_importance",
-    "avro_scan",
-    "avro_sink_roundtrip",
-    "stream_avro_scan",
-    "multimodal_decode_wav",
-)
-
-# Round 9 DID land driver artifacts (CORRECTNESS_r09.json: 50/50 green) —
-# this is that file's exact key set, folded in per the r9 handoff. It
-# covers every TOUCHED_R08/TOUCHED_R09 name plus the late-r8 additions,
-# so after this fold the stalest surviving evidence is the 13-query
-# round-4 scalar/window/set-op/subquery tier (r9 VERDICT item 1), which
-# the r10 rotation puts right after the r10-touched head.
-DRIVER_CHECKED_R09: frozenset[str] = frozenset(
-    {
-        "agg_exact_quantiles",
-        "agg_exact_quantiles_binned",
-        "avro_scan",
-        "avro_sink_roundtrip",
-        "basket_pair_counts",
-        "corpus_split_leakage_safe",
-        "dedup_editdistance",
-        "dedup_editdistance_k2",
-        "events_anomaly_mad",
-        "events_cusum_changepoint",
-        "events_markov_transitions",
-        "graph_pagerank",
-        "graph_triangle_count",
-        "hierarchy_flatten",
-        "join_asof_tolerance",
-        "join_bloom_prefiltered",
-        "ml_ols_regression",
-        "ml_pca_power_iteration",
-        "multimodal_decode",
-        "multimodal_decode_bmp",
-        "multimodal_decode_gif",
-        "multimodal_decode_jpeg",
-        "multimodal_decode_png",
-        "multimodal_decode_ulaw",
-        "multimodal_decode_video",
-        "multimodal_decode_wav",
-        "multimodal_gif_frame_sample",
-        "multimodal_video_frame_sample",
-        "q11_important_stock",
-        "q12_line_class_priority",
-        "q16_supplier_part_counts",
-        "q20_concentrated_suppliers",
-        "q21_waiting_suppliers",
-        "q2_min_cost_supplier",
-        "q4_order_priority",
-        "q9_product_profit",
-        "sample_importance",
-        "scd2_point_in_time",
-        "sketch_theta_kmv",
-        "stream_avro_scan",
-        "stream_interval_join",
-        "stream_scd2_apply",
-        "stream_sketch_kmv",
-        "table_incremental_agg",
-        "table_pruned_read",
-        "table_rollback_read",
-        "table_time_travel",
-        "text_boilerplate_strip",
-        "unpivot_priority_status",
-        "window_distribution_funcs",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 10, plus new
-# registrations. CORRECTION (r11, per r10 VERDICT "What's wrong" #1):
-# round 10 actually landed only the four NEW queries below; the seven
-# rework annotations this tuple used to carry (binned MAD median,
-# boilerplate pre-filter, sample_importance staging, private-session
-# iterative loops) described PLANNED work that was not in the code —
-# those reworks landed in round 11 and live in TOUCHED_R11 where their
-# fresh driver evidence belongs. The extra r10 names are kept (commented)
-# only as a record of what the r10 driver window checked; the r10 rows
-# for them certified UNCHANGED code.
-TOUCHED_R10: tuple[str, ...] = (
-    "csv_scan",  # NEW r10: CSV scan with explicit schema + oracle row
-    "orc_scan",  # NEW r10: ORC roundtrip scan + oracle row
-    "multimodal_decode_tiff",  # NEW r10: uncompressed/PackBits TIFF codec
-    "dedup_simhash_adaptive_capped",  # NEW r10: per-bucket pair-emission cap
-    # events_anomaly_mad / text_boilerplate_strip / sample_importance /
-    # graph_pagerank / hierarchy_flatten / dedup_cluster_stats /
-    # corpus_split_leakage_safe were checked in the r10 window but NOT
-    # changed in r10 — their reworks are TOUCHED_R11.
-)
-
-# Round 10 DID land driver artifacts (CORRECTNESS_r10.json: 50/50 green)
-# — this is that file's exact key set, folded per the r10 handoff. It
-# covers every TOUCHED_R10 name, the full 13-query r4-stale tier, and
-# the r10 rotation slice of the r5/r6 tiers; after this fold the stalest
-# surviving evidence is the 18-query r5 tier, then the r6 tier.
-DRIVER_CHECKED_R10: frozenset[str] = frozenset(
-    {
-        "agg_approx_distinct",
-        "agg_heavy_hitters",
-        "agg_hll_mergeable",
-        "array_funcs",
-        "case_bucketing",
-        "corpus_chunking",
-        "corpus_contamination",
-        "corpus_prepare_pipeline",
-        "corpus_split_leakage_safe",
-        "csv_scan",
-        "date_funcs",
-        "dedup_cluster_stats",
-        "dedup_embedding_lsh_wide",
-        "dedup_exact_substring",
-        "dedup_incremental",
-        "dedup_minhash",
-        "dedup_ngram_jaccard",
-        "dedup_semantic",
-        "dedup_simhash_adaptive_capped",
-        "events_anomaly_mad",
-        "events_ewma",
-        "geo_radius_join",
-        "graph_pagerank",
-        "hierarchy_flatten",
-        "json_funcs",
-        "math_funcs",
-        "multimodal_decode_tiff",
-        "orc_scan",
-        "q10_returned_items",
-        "q13_customer_distribution",
-        "q14_promo_revenue",
-        "q18_large_volume",
-        "sample_importance",
-        "schema_evolution_read",
-        "set_ops",
-        "sim_kmeans_ivf_topk",
-        "stream_interval_join_full",
-        "stream_merge_apply",
-        "stream_static_enrich",
-        "string_funcs",
-        "subquery_exists_notin",
-        "subquery_scalar_correlated",
-        "table_incremental_feed",
-        "text_boilerplate_strip",
-        "text_html_strip",
-        "text_winnowing",
-        "window_lag_lead",
-        "window_rank_navigation",
-        "window_running_sum",
-        "window_topk_per_group",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 11, plus new
-# registrations — all need a fresh driver row. Populated as r11 work
-# lands; ordering within the tuple is the order the driver checks them.
-TOUCHED_R11: tuple[str, ...] = (
-    "xml_scan",  # NEW r11: native Spark-4 XML roundtrip scan + oracle row
-    "multimodal_decode_adpcm",  # NEW r11: IMA ADPCM expansion, CTE oracle
-    "multimodal_decode_tiff",  # r11: LZW + Deflate + predictor-2 tiers
-    # (fixture variant cycle 4 → 6, oracle variant math updated in step)
-    "events_anomaly_mad",  # r11: deviation median → binned 3-pass selection
-    "text_boilerplate_strip",  # r11: clean-docs bypass of the rebuild agg
-    "sample_importance",  # r11: bucket LR table collected, scoring join-free
-    "dedup_paragraph",  # r11: no-duplicate-paragraph docs bypass the window
-    "graph_pagerank",  # r11: iterative loop on a private session (conf scoped)
-    "hierarchy_flatten",  # r11: same private-session loop scope
-    "dedup_cluster_stats",  # r11: connected components on private session
-    "corpus_split_leakage_safe",  # r11: same CC path
-)
-
-# Round 11 landed driver artifacts (CORRECTNESS_r11.json: 50/50 green) —
-# this is that file's exact key set, folded per the r11 handoff. It
-# covers every TOUCHED_R11 name plus the full 18-query r5-stale tier and
-# a slice of the r6 tier; after this fold the stalest surviving evidence
-# is the 20-query r6 tier (agg_distinct … unpivot_metrics), which the
-# r12 rotation puts right after the r12-touched head.
-DRIVER_CHECKED_R11: frozenset[str] = frozenset(
-    {
-        "agg_approx_percentile",
-        "agg_percentiles",
-        "agg_skew_salted",
-        "corpus_sample_per_lang",
-        "corpus_split_leakage_safe",
-        "corpus_split_stats",
-        "dedup_cluster_stats",
-        "dedup_embedding_lsh_adaptive",
-        "dedup_keep_rows",
-        "dedup_paragraph",
-        "events_anomaly_mad",
-        "events_funnel",
-        "events_gapfill",
-        "graph_pagerank",
-        "grouped_map_centroids",
-        "hierarchy_flatten",
-        "join_asof",
-        "json_variant_agg",
-        "map_funcs",
-        "merge_upsert",
-        "multimodal_decode_adpcm",
-        "multimodal_decode_tiff",
-        "multimodal_frame_sample",
-        "multimodal_resize",
-        "profile_columns",
-        "profile_drift_psi",
-        "q15_top_supplier",
-        "q17_small_quantity",
-        "q19_bracket_disjunction",
-        "q22_dormant_balance",
-        "q6_forecast_revenue",
-        "q7_volume_shipping",
-        "q8_market_share",
-        "sample_importance",
-        "sample_stratified",
-        "sessionize_events",
-        "sim_ivf_topk_frozen",
-        "stream_tumbling_counts",
-        "stream_watermark_eviction",
-        "text_boilerplate_strip",
-        "text_fingerprint",
-        "text_repetition",
-        "text_tfidf_topk",
-        "text_unigram_logprob",
-        "validate_expectations",
-        "vector_normalize_quantize",
-        "window_range_frame",
-        "window_sliding_events",
-        "window_tumbling_events",
-        "xml_scan",
-    }
-)
-
-# The round-12 driver window (CORRECTNESS_r12.json — the exact 50-key
-# artifact set, all green): every TOUCHED_R12 name plus the 24
-# stalest-tier fills the r12 rotation mandated.
-DRIVER_CHECKED_R12: frozenset[str] = frozenset(
-    {
-        "agg_distinct", "agg_stats", "arrowipc_scan",
-        "arrowipc_sink_roundtrip", "corpus_contamination",
-        "corpus_domain_budget", "corpus_pack_sequences",
-        "corpus_prepare_pipeline", "corpus_split_leakage_safe",
-        "cube_status_priority", "dedup_cluster_stats", "dedup_exact",
-        "dedup_exact_substring", "dedup_incremental", "dedup_keep_best",
-        "dedup_keep_rows", "dedup_minhash", "dedup_ngram_jaccard",
-        "dedup_paragraph", "dedup_simhash_adaptive", "dedup_simhash_wide",
-        "dedup_url", "governance_quarantine_split", "graph_pagerank",
-        "graph_sssp", "grouping_sets", "having_filter",
-        "hierarchy_flatten", "join_range_binned", "join_skewed_salted",
-        "ml_logistic_irls", "multimodal_decode_msadpcm",
-        "multimodal_decode_tiff", "null_semantics",
-        "pivot_priority_status", "q1_pricing_summary",
-        "q3_shipping_priority", "q5_region_revenue",
-        "rollup_region_nation", "sample_importance", "set_ops_all",
-        "sim_pq_topk", "stream_arrowipc_scan", "stream_running_totals_tws",
-        "string_distance", "table_bloom_probe", "text_boilerplate_strip",
-        "text_c4_filters", "text_winnowing", "unpivot_metrics",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 12, plus new
-# registrations — all need a fresh driver row. Populated as r12 work
-# lands; ordering within the tuple is the order the driver checks them.
-TOUCHED_R12: tuple[str, ...] = (
-    "dedup_paragraph",  # r12: NULL-text coalesce in the clean-doc bypass
-    "text_boilerplate_strip",  # r12: same NULL-text coalesce (ADVICE r11)
-    "sample_importance",  # r12: zero-token docs excluded before scoring
-    "corpus_domain_budget",  # NEW r12: FineWeb-style per-domain token caps
-    "multimodal_decode_msadpcm",  # NEW r12: MS ADPCM (format 2), CTE oracle
-    "dedup_keep_best",  # NEW r12: quality-argmax cluster keep rule
-    "dedup_url",  # NEW r12: canonical-URL crawl dedup (FineWeb stage 1)
-    "text_c4_filters",  # NEW r12: C4 page/line cleaning rules
-    "arrowipc_scan",  # NEW r12: Arrow IPC / Feather V2 Python DataSource
-    "stream_arrowipc_scan",  # NEW r12: the landing as a micro-batch stream
-    "arrowipc_sink_roundtrip",  # NEW r12: mapInArrow executor-parallel sink
-    "graph_sssp",  # NEW r12: fixed-round Bellman-Ford, unrolled-CTE oracle
-    "ml_logistic_irls",  # NEW r12: iterative logistic fit, unrolled IRLS
-    "multimodal_decode_tiff",  # r12: palette tier (fixture cycle 7 -> 8,
-    # oracle variant math updated in step)
-    "graph_pagerank",  # r12: pinned-adjacency loop (AQE-off private session,
-    # explicit repartition, SHJ rounds) — slope 5.78 -> 2.11 (final r12
-    # BENCH_sf1 measurement; an interim 2.46 reading predated the
-    # node-side contribution change)
-    "hierarchy_flatten",  # r12: same AQE-off private-session change
-    "dedup_cluster_stats",  # r12: same (connected components loop) + the
-    # zip_with shingle rework below (its LSH pair input)
-    "corpus_split_leakage_safe",  # r12: same CC path + shingle rework
-    # r12 shingle/winnow rework (zip_with chains replace the per-element
-    # slice+join / array_min(slice) interpreted lambdas — output strings
-    # bit-identical, ~2x on the 10x fixture): every query whose plan
-    # embeds shingle_hashes_from_tokens / winnow_from_hashes.
-    "text_winnowing",
-    "dedup_minhash",
-    "dedup_incremental",
-    "dedup_ngram_jaccard",
-    "dedup_exact_substring",
-    "corpus_contamination",
-    "dedup_keep_rows",
-    "corpus_prepare_pipeline",
-)
-
-# Queries whose Spark code OR oracle changed in round 13, plus new
-# registrations — all need a fresh driver row. Populated as r13 work
-# lands; ordering within the tuple is the order the driver checks them.
-TOUCHED_R13: tuple[str, ...] = (
-    "dedup_url",  # r13: integer DIV block key (ADVICE r12), oracle parity
-    "arrowipc_scan",  # r13: naive timestamps now read as timestamp_ntz
-    "stream_arrowipc_scan",  # r13: same ntz mapping (shared DDL path)
-    "arrowipc_sink_roundtrip",  # r13: same ntz mapping
-    "dedup_simhash_adaptive",  # r13: exact integer pair_budget count
-    "dedup_simhash_adaptive_capped",  # r13: same guard path
-    "text_bpe_tokenize",  # NEW r13: frozen-merges BPE encoder
-    "corpus_pack_sequences_bpe",  # NEW r13: packing in real BPE tokens
-    "graph_sssp",  # r13: delta (frontier) relaxation — 7.88 -> 4.38 s
-    # quiet at sf0.1, hash unchanged (same synchronous-BF relation)
-    "multimodal_decode_flac",  # NEW r13: lossless FLAC codec tier
-    "stream_minhash_index",  # NEW r13: incremental LSH-index appends
-    "multimodal_gif_frame_sample",  # r13: partial-rect disposal
-    # compositing — fixture now sub-rect rows + transparency + disposal
-    # 1/2; quarantine narrowed to disposal 3 only
-    "text_bpe_train",  # NEW r13: in-engine BPE training (learned merges)
-    "multimodal_decode_tiff",  # r13: PLANAR tier (fixture cycle 8 -> 9)
-    "multimodal_decode_flac",  # r13 (again): stereo decorrelation modes
-    "multimodal_decode_jpeg_progressive",  # NEW r13: SOF2 six-scan tier
-    "multimodal_decode_jpeg",  # r13: decoder restructured to
-    # coefficient-accumulation scans (baseline path byte-compatible)
-    "multimodal_decode_bmp",  # r13: BI_RLE8 tier (fixture cycle 3 -> 4);
-    # r13 late: BITFIELDS-565/32-bit/RLE4 tiers (cycle 4 -> 7)
-    "multimodal_decode_flac",  # r13 (3rd): 8/24-bit depth tiers
-    "multimodal_decode_tiff",  # r13 late: JPEG-in-TIFF + planar tiled
-    # (fixture cycle 9 -> 11)
-    "multimodal_decode_adpcm",  # r13 late: quad-channel tier (ch cycle
-    # mono/stereo -> mono/stereo/quad)
-    "multimodal_decode_jpeg_lossless",  # NEW r13 late: SOF3 predictive
-    # tier — all seven predictors on arbitrary content; then 8/12/16-bit
-    # precision cycle
-    "multimodal_decode_jpeg",  # r13 late (again): 12-bit SOF1 tier
-    # folded into the fixture cycle (same oracle by construction)
-    "multimodal_decode_jpeg_arithmetic",  # NEW r13 late: SOF9 QM-coder
-    # tier, cross-pinned byte-for-byte against the system libjpeg
-    "events_holt_trend",  # NEW r13 late: Holt linear-trend smoothing,
-    # the two-variable packed-BIGINT ordered fold (CUSUM's sibling)
-    "graph_label_communities",  # NEW r13 late: synchronous label-
-    # propagation communities on the pinned-adjacency discipline
-    "multimodal_decode_jpeg_arith_progressive",  # NEW r13 late: SOF10
-    # Annex G scan kinds under the QM coder, libjpeg cross-pinned
-    "text_nfc_normalize",  # NEW r13 late: Unicode NFC corpus-prep pass,
-    # cross-implementation-pinned (python unicodedata vs DuckDB)
-    "stream_holt_trend",  # NEW r13 late: incremental Holt state
-    # maintenance — the ordered fold migrates, 4-chunk == batch
-    "table_zero_copy_clone",  # NEW r13 late: shallow CLONE + isolation
-    "dedup_nfc_exact",  # NEW r13 late: NFC-aware exact dedup (the
-    # seeded byte-distinct NFC-equal twins must collide)
-    "corpus_sample_temperature",  # NEW r13 late: T=2 language
-    # rebalancing — sqrt-only rates, IEEE-exact cross-engine
-)
-
-# The round-13 driver window (CORRECTNESS_r13.json — the exact 50-key
-# artifact set, all green): every TOUCHED_R13 name plus stalest-tier
-# fills per the r13 rotation mandate.
-DRIVER_CHECKED_R13: frozenset[str] = frozenset(
-    {
-        "arrowipc_scan", "arrowipc_sink_roundtrip", "cdc_snapshot_diff",
-        "corpus_mixture_sample", "corpus_pack_sequences_bpe",
-        "corpus_sample_temperature", "dedup_embedding",
-        "dedup_embedding_lsh", "dedup_nfc_exact", "dedup_simhash_adaptive",
-        "dedup_simhash_adaptive_capped", "dedup_url", "events_holt_trend",
-        "events_pattern_match", "graph_label_communities", "graph_sssp",
-        "layout_zorder", "multimodal_bytes", "multimodal_decode_adpcm",
-        "multimodal_decode_bmp", "multimodal_decode_flac",
-        "multimodal_decode_jpeg", "multimodal_decode_jpeg_arith_progressive",
-        "multimodal_decode_jpeg_arithmetic", "multimodal_decode_jpeg_lossless",
-        "multimodal_decode_jpeg_progressive", "multimodal_decode_tiff",
-        "multimodal_features", "multimodal_gif_frame_sample",
-        "sample_reservoir_group", "sim_ivf_topk", "sim_topk_batch",
-        "sim_topk_bruteforce", "stream_arrowipc_scan", "stream_holt_trend",
-        "stream_minhash_index", "stream_session_counts",
-        "table_zero_copy_clone", "text_bigram_lm", "text_bpe_tokenize",
-        "text_bpe_train", "text_gopher_quality", "text_langid",
-        "text_langid_predict", "text_nfc_normalize", "text_quality",
-        "text_redact_pii", "text_token_freq", "udaf_weighted_price",
-        "udtf_sentences",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 14, plus new
-# registrations — all need a fresh driver row. Populated as r14 work
-# lands; ordering within the tuple is the order the driver checks them.
-TOUCHED_R14: tuple[str, ...] = (
-    "text_bpe_train_sampled",  # NEW r14: sampled pair-delta BPE trainer
-    # (r13 VERDICT item 1) — word-frequency collapse + delta-maintained
-    # pair counts, 64 merges on a deterministic 20% sample
-    "corpus_domain_budget_bpe",  # NEW r14: domain caps in tokenizer
-    # tokens (r13 VERDICT item 2) — whitespace original kept as screen
-    "text_gopher_quality_bpe",  # NEW r14: Gopher stats + BPE fertility
-    # gate (tokens/word ppm) — the quality signal word rules can't see
-    "multimodal_decode_flac",  # r14: 32-bit tier (RFC 9639 code point,
-    # the last fixed depth) — fixture depth cycle 3 -> 4
-    "multimodal_decode_bmp",  # r14: 1-bit palette tier (MSB-first
-    # bit-packed rows, the last palette layout) + V4/V5 header tiers
-    # (identity color spaces; masks inside the header) — fixture cycle
-    # 7 -> 8 -> 10
-    "q18_large_volume",  # r14: single-lineitem-scan rework (the HAVING
-    # agg already computes the output sum) — hash unchanged, slope cut
-    "text_bpe_train_apply",  # NEW r14: end-to-end train-on-sample then
-    # tokenize-the-corpus composition, the production tokenizer pipeline
-    "corpus_quality_ensemble",  # NEW r14: gopher AND c4 AND fertility
-    # AND language whitelist as ONE certified conjunction, one scan
-    "stream_domain_budget_cutoff",  # NEW r14: streaming prefix-cutoff
-    # domain capping — one int64 state per domain, cumsum-window oracle
-    "sim_graph_topk",  # NEW r14: graph ANN (HNSW family) — LSH-built
-    # kNN graph + IVF-routed fixed-hop beam search, integer-exact
-    "dedup_semantic",  # r14: frozen k=64 codebook RETRAINED on the
-    # regenerated fixture (freeze_artifacts) — literals changed in both
-    # engines, results change, fresh driver row needed
-    "sim_ivf_topk_frozen",  # r14: same refreeze (k=8 codebook)
-    "sim_pq_topk",  # r14: same refreeze (PQ codebooks)
-    "table_partition_evolution_read",  # NEW r14: two physical layouts,
-    # one logical table — month predicate prunes across both epochs
-)
-
-# The exact CORRECTNESS_r14 key set (50 rows, all green): every
-# TOUCHED_R14 name plus stalest-tier fills per the r14 rotation mandate.
-DRIVER_CHECKED_R14: frozenset[str] = frozenset(
-    {
-        "agg_exact_quantiles", "agg_exact_quantiles_binned",
-        "corpus_domain_budget_bpe", "corpus_quality_ensemble",
-        "dedup_editdistance", "dedup_editdistance_k2", "dedup_semantic",
-        "drone_features_flat", "drone_features_multivideo",
-        "events_cusum_changepoint", "events_markov_transitions",
-        "events_retention_cohorts", "filter_in_between_like",
-        "geo_bearing_distance", "graph_triangle_count", "join_anti",
-        "join_cross", "join_full_outer", "join_left_count",
-        "join_range_nonequi", "join_semi", "ml_ols_regression",
-        "ml_pca_power_iteration", "multimodal_decode",
-        "multimodal_decode_bmp", "multimodal_decode_flac",
-        "multimodal_decode_gif", "multimodal_decode_png",
-        "multimodal_decode_ulaw", "multimodal_decode_video",
-        "multimodal_decode_wav", "multimodal_video_frame_sample",
-        "q18_large_volume", "scd2_point_in_time", "sim_graph_topk",
-        "sim_ivf_topk_frozen", "sim_pq_topk", "sketch_theta_kmv",
-        "sort_limit", "stream_dedup_exact", "stream_domain_budget_cutoff",
-        "stream_drone_features_flat", "stream_interval_join",
-        "stream_interval_join_outer", "stream_running_totals",
-        "stream_sketch_kmv", "table_partition_evolution_read",
-        "text_bpe_train_apply", "text_bpe_train_sampled",
-        "text_gopher_quality_bpe",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 15, plus new
-# registrations — all need a fresh driver row. Populated as r15 work
-# lands; ordering within the tuple is the order the driver checks them.
-TOUCHED_R15: tuple[str, ...] = (
-    "text_bpe_train_batched",  # NEW r15: vocab-scale trainer config
-    # (r14 VERDICT item 2) — greedy token-disjoint frontier batches,
-    # per-merge driver round trips amortized ~1/|batch|
-    "stream_domain_budget_cutoff",  # r15: explicit strictly-increasing
-    # feed-chunk mtimes (ADVICE) — replay order now deterministic on
-    # coarse-mtime filesystems; plan unchanged, hash unchanged
-    "table_layout_migration_read",  # NEW r15: partition-evolution WRITE
-    # path (r14 VERDICT item 4) — migrate_layout rewrites the coarse
-    # epoch under the finer spec, time travel preserved
-    "stream_ivf_index",  # NEW r15: incremental ANN-index maintenance
-    # (r14 VERDICT item 3) — per-batch frozen-codebook assignment
-    # appended exactly-once; oracle = the batch-built assignment
-    "dedup_embedding_lsh_capped",  # NEW r15: hot-bucket budget guard
-    # (r14 VERDICT item 5) — Σ min(|b|, cap)² candidate space
-    "sim_graph_topk_capped",  # NEW r15: the same guard on the kNN-graph
-    # build; search unchanged
-    "sim_graph_topk",  # r15: body refactored into _graph_topk_from
-    # (corpus-parameterized for the clustered-recall regime) — plan and
-    # hash unchanged, fresh row to certify the refactor
-    "dedup_embedding_lsh",  # r15: sign_band_relation gained bucket_cap
-    # (default None) + divisibility guard — plan unchanged, fresh row
-    "stream_graph_index",  # NEW r15: incremental kNN-graph maintenance
-    # (HNSW-style insert as LSM appends) — oracle = batch-built graph
-    "sim_ivf_topk_served",  # NEW r15: top-k served FROM the maintained
-    # index table — shares sim_ivf_topk_frozen's oracle verbatim (the
-    # mergeability proof made end-to-end)
-    "sim_ivf_topk_frozen",  # r15: oracle extracted to a shared constant
-    # (byte-identical text) — fresh row certifies the refactor
-)
-
-
-# The exact CORRECTNESS_r15 key set (50 rows, all green): every
-# TOUCHED_R15 name plus stalest-tier fills per the r15 rotation mandate.
-DRIVER_CHECKED_R15: frozenset[str] = frozenset(
-    {
-        "agg_approx_distinct", "agg_heavy_hitters", "agg_hll_mergeable",
-        "avro_scan", "avro_sink_roundtrip", "basket_pair_counts",
-        "corpus_chunking", "dedup_embedding_lsh",
-        "dedup_embedding_lsh_capped", "dedup_embedding_lsh_wide",
-        "events_ewma", "geo_radius_join", "join_asof_tolerance",
-        "join_bloom_prefiltered", "q10_returned_items",
-        "q11_important_stock", "q12_line_class_priority",
-        "q13_customer_distribution", "q14_promo_revenue",
-        "q16_supplier_part_counts", "q20_concentrated_suppliers",
-        "q21_waiting_suppliers", "q2_min_cost_supplier",
-        "q4_order_priority", "q9_product_profit", "schema_evolution_read",
-        "set_ops", "sim_graph_topk", "sim_graph_topk_capped",
-        "sim_ivf_topk_frozen", "sim_ivf_topk_served",
-        "sim_kmeans_ivf_topk", "stream_avro_scan",
-        "stream_domain_budget_cutoff", "stream_graph_index",
-        "stream_interval_join_full", "stream_ivf_index",
-        "stream_merge_apply", "stream_scd2_apply", "stream_static_enrich",
-        "table_incremental_agg", "table_incremental_feed",
-        "table_layout_migration_read", "table_pruned_read",
-        "table_rollback_read", "table_time_travel",
-        "text_bpe_train_batched", "text_html_strip",
-        "unpivot_priority_status", "window_distribution_funcs",
-    }
-)
-
-# Queries whose Spark code OR oracle changed in round 16, plus new
-# registrations — all need a fresh driver row. Populated as r16 work
-# lands; ordering within the tuple is the order the driver checks them.
-TOUCHED_R16: tuple[str, ...] = (
-    "dedup_embedding_lsh_adaptive_capped",  # NEW r16: the deployment
-    # default — log2(n) adaptive band width COMPOSED with the hot-bucket
-    # cap (r15 VERDICT item 1)
-    "dedup_embedding_lsh_capped",  # r16: ORACLE CHANGED — the cap is now
-    # a two-pass count + Lehmer-coin admission (no per-bucket sort); the
-    # QUALIFY twin carries the same int64 coin (r15 VERDICT item 2)
-    "sim_graph_topk_capped",  # r16: same oracle change (shared
-    # _bucket_cap_qualify)
-    "sim_graph_topk_served",  # NEW r16: beam search served FROM the
-    # maintained graph tables, sim_graph_topk's oracle verbatim (r15
-    # VERDICT item 3)
-    "stream_migrate_apply",  # NEW r16: layout migration under a live
-    # foreachBatch writer — table_layout_migration_read's oracle
-    # verbatim, chop-invariant (r15 VERDICT item 8)
-    "table_layout_migration_read",  # r16: commit() now validates
-    # _replace_files liveness against the actual parent (ADVICE) —
-    # clean-path behavior unchanged, fresh row certifies it
-    "sim_graph_topk",  # r16: search half factored into
-    # _graph_search_over — plan and hash unchanged, fresh row certifies
-    "dedup_embedding_lsh_adaptive",  # r16: body refactored into
-    # _lsh_adaptive_impl (cap-parameterized) — hash unchanged
-    "sim_ivf_topk_served",  # r16: inline probe-cell copy replaced by the
-    # shared similarity.probe_cells helper (ADVICE) — hash unchanged
-    "sim_ivf_topk",  # r16: ivf_topk_cosine nprobe branch now calls
-    # probe_cells — hash unchanged
-    "sim_kmeans_ivf_topk",  # r16: same ivf_topk_cosine refactor
-    "sim_ivf_topk_frozen",  # r16: same ivf_topk_cosine refactor
-    "text_bpe_train_batched",  # r16: trainer init shared with the delta
-    # trainer via _init_training_state (ADVICE) — hash unchanged
-    "text_bpe_train_sampled",  # r16: same shared-init refactor
-    "stream_signlsh_index",  # NEW r16: incremental sign-LSH band-index
-    # maintenance — the stream_minhash_index pattern on the hyperplane
-    # family; oracle = the batch band relation (pure-map mergeability)
-    "dedup_embedding_lsh_served",  # NEW r16: pairs served FROM the
-    # maintained band table — dedup_embedding_lsh's oracle verbatim,
-    # the maintain->serve closure for the pair emitter
-)
-
-
-def _ordered_specs() -> list[QuerySpec]:
-    """Registration order within tiers, stalest driver evidence first —
-    except queries TOUCHED this round, which lead outright (fresh evidence
-    about old code is still stale evidence). Every registered query has at
-    least one green driver row, so the order is: TOUCHED_R16, then any
-    never-checked stragglers (new r16 names not in TOUCHED_R16 — should be
-    none), then by newest-evidence round ascending — the stalest tier
-    (post-r15: the r10-newest block — the 14 relational/window/scan names
-    the r15 judge re-verified by hand) first, round-15 (freshest) last.
-    The r15 VERDICT mandate for r16 (item 5): TOUCHED_R16 head, then the
-    r10 tier, then r11 fills (tools/staleness.py prints the live ranking)."""
-
-    head = {n: i for i, n in enumerate(TOUCHED_R16)}
-
-    # Newest round in which each name earned a driver row, oldest-first
-    # search order below relies on checking the NEWEST sets first.
-    newest_first: tuple[tuple[int, frozenset[str]], ...] = (
-        (15, DRIVER_CHECKED_R15),
-        (14, DRIVER_CHECKED_R14),
-        (13, DRIVER_CHECKED_R13),
-        (12, DRIVER_CHECKED_R12),
-        (11, DRIVER_CHECKED_R11),
-        (10, DRIVER_CHECKED_R10),
-        (9, DRIVER_CHECKED_R09),
-        (7, DRIVER_CHECKED_R07),
-        (6, DRIVER_CHECKED_R06),
-        (5, DRIVER_CHECKED_R05),
-        (4, DRIVER_CHECKED_R04),
-        (3, DRIVER_CHECKED_R03),
-        (2, DRIVER_CHECKED_R02),
-        (1, DRIVER_CHECKED_R01),
-    )
-
-    def tier(s: QuerySpec) -> tuple[int, int]:
-        if s.name in head:
-            return (0, head[s.name])
-        for rnd, names in newest_first:
-            if s.name in names:
-                # staleness rank: newest-evidence round ascending, so
-                # r7-newest (rank 8) sorts before r13-newest (rank 14);
-                # +1 keeps every checked tier after the never-checked slot.
-                return (1 + rnd, 0)
-        return (1, 0)  # never-checked: right after the r15 touched head
-
-    specs = list(REGISTRY.values())
-    return sorted(specs, key=tier)  # sorted() is stable → registration order kept
-
-
 def all_queries() -> dict[str, QueryFn]:
     _load()
-    return {s.name: s.fn for s in _ordered_specs()}
+    return {n: s.fn for n, s in REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
     _load()
-    return {s.name: s.oracle for s in _ordered_specs() if s.oracle is not None}
+    return {n: s.oracle for n, s in REGISTRY.items() if s.oracle is not None}
 
 
 def get(name: str) -> QuerySpec:

@@ -3200,15 +3200,33 @@ def test_bmp_v4_v5_headers_roundtrip_and_icc_quarantines():
         parse_bmp(bytes(v5))
 
 
+def _wav_with_empty_data(wav: bytes, fact: int) -> bytes:
+    """``wav`` with its data chunk emptied and its fact count set."""
+    import struct
+
+    out, pos = bytearray(), 12
+    while pos < len(wav):
+        cid = wav[pos : pos + 4]
+        n = struct.unpack_from("<I", wav, pos + 4)[0]
+        body = wav[pos + 8 : pos + 8 + n]
+        if cid == b"fact":
+            body = struct.pack("<I", fact)
+        elif cid == b"data":
+            body = b""
+        out += cid + struct.pack("<I", len(body)) + body + b"\0" * (len(body) & 1)
+        pos += 8 + n + (n & 1)
+    return b"RIFF" + struct.pack("<I", 4 + len(out)) + b"WAVE" + bytes(out)
+
+
 def test_adpcm_batch_decode_matches_scalar_reference():
     """r17: the Arrow operators decode ADPCM through ONE transposed
     numpy walk across every (payload, block, channel) lane in the batch
     (guide §4.2); parse_wav stays the arbitrary-precision scalar
     reference. The batch twin must be bit-identical on the full fixture
-    sweep (IMA mono/stereo/quad, MS mono/stereo), route non-ADPCM
-    payloads to None, carry the scalar path's exact quarantine errors,
-    and fall back to the scalar path when MS delta leaves the
-    provably-int64-exact window."""
+    sweep (IMA mono/stereo/quad, MS mono/stereo) and on empty data
+    chunks, route non-ADPCM payloads to None, carry the scalar path's
+    exact quarantine errors, and fall back to the scalar path when MS
+    delta leaves the provably-int64-exact window."""
     import numpy as np
     from etl_drone_sense_spark.operators.multimodal import (
         decode_wav_adpcm_batch,
@@ -3255,6 +3273,10 @@ def test_adpcm_batch_decode_matches_scalar_reference():
     # detect it and defer to the scalar reference, not wrap in int64
     payloads.append(encode_wav_msadpcm(
         8000, 0, 32000, 100, -100, bytes([8] * 200)))
+    # an empty data chunk decodes to zero frames (fact 0), IMA and MS
+    ima1 = encode_wav_adpcm(8000, 5, 3, bytes([1, 2, 3, 4]))
+    ms1 = encode_wav_msadpcm(8000, 0, 32, 100, -100, bytes([1, 2, 3, 4]))
+    payloads += [_wav_with_empty_data(ima1, 0), _wav_with_empty_data(ms1, 0)]
     got = decode_wav_adpcm_batch(payloads)
     for g, p in zip(got, payloads):
         r, c, s = parse_wav(p)
@@ -3272,15 +3294,31 @@ def test_adpcm_batch_decode_matches_scalar_reference():
         b"OggS" + good[4:],
         good[: len(good) - 3],
         b"",
+        # empty data chunk whose fact chunk still claims frames
+        _wav_with_empty_data(ima1, 5),
+        _wav_with_empty_data(ms1, 5),
     ]
     res = decode_wav_adpcm_batch(others)
     assert res[0] is None and res[1] is None and res[2] is None
-    for i in (3, 4, 5):
+    for i in (3, 4, 5, 6, 7):
         assert isinstance(res[i], ValueError)
         try:
             parse_wav(others[i])
         except ValueError as e:
             assert str(res[i]) == str(e)
+
+    # a batch whose only MS payload has no data lanes: the overflow
+    # check must not take down the whole batch
+    for fact in (0, 5):
+        lone = _wav_with_empty_data(ms1, fact)
+        (res,) = decode_wav_adpcm_batch([lone])
+        try:
+            r, c, s = parse_wav(lone)
+        except ValueError as e:
+            assert isinstance(res, ValueError) and str(res) == str(e)
+        else:
+            assert res[:2] == (r, c) and np.array_equal(res[2], s)
+            assert res[2].dtype == s.dtype
 
 
 def test_flac_vectorized_paths_match_scalar_reference():

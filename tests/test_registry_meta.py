@@ -1,9 +1,13 @@
-"""Registry self-consistency: the driver contract degrades silently when
-these drift (a bench query with no budget, an undeclared rows-only entry,
-a forced-head name that no longer exists), so pin them."""
+"""Registry self-consistency and the query order of the entry contract:
+the contract degrades silently when these drift (a bench query with no
+budget, an undeclared rows-only entry, a retired name back in the
+registry, a query order that stops rotating), so pin them."""
 
 from __future__ import annotations
 
+import json
+
+import __spark_entry__ as E
 from etl_drone_sense_spark.plans import registry as RG
 
 RG.all_queries()  # populate
@@ -29,193 +33,51 @@ def test_every_bench_query_has_a_budget():
     assert not missing, f"bench queries without a budget: {sorted(missing)}"
 
 
-def test_touched_and_checked_names_exist():
-    known = set(RG.REGISTRY) | set(RG.RETIRED)
-    for group in (
-        RG.TOUCHED_R16,
-        RG.DRIVER_CHECKED_R15,
-        RG.TOUCHED_R15,
-        RG.DRIVER_CHECKED_R14,
-        RG.TOUCHED_R14,
-        RG.DRIVER_CHECKED_R13,
-        RG.TOUCHED_R13,
-        RG.DRIVER_CHECKED_R12,
-        RG.TOUCHED_R12,
-        RG.TOUCHED_R11,
-        RG.TOUCHED_R10,
-        RG.TOUCHED_R09,
-        RG.TOUCHED_R08,
-        RG.TOUCHED_R07,
-        RG.TOUCHED_R06,
-        RG.TOUCHED_R05,
-        RG.DRIVER_CHECKED_R11,
-        RG.DRIVER_CHECKED_R10,
-        RG.DRIVER_CHECKED_R09,
-        RG.DRIVER_CHECKED_R07,
-        RG.DRIVER_CHECKED_R06,
-        RG.DRIVER_CHECKED_R05,
-        RG.DRIVER_CHECKED_R04,
-        RG.DRIVER_CHECKED_R03,
-        RG.DRIVER_CHECKED_R02,
-        RG.DRIVER_CHECKED_R01,
-    ):
-        stale = set(group) - known
-        assert not stale, f"window bookkeeping names not in registry: {stale}"
-
-
 def test_retired_names_stay_retired():
     """A retired name must not quietly re-enter the registry (the whole
     point of retirement was removing the sf1-incapable default path)."""
-    ghosts = set(RG.RETIRED) & set(RG.REGISTRY)
-    assert not ghosts, f"retired names re-registered: {sorted(ghosts)}"
+    assert "dedup_simhash" not in RG.REGISTRY
 
 
-def _ever_checked() -> set[str]:
-    return (
-        set(RG.DRIVER_CHECKED_R01)
-        | set(RG.DRIVER_CHECKED_R02)
-        | set(RG.DRIVER_CHECKED_R03)
-        | set(RG.DRIVER_CHECKED_R04)
-        | set(RG.DRIVER_CHECKED_R05)
-        | set(RG.DRIVER_CHECKED_R06)
-        | set(RG.DRIVER_CHECKED_R07)
-        | set(RG.DRIVER_CHECKED_R09)
-        | set(RG.DRIVER_CHECKED_R10)
-        | set(RG.DRIVER_CHECKED_R11)
-        | set(RG.DRIVER_CHECKED_R12)
-        | set(RG.DRIVER_CHECKED_R13)
-        | set(RG.DRIVER_CHECKED_R14)
-        | set(RG.DRIVER_CHECKED_R15)
-    )
+def _row(ok: bool | None = True, rows: int = 10, err: str | None = None) -> dict:
+    return {"rows_match": ok, "schema_match": ok, "hash_match": ok,
+            "spark_rows": rows, "oracle_rows": rows, "err": err}
 
 
-def test_r15_fold_covers_the_r15_touched_names():
-    """Every r15-touched name must have an r15 driver row (the fold is the
-    exact CORRECTNESS_r15.json key set, 50/50 green)."""
-    uncovered = set(RG.TOUCHED_R15) - set(RG.DRIVER_CHECKED_R15)
-    assert not uncovered, f"touched r15 names without an r15 row: {uncovered}"
+def test_query_order_counts_only_green_nonvacuous_rows(tmp_path):
+    """Only a green row that returned data is evidence: a red row, a
+    0-vs-0 match, a rows-only (no oracle) row and an errored row leave a
+    name's round where it was, and a name with no evidence leads. A new
+    artifact moves its names to the tail, with registration order kept
+    inside each round."""
+    names = dict.fromkeys(["a", "b", "c", "d", "e", "f"])
+
+    def order() -> list[str]:
+        return list(E._stalest_first(names, str(tmp_path)))
+
+    def write(rnd: int, rows: dict) -> None:
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+    assert order() == list(names)
+    write(1, {"a": _row(), "b": _row(), "c": _row(), "d": _row(),
+              "e": _row(), "f": _row(rows=0), "gone": _row()})
+    write(2, {"a": _row(ok=False), "b": _row(rows=0),
+              "c": _row(ok=None, err="no_oracle"), "d": _row(err="boom"),
+              "e": _row()})
+    (tmp_path / "CORRECTNESS_r03.json.bak").write_text("not json")
+    assert E.evidence_rounds(names, str(tmp_path)) == {
+        "a": 1, "b": 1, "c": 1, "d": 1, "e": 2, "f": 0}
+    assert order() == ["f", "a", "b", "c", "d", "e"]
+
+    write(3, {"a": _row(), "c": _row()})
+    assert order() == ["f", "b", "d", "e", "a", "c"]
 
 
-def test_r14_fold_covers_the_r14_touched_names():
-    """Every r14-touched name must have an r14 driver row (the fold is the
-    exact CORRECTNESS_r14.json key set, 50/50 green)."""
-    uncovered = set(RG.TOUCHED_R14) - set(RG.DRIVER_CHECKED_R14)
-    assert not uncovered, f"touched r14 names without an r14 row: {uncovered}"
-
-
-def test_r13_fold_covers_the_r13_touched_names():
-    """Every r13-touched name must have an r13 driver row (the fold is the
-    exact CORRECTNESS_r13.json key set, 50/50 green)."""
-    uncovered = set(RG.TOUCHED_R13) - set(RG.DRIVER_CHECKED_R13)
-    assert not uncovered, f"touched r13 names without an r13 row: {uncovered}"
-
-
-def test_r12_fold_covers_the_r12_touched_names():
-    """Every r12-touched name must have an r12 driver row (the fold is the
-    exact CORRECTNESS_r12.json key set, 50/50 green)."""
-    uncovered = set(RG.TOUCHED_R12) - set(RG.DRIVER_CHECKED_R12)
-    assert not uncovered, f"touched r12 names without an r12 row: {uncovered}"
-
-
-def test_r11_fold_covers_the_r11_touched_names():
-    """Every r11-touched name must have an r11 driver row (the fold is the
-    exact CORRECTNESS_r11.json key set, 50/50 green)."""
-    uncovered = set(RG.TOUCHED_R11) - set(RG.DRIVER_CHECKED_R11)
-    assert not uncovered, f"touched r11 names without an r11 row: {uncovered}"
-
-
-def test_r9_fold_covers_the_r8_gap():
-    """CORRECTNESS_r08.json never landed, so DRIVER_CHECKED_R09 (the r9
-    artifact's exact key set) must cover every r8- and r9-touched name —
-    otherwise some changed code still has only pre-change evidence."""
-    uncovered = (set(RG.TOUCHED_R08) | set(RG.TOUCHED_R09)) - set(
-        RG.DRIVER_CHECKED_R09
-    )
-    assert not uncovered, f"touched r8/r9 names without an r9 row: {uncovered}"
-
-
-def test_r10_fold_covers_the_r10_touched_names():
-    """Every r10-touched name must have an r10 driver row (the fold is the
-    exact CORRECTNESS_r10.json key set, 50/50 green)."""
-    uncovered = set(RG.TOUCHED_R10) - set(RG.DRIVER_CHECKED_R10)
-    assert not uncovered, f"touched r10 names without an r10 row: {uncovered}"
-
-
-def test_window_head_covers_everything_unverified_or_touched():
-    """The driver checks the FIRST ~50 names: every touched-this-round and
-    every never-driver-checked query must sort inside that window. After
-    the r10 fold the never-checked set should be empty — every registered
-    name has at least one green driver row."""
-    order = list(RG.all_queries())
-    head = set(order[:50])
-    # A touched name that is not registered must be an explicit retirement
-    # (r10 ADVICE: otherwise a typo in TOUCHED silently drops the
-    # must-be-in-head requirement for the query it meant to name).
-    ghosts = set(RG.TOUCHED_R16) - set(order)
-    assert ghosts <= RG.RETIRED, f"touched names neither registered nor retired: {ghosts}"
-    must_be_in_head = set(RG.TOUCHED_R16) & set(order) | (
-        set(order) - _ever_checked()
-    )
-    missing = must_be_in_head - head
-    assert not missing, f"outside the driver window: {sorted(missing)}"
-
-
-def test_window_head_leads_with_stalest_tier():
-    """After the touched/never-checked block, remaining window slots must
-    fill with the stalest-evidence tier — after the r15 fold (which
-    drained the whole r9 tier) that is the 14-query tier whose NEWEST
-    driver row is round 10 (relational/window/scan names the r15 judge
-    re-verified by hand). The r16 touched head plus the full 14-name r10
-    tier fits in the 50-name window with the remainder spilling into the
-    next-stalest (r11) tier."""
-    order = list(RG.all_queries())
-    fresher = (
-        set(RG.DRIVER_CHECKED_R11)
-        | set(RG.DRIVER_CHECKED_R12)
-        | set(RG.DRIVER_CHECKED_R13)
-        | set(RG.DRIVER_CHECKED_R14)
-        | set(RG.DRIVER_CHECKED_R15)
-    )
-    touched = set(RG.TOUCHED_R16)
-    stale_tier = [
-        n
-        for n in RG.REGISTRY
-        if n in RG.DRIVER_CHECKED_R10
-        and n not in fresher
-        and n not in touched
-    ]
-    assert set(stale_tier) == {
-        "array_funcs",
-        "case_bucketing",
-        "csv_scan",
-        "date_funcs",
-        "json_funcs",
-        "math_funcs",
-        "orc_scan",
-        "string_funcs",
-        "subquery_exists_notin",
-        "subquery_scalar_correlated",
-        "window_lag_lead",
-        "window_rank_navigation",
-        "window_running_sum",
-        "window_topk_per_group",
-    }, "stale-tier membership drifted — re-derive the rotation plan"
-    pos = {n: i for i, n in enumerate(order)}
-    n_touched = len(touched & set(order))
-    fill = min(50 - n_touched, len(stale_tier))
-    window_fill = set(order[n_touched : n_touched + fill])
-    assert window_fill <= set(stale_tier), (
-        "non-stalest names inside the driver window fill"
-    )
-    # Restrict to registered names: retired queries (dedup_simhash) keep
-    # their historical driver-checked rows but have no registry position.
-    # The r9-and-older tiers were drained by later folds, so "fresh" here
-    # means any name whose newest row is r11+ (not in the r10 tier).
-    fresh_only = (
-        fresher & set(RG.REGISTRY) - set(RG.DRIVER_CHECKED_R10) - touched
-    )
-    first_fresh = min(pos[n] for n in fresh_only)
-    worst_stale = max(pos[n] for n in stale_tier)
-    assert worst_stale < first_fresh, (
-        "a freshly-certified query sorts ahead of the r10 stale tier"
-    )
+def test_query_order_is_stalest_first_over_committed_artifacts():
+    order = list(E.queries())
+    assert sorted(order) == sorted(RG.REGISTRY)
+    assert list(E.oracle_sql()) == order  # every query carries an oracle
+    rounds = E.evidence_rounds(order)
+    pos = {n: i for i, n in enumerate(RG.REGISTRY)}
+    keys = [(rounds[n], pos[n]) for n in order]
+    assert keys == sorted(keys)

@@ -1,64 +1,35 @@
-"""Evidence-freshness rotation (r16 — r15 VERDICT item 5): rank every
-registered query by the ROUND of its latest driver correctness row and
-print the N stalest, so each round's closing ritual re-verifies the
-queries the external driver has not touched longest:
+"""Evidence freshness: print the head of ``__spark_entry__.queries()``
+(stalest correctness evidence first) with each name's newest green
+round, so a sweep can re-verify the queries checked longest ago:
 
     python tools/staleness.py [N]                 # list the N stalest (default 25)
     python tools/staleness.py [N] | tail -n +3 | awk '{print $1}' \
         | xargs python tools/verify_contract.py   # sweep them
 
-A query the driver checked in round R and never again carries evidence
-that ages as the code around it moves; the judge's r15 audit found 14
-queries whose latest row dated to r10. Rotating the stalest tier through
-verify_contract every round bounds that age at ~(registry size / sweep
-size) rounds without re-running the full registry.
+The ranking is ``__spark_entry__.evidence_rounds`` over the committed
+``CORRECTNESS_rNN.json`` artifacts; round 0 means no green row yet.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def latest_round_by_query() -> dict[str, int]:
-    """name -> newest round carrying a driver correctness row for it."""
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.load(open(path))
-        except (OSError, json.JSONDecodeError):
-            continue
-        for name in rows:
-            latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
 
 def main() -> int:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 25
-    from etl_drone_sense_spark.plans.registry import all_queries
+    import __spark_entry__ as E
 
-    registered = set(all_queries())
-    latest = latest_round_by_query()
-    never = sorted(registered - set(latest))
-    ranked = sorted(
-        ((latest.get(q, 0), q) for q in registered if q in latest),
-    )
-    print(f"# {len(registered)} registered; {len(never)} never driver-checked"
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 25
+    order = list(E.queries())
+    rounds = E.evidence_rounds(order)
+    never = [q for q in order if rounds[q] == 0]
+    print(f"# {len(order)} registered; {len(never)} with no green row"
           + (f": {', '.join(never)}" if never else ""))
     print("# name latest_driver_round")
-    for rnd, q in ([(0, q) for q in never] + ranked)[:n]:
-        print(f"{q} r{rnd}")
+    for q in order[:n]:
+        print(f"{q} r{rounds[q]}")
     return 0
 
 
