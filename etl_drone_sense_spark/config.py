@@ -9,7 +9,7 @@ touched.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass, fields
 
 
 class ConfigError(ValueError):
@@ -39,15 +39,3 @@ class Environment:
                 kwargs[f.name] = raw
         return cls(**kwargs)
 
-
-@dataclass(frozen=True)
-class EngineConfig:
-    """Engine-level knobs (not in the reference; scale configuration)."""
-
-    sf_dir: str = field(
-        default_factory=lambda: os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-        )
-    )
-    shuffle_partitions: int = 32
-    decode_mode: str = "FAILFAST"  # reference decode-or-throw (task.ts:119-121)

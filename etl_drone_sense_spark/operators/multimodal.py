@@ -1,24 +1,33 @@
-"""Multimodal (binary) column plumbing (SURVEY §2 Part C5).
+"""Multimodal (binary) columns: dependency-free media codecs and the
+Arrow-batched operators that decode them (SURVEY §2 Part C5).
 
 Images / audio / video travel as opaque ``binary`` payloads plus a typed
-metadata struct. The Spark-side machinery — schema, partition-sized Arrow
-batches, ``mapInPandas`` signatures — is real and tested. The codec layer
-has two tiers:
+metadata struct. Every codec here is real, in pure Python/numpy, with
+no external library; each ``encode_*`` is the fixture-side twin of its
+``parse_*``:
 
-* ``parse_ppm`` — a REAL, dependency-free decoder for uncompressed
-  binary PPM (P6) images: header parse (with comment handling), raster
-  extraction.
-* ``parse_png`` / ``encode_png`` — a REAL, dependency-free PNG codec for
-  the 8-bit RGB non-interlaced common case: chunk walk with CRC
-  verification, stdlib-zlib DEFLATE, and all five scanline filter
-  reconstructions (None/Sub/Up/Average/Paeth) per the PNG spec — the
-  compressed-codec tier that was import-gated through round 5.
-* ``decode_image_features`` — per-payload codec dispatch on magic bytes
-  (``parse_image``) → per-channel statistics; the honest end-to-end path
-  a user gets without external libraries.
-* ``decode_stub`` — a deterministic fake standing in for the remaining
-  compressed codecs (JPEG/H.264 need PIL/libav, not in this container);
-  it keeps the full Arrow path exercised for those formats' plumbing.
+* images — PPM (P6), PNG, GIF (still and animated), BMP, TIFF (with
+  JPEG-in-TIFF), and JPEG: baseline and 12-bit sequential, progressive,
+  arithmetic, arithmetic progressive and lossless. ``parse_image``
+  dispatches on magic bytes.
+* audio — WAV PCM, G.711 µ-law, IMA and Microsoft ADPCM, and FLAC.
+  ``parse_audio`` dispatches.
+* video — MJPEG-in-AVI and animated GIF. H.264-class video and MP3/AAC
+  stay import-gated.
+
+Two shells carry the Arrow passes. ``_synth_media`` runs every
+``synth_*_media`` fixture, which supplies only ``payload(doc_id)``; the
+fixture's docstring states that payload's closed form for the SQL
+oracle. ``_decode_quarantined`` runs image decode, resize and video
+decode, each supplying ``decode(payload) -> rows``: a ``ValueError``
+turns the payload into one ``ok=false`` row instead of failing the
+batch. Audio decode keeps its own loop because its ADPCM walk runs once
+per batch, not per payload. The synth shell is the one place that
+spreads an under-split input before the codec work; PPM, µ-law and PCM
+WAV skip the spread, because A/B runs measured the shuffle costing more
+than the encode (the table at ``_synth_media``). ``extract_features``
+(byte statistics through ``decode_stub``) exercises the same Arrow path
+for payloads of no known codec.
 
 Scale notes: binary rows are large → keep ``spark.sql.files.maxPartitionBytes``
 bounded and never ``collect`` payloads; feature extraction emits small typed
@@ -28,7 +37,7 @@ drops the binary once ``payload`` is no longer referenced).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -91,6 +100,77 @@ RESIZE_SCHEMA = T.StructType(
         T.StructField("mean_b", T.DoubleType()),
     ]
 )
+
+
+# Spread policy of the synth fixtures: one row per doc but codec work per
+# row, so an under-split ``docs`` is round-robined across the cluster
+# before the Arrow pass UNLESS an A/B measured the shuffle costing more
+# than the encode it spreads:
+#
+#   format            spread  evidence
+#   PPM               no      0.60 s as-is vs 1.06 s spread (r16): the
+#                             encoder is a raw-byte passthrough
+#   µ-law, PCM WAV    no      spread removed (r17)
+#   ADPCM, MS-ADPCM   yes     0.85 s spread vs 0.94 s fused (r17, sf0.1,
+#                             local[32]): the batched walk parallelizes
+#   every other       yes     kilobytes of codec work per row
+def _synth_media(
+    docs: DataFrame, payload: Callable[[int], bytes], spread: bool = True
+) -> DataFrame:
+    """The shell of every ``synth_*_media`` fixture: one Arrow pass over
+    ``docs.doc_id`` emitting ``(media_id = doc_id, payload(doc_id))``."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            payloads = [payload(int(did)) for did in pdf["doc_id"]]
+            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+
+    if spread:
+        from ..sources.readers import rebalance_for_compute
+
+        # no cache_key: callers pass docs from DIFFERENT sf_dirs, and
+        # the shuffle-free probe is cheap
+        docs = rebalance_for_compute(docs)
+    return docs.select("doc_id").mapInPandas(
+        batches, schema="media_id long, payload binary"
+    )
+
+
+def _decode_quarantined(
+    media: DataFrame,
+    schema: T.StructType,
+    decode: Callable[[bytes], list[tuple]],
+) -> DataFrame:
+    """The quarantining shell of the per-payload decode operators: one
+    Arrow pass over ``media(media_id, payload)`` emitting
+    ``(media_id, True, *row)`` for each row ``decode(payload)`` returns,
+    or ONE ``(media_id, False, None, ...)`` row when ``decode`` raises
+    ``ValueError`` — one corrupt blob must not kill a 100 TB scan.
+    ``schema`` leads with ``media_id`` and the ok flag. The heavy binary
+    column dies here; downstream sees only small typed rows."""
+    nulls = (None,) * (len(schema.fields) - 2)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows: list[tuple] = []
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                try:
+                    rows.extend((mid, True, *row) for row in decode(payload))
+                except ValueError:
+                    rows.append((mid, False, *nulls))
+            yield pd.DataFrame.from_records(rows, columns=schema.names)
+
+    return media.select("media_id", "payload").mapInPandas(
+        batches, schema=schema
+    )
+
+
+def _rgb_means(rgb: np.ndarray, px: int) -> tuple:
+    """Per-channel means of an RGB raster: exact-integer sums (int64)
+    divided once in double — the same IEEE op an SQL oracle performs,
+    so results are bit-comparable."""
+    sums = rgb.astype(np.int64, copy=False).reshape(-1, 3).sum(axis=0)
+    return sums[0] / px, sums[1] / px, sums[2] / px
 
 
 def _ppm_header_tokens(buf: bytes, count: int) -> tuple[list[bytes], int]:
@@ -3573,14 +3653,14 @@ def parse_audio(payload: bytes):
 
 
 def decode_audio_features(media: DataFrame) -> DataFrame:
-    """WAV payloads → per-clip features via ``mapInPandas``
-    (Arrow-batched): frame count, duration, mean absolute amplitude,
-    peak. Amplitude statistics are exact-integer sums (int64 — int16's
-    |−32768| overflows its own width, so abs happens AFTER the widening
-    cast) divided once in double, the same IEEE op the SQL oracle
-    performs. Undecodable payloads yield ``decode_ok=false`` with null
-    features instead of failing the batch — one corrupt blob must not
-    kill a 100 TB scan."""
+    """WAV or FLAC payloads (``parse_audio``) → per-clip features via
+    ``mapInPandas`` (Arrow-batched): frame count, duration, mean
+    absolute amplitude, peak. Amplitude statistics are exact-integer
+    sums (int64 — int16's |−32768| overflows its own width, so abs
+    happens AFTER the widening cast) divided once in double, the same
+    IEEE op the SQL oracle performs. Undecodable payloads yield
+    ``decode_ok=false`` with null features instead of failing the batch
+    — one corrupt blob must not kill a 100 TB scan."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -3640,22 +3720,13 @@ def synth_wav_media(docs: DataFrame) -> DataFrame:
     ``(doc_id*53 + i*7) % 65536 - 32768`` (full int16 dynamic range, so
     the |−32768| widening contract stays exercised)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ch = 1 + did % 2
-                rate = 8000 + (did % 3) * 4000
-                frames = 50 + did % 40
-                i = np.arange(frames * ch, dtype=np.int64)
-                samples = (did * 53 + i * 7) % 65536 - 32768
-                payloads.append(encode_wav(rate, ch, samples))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        ch = 1 + did % 2
+        rate = 8000 + (did % 3) * 4000
+        i = np.arange((50 + did % 40) * ch, dtype=np.int64)
+        return encode_wav(rate, ch, (did * 53 + i * 7) % 65536 - 32768)
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload, spread=False)
 
 
 def synth_ulaw_media(docs: DataFrame) -> DataFrame:
@@ -3666,20 +3737,12 @@ def synth_ulaw_media(docs: DataFrame) -> DataFrame:
     SQL oracle derives the EXPANDED int16 stream by transcribing the
     CCITT expansion arithmetic."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = 60 + did % 50
-                i = np.arange(frames, dtype=np.int64)
-                ulaw = ((did * 29 + i * 11) % 256).astype(np.uint8)
-                payloads.append(encode_wav_ulaw(8000, 1, ulaw.tobytes()))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        i = np.arange(60 + did % 50, dtype=np.int64)
+        ulaw = ((did * 29 + i * 11) % 256).astype(np.uint8)
+        return encode_wav_ulaw(8000, 1, ulaw.tobytes())
 
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload, spread=False)
 
 
 def synth_adpcm_media(docs: DataFrame) -> DataFrame:
@@ -3699,40 +3762,21 @@ def synth_adpcm_media(docs: DataFrame) -> DataFrame:
     (doc, channel). Multipliers 13/7·37/29 collide with no other audio
     fixture."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ch = (1, 2, 4)[did % 3]
-                nibs = (
-                    64 + (did % 48) * 2 if ch == 1 else 64 + (did % 12) * 8
-                )
-                i7 = np.arange(nibs, dtype=np.int64) * 7
-                chans = [
-                    (((did * 13 + c * 5) + i7) % 16).astype(np.uint8).tobytes()
-                    for c in range(ch)
-                ]
-                preds = [((did * 37 + c * 11) % 256 - 128) * 16 for c in range(ch)]
-                idxs = [(did + c * 7) % 89 for c in range(ch)]
-                payloads.append(
-                    encode_wav_adpcm(
-                        11025,
-                        preds[0] if ch == 1 else preds,
-                        idxs[0] if ch == 1 else idxs,
-                        chans[0] if ch == 1 else chans,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        ch = (1, 2, 4)[did % 3]
+        nibs = 64 + (did % 48) * 2 if ch == 1 else 64 + (did % 12) * 8
+        i7 = np.arange(nibs, dtype=np.int64) * 7
+        chans = [
+            (((did * 13 + c * 5) + i7) % 16).astype(np.uint8).tobytes()
+            for c in range(ch)
+        ]
+        preds = [((did * 37 + c * 11) % 256 - 128) * 16 for c in range(ch)]
+        idxs = [(did + c * 7) % 89 for c in range(ch)]
+        if ch == 1:
+            return encode_wav_adpcm(11025, preds[0], idxs[0], chans[0])
+        return encode_wav_adpcm(11025, preds, idxs, chans)
 
-    from ..sources.readers import rebalance_for_compute
-
-    # the batched predictor walk still parallelizes: spread-vs-fused A/B
-    # at r17 measured 0.85 s spread vs 0.94 s fused at sf0.1/local[32]
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_msadpcm_media(docs: DataFrame) -> DataFrame:
@@ -3763,48 +3807,30 @@ def synth_msadpcm_media(docs: DataFrame) -> DataFrame:
     channel). Multipliers 19/5/3·31/23 collide with no other audio
     fixture (IMA uses 13/5/7·37, µ-law 29/11)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ch = 1 if did % 2 == 0 else 2
-                nibs = (
-                    64 + (did % 48) * 2 if ch == 1 else 64 + (did % 24) * 4
-                )
-                iv = np.arange(nibs, dtype=np.int64)
-                spike = iv % 8 == 0
-                chans = [
-                    np.where(
-                        spike,
-                        (did * 19 + c * 5 + (iv // 8) * 7) % 16,
-                        (did + c + iv) % 4,
-                    ).astype(np.uint8).tobytes()
-                    for c in range(ch)
-                ]
-                bpred = [(did + c) % 7 for c in range(ch)]
-                deltas = [16 + (did * 7 + c * 13) % 480 for c in range(ch)]
-                s1s = [((did * 31 + c * 17) % 256 - 128) * 16 for c in range(ch)]
-                s2s = [((did * 23 + c * 19) % 256 - 128) * 16 for c in range(ch)]
-                payloads.append(
-                    encode_wav_msadpcm(
-                        11025,
-                        bpred[0] if ch == 1 else bpred,
-                        deltas[0] if ch == 1 else deltas,
-                        s1s[0] if ch == 1 else s1s,
-                        s2s[0] if ch == 1 else s2s,
-                        chans[0] if ch == 1 else chans,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        ch = 1 if did % 2 == 0 else 2
+        nibs = 64 + (did % 48) * 2 if ch == 1 else 64 + (did % 24) * 4
+        iv = np.arange(nibs, dtype=np.int64)
+        spike = iv % 8 == 0
+        chans = [
+            np.where(
+                spike,
+                (did * 19 + c * 5 + (iv // 8) * 7) % 16,
+                (did + c + iv) % 4,
+            ).astype(np.uint8).tobytes()
+            for c in range(ch)
+        ]
+        bpred = [(did + c) % 7 for c in range(ch)]
+        deltas = [16 + (did * 7 + c * 13) % 480 for c in range(ch)]
+        s1s = [((did * 31 + c * 17) % 256 - 128) * 16 for c in range(ch)]
+        s2s = [((did * 23 + c * 19) % 256 - 128) * 16 for c in range(ch)]
+        if ch == 1:
+            return encode_wav_msadpcm(
+                11025, bpred[0], deltas[0], s1s[0], s2s[0], chans[0]
+            )
+        return encode_wav_msadpcm(11025, bpred, deltas, s1s, s2s, chans)
 
-    from ..sources.readers import rebalance_for_compute
-
-    # spread kept per the r17 A/B (0.85 s spread vs 0.94 s fused)
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_flac_media(docs: DataFrame) -> DataFrame:
@@ -3831,50 +3857,31 @@ def synth_flac_media(docs: DataFrame) -> DataFrame:
     depth-code mapping) changes decoded samples and hash-fails.
     Multipliers 47/31/9 collide with no other audio fixture."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ch = 1 + did % 2
-                frames = 60 + did % 60
-                variant = did % 5
-                bits = (16, 8, 24, 32)[(did // 3) % 4]
-                mod, half = 1 << bits, 1 << (bits - 1)
-                i = np.arange(frames, dtype=np.int64)
-                chans = []
-                for c in range(ch):
-                    if variant == 0:
-                        s = np.full(
-                            frames, (did * 47 + c * 31) % mod - half,
-                            dtype=np.int64,
-                        )
-                    else:
-                        s = (did * 47 + c * 31 + i * 9) % mod - half
-                    chans.append(s)
-                interleaved = np.empty(frames * ch, dtype=np.int64)
-                for c in range(ch):
-                    interleaved[c::ch] = chans[c]
-                mode = (
-                    "independent" if ch == 1 else
-                    ("independent", "left_side", "right_side", "mid_side")[
-                        (did // 2) % 4
-                    ]
-                )
-                payloads.append(
-                    encode_flac(
-                        16000, ch, interleaved, variant=variant,
-                        channel_mode=mode, bits=bits,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        ch = 1 + did % 2
+        frames = 60 + did % 60
+        variant = did % 5
+        bits = (16, 8, 24, 32)[(did // 3) % 4]
+        mod, half = 1 << bits, 1 << (bits - 1)
+        i = np.arange(frames, dtype=np.int64)
+        interleaved = np.empty(frames * ch, dtype=np.int64)
+        for c in range(ch):
+            if variant == 0:
+                interleaved[c::ch] = (did * 47 + c * 31) % mod - half
+            else:
+                interleaved[c::ch] = (did * 47 + c * 31 + i * 9) % mod - half
+        mode = (
+            "independent" if ch == 1 else
+            ("independent", "left_side", "right_side", "mid_side")[
+                (did // 2) % 4
+            ]
+        )
+        return encode_flac(
+            16000, ch, interleaved, variant=variant, channel_mode=mode,
+            bits=bits,
+        )
 
-    from ..sources.readers import rebalance_for_compute
-
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 # --- JPEG (baseline JFIF) ---------------------------------------------------
@@ -6041,6 +6048,18 @@ def parse_jpeg(payload: bytes) -> tuple[int, int, bytes]:
     return w, h, out8.astype(np.uint8).tobytes()
 
 
+def _block_levels(did: int, a: int, b: int) -> np.ndarray:
+    """The level grid of the constant-block JPEG fixtures: an
+    ``(8·hb)×(8·wb)`` int64 raster, ``wb = 1 + did % 2``,
+    ``hb = 1 + did % 3``, whose 8×8 block ``bi`` (row-major) holds
+    ``m = (a + bi·b) % 81 − 40``. Each caller maps ``m`` to its level
+    (``128 + 2·m`` at 8 bits): an even offset from the level shift makes
+    every block DC-only and exact through the lossy codec."""
+    wb, hb = 1 + did % 2, 1 + did % 3
+    m = (a + np.arange(wb * hb, dtype=np.int64) * b) % 81 - 40
+    return np.kron(m.reshape(hb, wb), np.ones((8, 8), dtype=np.int64))
+
+
 def synth_jpeg_media(docs: DataFrame) -> DataFrame:
     """Deterministic synthetic JPEG payloads keyed by doc id — REAL
     baseline JFIF bytes whose DECODED pixels are arithmetically
@@ -6059,39 +6078,18 @@ def synth_jpeg_media(docs: DataFrame) -> DataFrame:
     certifies both processes and a 12-bit level-shift/Pq/DC bug still
     hash-fails (wrong means or dropped rows)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                wb, hb = 1 + did % 2, 1 + did % 3
-                w, h = 8 * wb, 8 * hb
-                prec = (8, 12)[(did // 6) % 2]
-                img = np.empty((h, w), dtype=np.int64)
-                for bi in range(wb * hb):
-                    by, bx = divmod(bi, wb)
-                    m = (did * 7 + bi * 13) % 81 - 40
-                    v = 128 + 2 * m if prec == 8 else 2048 + 32 * m
-                    img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                data = (
-                    img.astype(np.uint8).tobytes()
-                    if prec == 8
-                    else img.astype("<u2").tobytes()
-                )
-                payloads.append(
-                    encode_jpeg(w, h, data, ncomp=1, precision=prec)
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        prec = (8, 12)[(did // 6) % 2]
+        m = _block_levels(did, did * 7, 13)
+        h, w = m.shape
+        data = (
+            (128 + 2 * m).astype(np.uint8).tobytes()
+            if prec == 8
+            else (2048 + 32 * m).astype("<u2").tobytes()
+        )
+        return encode_jpeg(w, h, data, ncomp=1, precision=prec)
 
-    from ..sources.readers import rebalance_for_compute
-
-    # one row per doc but kilobytes of codec work each: spread an
-    # under-split source across the cluster before the Arrow pass
-    docs = rebalance_for_compute(docs)  # no cache_key: callers pass
-    # docs from DIFFERENT sf_dirs; the shuffle-free probe is cheap
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_jpeg_progressive_media(docs: DataFrame) -> DataFrame:
@@ -6106,29 +6104,13 @@ def synth_jpeg_progressive_media(docs: DataFrame) -> DataFrame:
     11/19 distinct from the baseline fixture's 7/13, so a dispatch
     mix-up between the two JPEG tiers cannot silently hash-match."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                wb, hb = 1 + did % 2, 1 + did % 3
-                w, h = 8 * wb, 8 * hb
-                img = np.empty((h, w), dtype=np.uint8)
-                for bi in range(wb * hb):
-                    by, bx = divmod(bi, wb)
-                    v = 128 + 2 * ((did * 11 + bi * 19) % 81 - 40)
-                    img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                payloads.append(
-                    encode_jpeg_progressive(w, h, img.tobytes(), ncomp=1)
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        m = _block_levels(did, did * 11, 19)
+        h, w = m.shape
+        data = (128 + 2 * m).astype(np.uint8).tobytes()
+        return encode_jpeg_progressive(w, h, data, ncomp=1)
 
-    from ..sources.readers import rebalance_for_compute
-
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_jpeg_arith_media(docs: DataFrame) -> DataFrame:
@@ -6144,27 +6126,14 @@ def synth_jpeg_arith_media(docs: DataFrame) -> DataFrame:
     (11/19), and JPEG-in-TIFF (27/17) fixtures, so a dispatch mix-up
     between JPEG tiers cannot silently hash-match."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                wb, hb = 1 + did % 2, 1 + did % 3
-                w, h = 8 * wb, 8 * hb
-                img = np.empty((h, w), dtype=np.uint8)
-                for bi in range(wb * hb):
-                    by, bx = divmod(bi, wb)
-                    v = 128 + 2 * ((did * 23 + bi * 29) % 81 - 40)
-                    img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                payloads.append(encode_jpeg_arithmetic(w, h, img.tobytes()))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        m = _block_levels(did, did * 23, 29)
+        h, w = m.shape
+        return encode_jpeg_arithmetic(
+            w, h, (128 + 2 * m).astype(np.uint8).tobytes()
+        )
 
-    from ..sources.readers import rebalance_for_compute
-
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_jpeg_arith_prog_media(docs: DataFrame) -> DataFrame:
@@ -6178,29 +6147,14 @@ def synth_jpeg_arith_prog_media(docs: DataFrame) -> DataFrame:
     huffman (11/19), sequential-arithmetic (23/29), and JPEG-in-TIFF
     (27/17) fixtures."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                wb, hb = 1 + did % 2, 1 + did % 3
-                w, h = 8 * wb, 8 * hb
-                img = np.empty((h, w), dtype=np.uint8)
-                for bi in range(wb * hb):
-                    by, bx = divmod(bi, wb)
-                    v = 128 + 2 * ((did * 31 + bi * 37) % 81 - 40)
-                    img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                payloads.append(
-                    encode_jpeg_arithmetic_progressive(w, h, img.tobytes())
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        m = _block_levels(did, did * 31, 37)
+        h, w = m.shape
+        return encode_jpeg_arithmetic_progressive(
+            w, h, (128 + 2 * m).astype(np.uint8).tobytes()
+        )
 
-    from ..sources.readers import rebalance_for_compute
-
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_jpeg_lossless_media(docs: DataFrame) -> DataFrame:
@@ -6219,34 +6173,16 @@ def synth_jpeg_lossless_media(docs: DataFrame) -> DataFrame:
     pinned by the roundtrip unit suite). Multipliers 83/67 collide
     with no other image fixture."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 5 + did % 6, 4 + did % 5
-                prec = (8, 12, 16)[(did // 7) % 3]
-                v = (did * 83 + np.arange(w * h, dtype=np.int64) * 67) % (
-                    1 << prec
-                )
-                data = (
-                    v.astype(np.uint8).tobytes()
-                    if prec == 8
-                    else v.astype("<u2").tobytes()
-                )
-                payloads.append(
-                    encode_jpeg_lossless(
-                        w, h, data, predictor=1 + did % 7, precision=prec
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        w, h = 5 + did % 6, 4 + did % 5
+        prec = (8, 12, 16)[(did // 7) % 3]
+        v = (did * 83 + np.arange(w * h, dtype=np.int64) * 67) % (1 << prec)
+        data = v.astype(np.uint8 if prec == 8 else "<u2").tobytes()
+        return encode_jpeg_lossless(
+            w, h, data, predictor=1 + did % 7, precision=prec
+        )
 
-    from ..sources.readers import rebalance_for_compute
-
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def parse_image(payload: bytes) -> tuple[int, int, bytes]:
@@ -6456,54 +6392,25 @@ def decode_video_features(media: DataFrame, every_n: int = 1) -> DataFrame:
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k.name: [] for k in VIDEO_FEATURE_SCHEMA}
+    def decode(payload) -> list[tuple]:
+        # container dispatch: animated GIF frames arrive as decoded RGB;
+        # AVI frames as per-frame JPEG payloads
+        if bytes(payload or b"")[:6] in (b"GIF87a", b"GIF89a"):
+            w, h, rasters = parse_gif_frames(payload)
+            decode_frame = lambda fr: (w, h, fr)  # noqa: E731
+        else:
+            w, h, _uspf, rasters = parse_avi(payload)
+            decode_frame = parse_jpeg
+        rows = []
+        for fi in range(0, len(rasters), every_n):
+            fw, fh, raster = decode_frame(rasters[fi])
+            if (fw, fh) != (w, h):
+                raise ValueError("video frame dims disagree with header")
+            means = _rgb_means(np.frombuffer(raster, dtype=np.uint8), fw * fh)
+            rows.append((fi, len(rasters), fw, fh, *means))
+        return rows
 
-            def emit(mid, ok, fi, nf, w, h, mr, mg, mb):
-                for k, v in zip(
-                    out, (mid, ok, fi, nf, w, h, mr, mg, mb)
-                ):
-                    out[k].append(v)
-
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                mid = int(mid)
-                try:
-                    # container dispatch: animated GIF frames arrive as
-                    # decoded RGB; AVI frames as per-frame JPEG payloads
-                    if bytes(payload or b"")[:6] in (b"GIF87a", b"GIF89a"):
-                        w, h, rasters = parse_gif_frames(payload)
-                        decode_frame = lambda fr: (w, h, fr)  # noqa: E731
-                    else:
-                        w, h, _uspf, rasters = parse_avi(payload)
-                        decode_frame = parse_jpeg
-                    for fi in range(0, len(rasters), every_n):
-                        fw, fh, raster = decode_frame(rasters[fi])
-                        if (fw, fh) != (w, h):
-                            raise ValueError(
-                                "video frame dims disagree with header"
-                            )
-                        sums = (
-                            np.frombuffer(raster, dtype=np.uint8)
-                            .astype(np.int64)
-                            .reshape(-1, 3)
-                            .sum(axis=0)
-                        )
-                        px = fw * fh
-                        emit(
-                            mid, True, fi, len(rasters), fw, fh,
-                            sums[0] / px, sums[1] / px, sums[2] / px,
-                        )
-                except ValueError:
-                    emit(
-                        mid, False, None, None, None, None,
-                        None, None, None,
-                    )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        batches, schema=VIDEO_FEATURE_SCHEMA
-    )
+    return _decode_quarantined(media, VIDEO_FEATURE_SCHEMA, decode)
 
 
 def synth_avi_media(docs: DataFrame) -> DataFrame:
@@ -6515,117 +6422,67 @@ def synth_avi_media(docs: DataFrame) -> DataFrame:
     ``f`` block ``bi`` value
     ``v = 128 + 2·((doc_id·7 + f·29 + bi·13) % 81 − 40)``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                wb, hb = 1 + did % 2, 1 + did % 3
-                w, h = 8 * wb, 8 * hb
-                frames = []
-                for f in range(2 + did % 4):
-                    img = np.empty((h, w), dtype=np.uint8)
-                    for bi in range(wb * hb):
-                        by, bx = divmod(bi, wb)
-                        img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            128 + 2 * ((did * 7 + f * 29 + bi * 13) % 81 - 40)
-                        )
-                    frames.append(encode_jpeg(w, h, img.tobytes(), ncomp=1))
-                payloads.append(encode_avi_mjpeg(w, h, frames))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        levels = [
+            _block_levels(did, did * 7 + f * 29, 13) for f in range(2 + did % 4)
+        ]
+        h, w = levels[0].shape
+        frames = [
+            encode_jpeg(w, h, (128 + 2 * m).astype(np.uint8).tobytes(), ncomp=1)
+            for m in levels
+        ]
+        return encode_avi_mjpeg(w, h, frames)
 
-    from ..sources.readers import rebalance_for_compute
-
-    # one row per doc but kilobytes of codec work each: spread an
-    # under-split source across the cluster before the Arrow pass
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def decode_image_features(media: DataFrame) -> DataFrame:
-    """PPM payloads → per-image features via ``mapInPandas`` (Arrow-batched).
+    """Raster payloads → per-image features via ``mapInPandas``
+    (Arrow-batched).
 
-    Accepts any supported codec per payload (``parse_image``: PPM/P6 or
-    PNG, dispatched on magic bytes).
-    Emits (media_id, decode_ok, width, height, mean_r/g/b). Channel means
-    are exact-integer sums (numpy int64) divided once in double — the same
-    IEEE op an SQL oracle performs, so results are bit-comparable.
-    Undecodable payloads yield ``decode_ok=false`` with null features
-    instead of failing the batch (quarantine-friendly: one corrupt blob
-    must not kill a 100 TB scan)."""
+    Accepts every supported raster codec per payload (``parse_image``:
+    PPM, PNG, GIF, BMP, TIFF and every JPEG process, dispatched on magic
+    bytes). Emits (media_id, decode_ok, width, height, mean_r/g/b,
+    row_moment). Channel means are exact-integer sums (numpy int64)
+    divided once in double — the same IEEE op an SQL oracle performs, so
+    results are bit-comparable. Undecodable payloads yield
+    ``decode_ok=false`` with null features instead of failing the batch
+    (quarantine-friendly: one corrupt blob must not kill a 100 TB
+    scan)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k.name: [] for k in IMAGE_FEATURE_SCHEMA}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, raster = parse_image(payload)
-                    arr = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
-                    sums = arr.reshape(-1, 3).sum(axis=0)
-                    row_sums = arr.reshape(h, w * 3).sum(axis=1)
-                    row_moment = int((np.arange(h, dtype=np.int64) * row_sums).sum())
-                    px = w * h
-                    vals = (
-                        True, w, h,
-                        sums[0] / px, sums[1] / px, sums[2] / px,
-                        row_moment,
-                    )
-                except ValueError:
-                    vals = (False, None, None, None, None, None, None)
-                out["media_id"].append(mid)
-                for k, v in zip(
-                    (
-                        "decode_ok", "width", "height",
-                        "mean_r", "mean_g", "mean_b", "row_moment",
-                    ),
-                    vals,
-                ):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
+    def decode(payload) -> list[tuple]:
+        w, h, raster = parse_image(payload)
+        arr = np.frombuffer(raster, dtype=np.uint8).astype(np.int64)
+        means = _rgb_means(arr, w * h)
+        row_sums = arr.reshape(h, w * 3).sum(axis=1)
+        row_moment = int((np.arange(h, dtype=np.int64) * row_sums).sum())
+        return [(w, h, *means, row_moment)]
 
-    return media.mapInPandas(batches, schema=IMAGE_FEATURE_SCHEMA)
+    return _decode_quarantined(media, IMAGE_FEATURE_SCHEMA, decode)
 
 
 def resize_image_features(
     media: DataFrame, out_w: int = 2, out_h: int = 2
 ) -> DataFrame:
-    """PPM payloads → nearest-neighbor RESIZE → per-channel means of the
-    resized raster, via ``mapInPandas`` (Arrow-batched) — the resize step
-    of a decode→resize→embed vision pipeline, with REAL raster math
+    """Raster payloads → nearest-neighbor RESIZE → per-channel means of
+    the resized raster, via ``mapInPandas`` (Arrow-batched) — the resize
+    step of a decode→resize→embed vision pipeline, with REAL raster math
     (numpy fancy-indexing selects source pixel (ty·h//out_h, tx·w//out_w)
-    for each target pixel; compressed-codec resizes stay the declared
-    import-gated extension). Undecodable payloads yield
-    ``resize_ok=false`` instead of failing the batch."""
+    for each target pixel). Undecodable payloads yield
+    ``resize_ok=false`` instead of failing the batch. ``out_w``/``out_h``
+    are validated EAGERLY: a target below 1 pixel would select nothing
+    and emit NaN means as resize_ok=true rows."""
+    if out_w < 1 or out_h < 1:
+        raise ValueError(f"out_w and out_h must be >= 1, got {out_w}x{out_h}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k.name: [] for k in RESIZE_SCHEMA}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, raster = parse_image(payload)
-                    arr = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
-                    ry = (np.arange(out_h) * h) // out_h
-                    rx = (np.arange(out_w) * w) // out_w
-                    small = arr[ry][:, rx].astype(np.int64)
-                    sums = small.reshape(-1, 3).sum(axis=0)
-                    px = out_w * out_h
-                    vals = (
-                        True, out_w, out_h,
-                        sums[0] / px, sums[1] / px, sums[2] / px,
-                    )
-                except ValueError:
-                    vals = (False, None, None, None, None, None)
-                out["media_id"].append(mid)
-                for k, v in zip(
-                    ("resize_ok", "out_w", "out_h", "mean_r", "mean_g", "mean_b"),
-                    vals,
-                ):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
+    def decode(payload) -> list[tuple]:
+        w, h, raster = parse_image(payload)
+        arr = np.frombuffer(raster, dtype=np.uint8).reshape(h, w, 3)
+        ry = (np.arange(out_h) * h) // out_h
+        rx = (np.arange(out_w) * w) // out_w
+        return [(out_w, out_h, *_rgb_means(arr[ry][:, rx], out_w * out_h))]
 
-    return media.mapInPandas(batches, schema=RESIZE_SCHEMA)
+    return _decode_quarantined(media, RESIZE_SCHEMA, decode)
 
 
 def synth_ppm_media(docs: DataFrame) -> DataFrame:
@@ -6635,22 +6492,12 @@ def synth_ppm_media(docs: DataFrame) -> DataFrame:
     ``width = 4 + doc_id % 5``, ``height = 3 + doc_id % 4``, raster byte
     ``i`` = ``(doc_id*31 + i) % 256``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 5, 3 + did % 4
-                raster = bytes((did * 31 + i) % 256 for i in range(w * h * 3))
-                payloads.append(b"P6\n%d %d\n255\n" % (w, h) + raster)
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        w, h = 4 + did % 5, 3 + did % 4
+        raster = bytes((did * 31 + i) % 256 for i in range(w * h * 3))
+        return b"P6\n%d %d\n255\n" % (w, h) + raster
 
-    # r16 note: rebalance_for_compute measured here and rejected — the PPM
-    # encoder is a raw-byte passthrough, so round-robining the rows costs
-    # more than the single-task encode (0.60 s as-is vs 1.06 s spread).
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload, spread=False)
 
 
 def synth_png_media(docs: DataFrame) -> DataFrame:
@@ -6672,41 +6519,20 @@ def synth_png_media(docs: DataFrame) -> DataFrame:
       ``(doc_id*37 + p) % 64``, PLTE entry ``k`` channel ``c`` =
       ``(doc_id*41 + k*3 + c) % 256``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 5, 3 + did % 4
-                variant = did % 3
-                if variant == 0:
-                    raster = bytes(
-                        (did * 37 + i) % 256 for i in range(w * h * 3)
-                    )
-                    payloads.append(encode_png(w, h, raster))
-                elif variant == 1:
-                    rgba = bytes(
-                        (did * 37 + j) % 256 for j in range(w * h * 4)
-                    )
-                    payloads.append(encode_png(w, h, rgba, ctype=6))
-                else:
-                    idx = bytes((did * 37 + p) % 64 for p in range(w * h))
-                    plte = bytes(
-                        (did * 41 + b) % 256 for b in range(64 * 3)
-                    )
-                    payloads.append(
-                        encode_png(w, h, idx, ctype=3, palette=plte)
-                    )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        w, h = 4 + did % 5, 3 + did % 4
+        variant = did % 3
+        if variant == 0:
+            raster = bytes((did * 37 + i) % 256 for i in range(w * h * 3))
+            return encode_png(w, h, raster)
+        if variant == 1:
+            rgba = bytes((did * 37 + j) % 256 for j in range(w * h * 4))
+            return encode_png(w, h, rgba, ctype=6)
+        idx = bytes((did * 37 + p) % 64 for p in range(w * h))
+        plte = bytes((did * 41 + b) % 256 for b in range(64 * 3))
+        return encode_png(w, h, idx, ctype=3, palette=plte)
 
-    from ..sources.readers import rebalance_for_compute
-
-    # one row per doc but kilobytes of codec work each: spread an
-    # under-split source across the cluster before the Arrow pass
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_bmp_media(docs: DataFrame) -> DataFrame:
@@ -6758,56 +6584,31 @@ def synth_bmp_media(docs: DataFrame) -> DataFrame:
     Multipliers 43/47 are distinct from the PPM (31), PNG (37/41), and
     GIF fixtures so a codec mix-up cannot silently hash-match."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 5, 3 + did % 4
-                variant = did % 10
-                if variant in (0, 1, 4, 5, 8, 9):
-                    raster = bytes(
-                        (did * 43 + i) % 256 for i in range(w * h * 3)
-                    )
-                    payloads.append(
-                        encode_bmp(
-                            w, h, raster,
-                            top_down=(variant == 1),
-                            bitfields565=(variant in (4, 8)),
-                            rgb32=(variant in (5, 9)),
-                            header_version={8: 108, 9: 124}.get(variant, 40),
-                        )
-                    )
-                elif variant == 6:
-                    idx = bytes((did * 43 + p) % 16 for p in range(w * h))
-                    pal = bytes((did * 47 + b) % 256 for b in range(16 * 3))
-                    payloads.append(
-                        encode_bmp(w, h, idx, palette=pal, rle4=True)
-                    )
-                elif variant == 7:
-                    idx = bytes((did * 43 + p) % 2 for p in range(w * h))
-                    pal = bytes((did * 47 + b) % 256 for b in range(2 * 3))
-                    payloads.append(
-                        encode_bmp(w, h, idx, palette=pal, bit1=True)
-                    )
-                else:
-                    idx = bytes((did * 43 + p) % 64 for p in range(w * h))
-                    pal = bytes((did * 47 + b) % 256 for b in range(64 * 3))
-                    payloads.append(
-                        encode_bmp(
-                            w, h, idx, palette=pal, rle8=(variant == 3)
-                        )
-                    )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        w, h = 4 + did % 5, 3 + did % 4
+        variant = did % 10
+        if variant in (0, 1, 4, 5, 8, 9):
+            raster = bytes((did * 43 + i) % 256 for i in range(w * h * 3))
+            return encode_bmp(
+                w, h, raster,
+                top_down=(variant == 1),
+                bitfields565=(variant in (4, 8)),
+                rgb32=(variant in (5, 9)),
+                header_version={8: 108, 9: 124}.get(variant, 40),
+            )
+        if variant == 6:
+            idx = bytes((did * 43 + p) % 16 for p in range(w * h))
+            pal = bytes((did * 47 + b) % 256 for b in range(16 * 3))
+            return encode_bmp(w, h, idx, palette=pal, rle4=True)
+        if variant == 7:
+            idx = bytes((did * 43 + p) % 2 for p in range(w * h))
+            pal = bytes((did * 47 + b) % 256 for b in range(2 * 3))
+            return encode_bmp(w, h, idx, palette=pal, bit1=True)
+        idx = bytes((did * 43 + p) % 64 for p in range(w * h))
+        pal = bytes((did * 47 + b) % 256 for b in range(64 * 3))
+        return encode_bmp(w, h, idx, palette=pal, rle8=(variant == 3))
 
-    from ..sources.readers import rebalance_for_compute
-
-    # one row per doc but kilobytes of codec work each: spread an
-    # under-split source across the cluster before the Arrow pass
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_tiff_media(docs: DataFrame) -> DataFrame:
@@ -6862,68 +6663,44 @@ def synth_tiff_media(docs: DataFrame) -> DataFrame:
     BMP/GIF (43/47), and JPEG (7/13) fixtures so a codec mix-up cannot
     silently hash-match."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                variant = did % 11
-                if variant == 9:
-                    # JPEG-in-TIFF needs 8-multiple dims for the
-                    # constant-block exactness trick (one block row per
-                    # 8-row strip)
-                    wb, hb = 1 + did % 2, 1 + did % 3
-                    w, h = 8 * wb, 8 * hb
-                else:
-                    w, h = 4 + did % 5, 3 + did % 4
-                gray = variant in (2, 3, 5, 6, 9)
-                pal = None
-                if variant == 7:
-                    raster = bytes((did * 53 + p) % 64 for p in range(w * h))
-                    pal = bytes((did * 61 + b) % 256 for b in range(256 * 3))
-                elif variant == 9:
-                    img = np.empty((h, w), dtype=np.uint8)
-                    for bi in range(wb * hb):
-                        by, bx = divmod(bi, wb)
-                        v = 128 + 2 * ((did * 27 + bi * 17) % 81 - 40)
-                        img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = v
-                    raster = img.tobytes()
-                elif gray:
-                    raster = bytes((did * 59 + p) % 256 for p in range(w * h))
-                else:
-                    raster = bytes(
-                        (did * 53 + i) % 256 for i in range(w * h * 3)
-                    )
-                comp = {
-                    0: "none", 1: "packbits", 2: "none",
-                    3: "packbits", 4: "lzw", 5: "deflate", 6: "lzw",
-                    7: "packbits", 8: "lzw", 9: "jpeg", 10: "lzw",
-                }[variant]
-                payloads.append(
-                    encode_tiff(
-                        w,
-                        h,
-                        raster,
-                        gray=gray,
-                        compression=comp,
-                        big_endian=variant in (1, 2, 5, 8, 10),
-                        rows_per_strip=8 if variant == 9 else 2,
-                        predictor=2 if variant in (4, 8, 10) else 1,
-                        tile=(16, 16) if variant in (6, 10) else None,
-                        palette=pal,
-                        planar=variant in (8, 10),
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        variant = did % 11
+        w, h = 4 + did % 5, 3 + did % 4
+        gray = variant in (2, 3, 5, 6, 9)
+        pal = None
+        if variant == 7:
+            raster = bytes((did * 53 + p) % 64 for p in range(w * h))
+            pal = bytes((did * 61 + b) % 256 for b in range(256 * 3))
+        elif variant == 9:
+            # JPEG-in-TIFF needs 8-multiple dims for the constant-block
+            # exactness trick (one block row per 8-row strip)
+            m = _block_levels(did, did * 27, 17)
+            h, w = m.shape
+            raster = (128 + 2 * m).astype(np.uint8).tobytes()
+        elif gray:
+            raster = bytes((did * 59 + p) % 256 for p in range(w * h))
+        else:
+            raster = bytes((did * 53 + i) % 256 for i in range(w * h * 3))
+        comp = {
+            0: "none", 1: "packbits", 2: "none",
+            3: "packbits", 4: "lzw", 5: "deflate", 6: "lzw",
+            7: "packbits", 8: "lzw", 9: "jpeg", 10: "lzw",
+        }[variant]
+        return encode_tiff(
+            w,
+            h,
+            raster,
+            gray=gray,
+            compression=comp,
+            big_endian=variant in (1, 2, 5, 8, 10),
+            rows_per_strip=8 if variant == 9 else 2,
+            predictor=2 if variant in (4, 8, 10) else 1,
+            tile=(16, 16) if variant in (6, 10) else None,
+            palette=pal,
+            planar=variant in (8, 10),
+        )
 
-    from ..sources.readers import rebalance_for_compute
-
-    # one row per doc but kilobytes of codec work each: spread an
-    # under-split source across the cluster before the Arrow pass
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_gif_media(docs: DataFrame) -> DataFrame:
@@ -6937,25 +6714,13 @@ def synth_gif_media(docs: DataFrame) -> DataFrame:
     differ from every other codec fixture so a dispatch mix-up cannot
     silently hash-match."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 5, 3 + did % 4
-                idx = bytes((did * 43 + p) % 64 for p in range(w * h))
-                pal = bytes((did * 47 + b) % 256 for b in range(256 * 3))
-                payloads.append(encode_gif(w, h, idx, pal))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        w, h = 4 + did % 5, 3 + did % 4
+        idx = bytes((did * 43 + p) % 64 for p in range(w * h))
+        pal = bytes((did * 47 + b) % 256 for b in range(256 * 3))
+        return encode_gif(w, h, idx, pal)
 
-    from ..sources.readers import rebalance_for_compute
-
-    # one row per doc but kilobytes of codec work each: spread an
-    # under-split source across the cluster before the Arrow pass
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def synth_gif_anim_media(docs: DataFrame) -> DataFrame:
@@ -6974,34 +6739,17 @@ def synth_gif_anim_media(docs: DataFrame) -> DataFrame:
     frame 0's content — in every later snapshot), disposal 1 on the
     rest. Palette byte ``b`` = ``(doc_id*59 + b) % 256``."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 5, 3 + did % 4
-                pal = bytes((did * 59 + b) % 256 for b in range(256 * 3))
-                nf = 2 + did % 4
-                frames: list = [
-                    bytes((did * 53 + p) % 64 for p in range(w * h))
-                ]
-                for g in range(1, nf):
-                    row = bytes((did * 53 + g * 17 + x) % 64 for x in range(w))
-                    disposal = {1: 2, 2: 3}.get(g, 1)
-                    frames.append((row, 0, g - 1, w, 1, disposal, 63))
-                payloads.append(
-                    encode_gif_animated(w, h, frames, pal, background=7)
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def payload(did: int) -> bytes:
+        w, h = 4 + did % 5, 3 + did % 4
+        pal = bytes((did * 59 + b) % 256 for b in range(256 * 3))
+        frames: list = [bytes((did * 53 + p) % 64 for p in range(w * h))]
+        for g in range(1, 2 + did % 4):
+            row = bytes((did * 53 + g * 17 + x) % 64 for x in range(w))
+            disposal = {1: 2, 2: 3}.get(g, 1)
+            frames.append((row, 0, g - 1, w, 1, disposal, 63))
+        return encode_gif_animated(w, h, frames, pal, background=7)
 
-    from ..sources.readers import rebalance_for_compute
-
-    # one row per doc but kilobytes of codec work each: spread an
-    # under-split source across the cluster before the Arrow pass
-    docs = rebalance_for_compute(docs)  # no cache_key (multi-SF callers)
-    return docs.select("doc_id").mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _synth_media(docs, payload)
 
 
 def decode_stub(payload: bytes, dim: int = 8) -> list[float]:

@@ -2019,6 +2019,30 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _image_means(media: DataFrame, *extra: str) -> DataFrame:
+    """The shared body of the image-decode queries: decode every
+    payload, keep the decodable ones, and report dims plus channel means
+    rounded to 6 places (then any ``extra`` feature columns)."""
+    feats = multimodal.decode_image_features(media)
+    return feats.filter(F.col("decode_ok")).select(
+        "media_id",
+        "width",
+        "height",
+        *(F.round(c, 6).alias(c) for c in ("mean_r", "mean_g", "mean_b")),
+        *extra,
+    )
+
+
+def _audio_stats(media: DataFrame) -> DataFrame:
+    """The shared body of the audio-decode queries: the decodable
+    clips' per-clip features."""
+    feats = multimodal.decode_audio_features(media)
+    return feats.filter(F.col("decode_ok")).select(
+        "media_id", "sample_rate", "channels", "n_frames", "duration_s",
+        "mean_abs", "peak",
+    )
+
+
 @register(
     "multimodal_decode",
     oracle="""
@@ -2050,15 +2074,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle derives the same features in pure SQL — a header-offset or
     raster-stride bug in the decoder would shift every mean and hash-fail."""
     media = multimodal.synth_ppm_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
+    return _image_means(media)
 
 
 @register(
@@ -2113,15 +2129,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     and hash-fails. JPEG/video remain honestly import-gated (they need
     external codec libraries)."""
     media = multimodal.synth_png_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
+    return _image_means(media)
 
 
 @register(
@@ -2209,16 +2217,7 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile) — emitting untransformed pixels there would be silently
     wrong, so it stays ValueError by design."""
     media = multimodal.synth_bmp_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "row_moment",
-    )
+    return _image_means(media, "row_moment")
 
 
 @register(
@@ -2305,16 +2304,7 @@ def multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression 6 and non-8-bit depths quarantine via the shared
     decode_ok=false contract."""
     media = multimodal.synth_tiff_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "row_moment",
-    )
+    return _image_means(media, "row_moment")
 
 
 @register(
@@ -2367,15 +2357,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     one remaining JPEG quarantine. Video remains honestly
     import-gated."""
     media = multimodal.synth_jpeg_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
+    return _image_means(media)
 
 
 @register(
@@ -2427,15 +2409,7 @@ def multimodal_decode_jpeg_progressive(
     media = multimodal.synth_jpeg_progressive_media(
         t(spark, sf_dir, "documents")
     )
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
+    return _image_means(media)
 
 
 @register(
@@ -2485,15 +2459,7 @@ def multimodal_decode_jpeg_arithmetic(
     invisibly. Progressive/lossless ARITHMETIC variants (SOF10/SOF11)
     and restart-interval arithmetic streams stay quarantined."""
     media = multimodal.synth_jpeg_arith_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
+    return _image_means(media)
 
 
 @register(
@@ -2540,15 +2506,7 @@ def multimodal_decode_jpeg_arith_progressive(
     media = multimodal.synth_jpeg_arith_prog_media(
         t(spark, sf_dir, "documents")
     )
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
+    return _image_means(media)
 
 
 @register(
@@ -2606,16 +2564,7 @@ def multimodal_decode_jpeg_lossless(
     (non-oracle-able) JPEG quarantine, now with 12-bit DCT (lossless
     12/16-bit decodes here)."""
     media = multimodal.synth_jpeg_lossless_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-        "row_moment",
-    )
+    return _image_means(media, "row_moment")
 
 
 @register(
@@ -2777,16 +2726,7 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     Compressed audio (MP3/AAC/FLAC) remains honestly import-gated, the
     same contract as JPEG/video."""
     media = multimodal.synth_wav_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_audio_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "sample_rate",
-        "channels",
-        "n_frames",
-        "duration_s",
-        "mean_abs",
-        "peak",
-    )
+    return _audio_stats(media)
 
 
 @register(
@@ -5096,15 +5036,7 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate heights); animated GIFs quarantine; the lone-frame
     opaque-RGB read mirrors the PNG alpha-drop semantics."""
     media = multimodal.synth_gif_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_image_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "width",
-        "height",
-        F.round("mean_r", 6).alias("mean_r"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_b", 6).alias("mean_b"),
-    )
+    return _image_means(media)
 
 
 @register(
@@ -5296,16 +5228,7 @@ def multimodal_decode_ulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dependency-free compressed-audio tier, like GIF-LZW for
     images."""
     media = multimodal.synth_ulaw_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_audio_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "sample_rate",
-        "channels",
-        "n_frames",
-        "duration_s",
-        "mean_abs",
-        "peak",
-    )
+    return _audio_stats(media)
 
 
 _IMA_STEPS_SQL = ", ".join(str(v) for v in multimodal._IMA_STEP_TABLE)
@@ -5385,16 +5308,7 @@ def multimodal_decode_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADPCM (multimodal_decode_msadpcm below) stays mono/stereo BY ITS
     SPEC."""
     media = multimodal.synth_adpcm_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_audio_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "sample_rate",
-        "channels",
-        "n_frames",
-        "duration_s",
-        "mean_abs",
-        "peak",
-    )
+    return _audio_stats(media)
 
 
 _MS_COEF1_SQL = ", ".join(str(v) for v in multimodal._MSADPCM_COEF1)
@@ -5486,16 +5400,7 @@ def multimodal_decode_msadpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference-walk unit test instead). Remaining honest quarantines:
     MP3/AAC/FLAC (import-gated), >2-channel ADPCM, float/24-bit PCM."""
     media = multimodal.synth_msadpcm_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_audio_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "sample_rate",
-        "channels",
-        "n_frames",
-        "duration_s",
-        "mean_abs",
-        "peak",
-    )
+    return _audio_stats(media)
 
 
 @register(
@@ -5559,16 +5464,7 @@ def multimodal_decode_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-fails. MP3/AAC stay import-gated: lossy, patent-era DSP — not
     oracle-able the same way."""
     media = multimodal.synth_flac_media(t(spark, sf_dir, "documents"))
-    feats = multimodal.decode_audio_features(media)
-    return feats.filter(F.col("decode_ok")).select(
-        "media_id",
-        "sample_rate",
-        "channels",
-        "n_frames",
-        "duration_s",
-        "mean_abs",
-        "peak",
-    )
+    return _audio_stats(media)
 
 
 # ---------------------------------------------------------------------------

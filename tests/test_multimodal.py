@@ -1,9 +1,6 @@
-"""Multimodal codec tests: the dependency-free PPM (P6) decoder and the
-Arrow-batched decode_image_features path (SURVEY §2 Part C5).
-
-The decoder is the un-stubbed tier of the codec layer: REAL header parse +
-raster extraction. Compressed formats stay behind decode_stub by declared
-design (no codec libraries in this container).
+"""Multimodal codec tests (SURVEY §2 Part C5): every dependency-free
+image, audio and video codec, its quarantine contract, the Arrow-batched
+decode operators, and the synth fixtures' payload bytes and spread policy.
 """
 
 from __future__ import annotations
@@ -107,6 +104,11 @@ def test_resize_identity_and_quarantine(spark):
     assert out[1].mean_g == (1 + 4 + 7 + 10) / 4
     assert out[1].mean_b == (2 + 5 + 8 + 11) / 4
     assert not out[2].resize_ok and out[2].mean_r is None
+    # a target size below 1 is a config error, refused eagerly: it used
+    # to select no pixels and emit resize_ok=true rows with NaN means
+    for out_w, out_h in ((0, 2), (2, 0), (-1, 1)):
+        with pytest.raises(ValueError, match="must be >= 1"):
+            resize_image_features(media, out_w, out_h)
 
 
 def test_resize_downsample_picks_grid_pixels(spark):
@@ -3414,3 +3416,54 @@ def test_flac_vectorized_paths_match_scalar_reference():
         rate, ch, got = parse_flac(payload)
         assert (rate, ch) == (16000, 2)
         assert np.array_equal(got, samples.astype(np.int16))
+
+
+# sha256 over every (media_id, payload) of doc ids 0..419 (420 =
+# lcm(3, 4, 5, 7); every variant cycle of every fixture turns over at
+# least once), and whether the fixture spreads its input with a
+# round-robin exchange. Pins the payload BYTES and the spread policy of
+# every synth fixture; the oracle queries only see decoded features.
+_SYNTH_PINS = {
+    "adpcm": ("e72685fc5101de56d5e2a79b30a6ed554f89ef81d29100991acbe5f0f9f86b18", True),
+    "avi": ("0191b5756a35dedc0213278e1f8db013655906e80faa31ab6c2e67f9ee122be0", True),
+    "bmp": ("757d557c9248a2b7fa45311a72d751f729dc8407710cb1c9e9495f3c71d69b4d", True),
+    "flac": ("0805c82edbec7d154d675deb8b16a85349d359466c2c4384a111fc123e6a04fd", True),
+    "gif_anim": ("d922841bc4b5557e02235e8700fc30d384d29b1b4fb27dd01af9705716e657d5", True),
+    "gif": ("c03aa6bd228b8e1ca61df9aaf876a1da6b3287c6e0d8609573c09f4e819b0bea", True),
+    "jpeg_arith": ("fef96008c6b91dd309421ea4ec084d831c5a2cb1ab927861d40694ff988f3d2f", True),
+    "jpeg_arith_prog": ("d4f3c585feb4b7cb3625add422ddd2b63cac1e40546fa865b050154debcbbe45", True),
+    "jpeg_lossless": ("602ee30b9074631b12c366d98b62b4b3eb05f0734f5ecb529d90bb37e556f91e", True),
+    "jpeg": ("7635cbc0984bdc215eddc5aa2e80a6668425ae1d57d27de35a52b1ae370bc51e", True),
+    "jpeg_progressive": ("7ccd769626cb4914ddaf7bd5073a27b2985f8bcd374796d734aae3c4a7eafbe7", True),
+    "msadpcm": ("5810cef587cb8bf2334e0ba0ce569889ec447a0345266c7617f6a37fb65e74e3", True),
+    "png": ("fc0ce3c06e39df24c0f3c2290158312ce309ff2196014a9d1f0e050846ccd12a", True),
+    "ppm": ("640a6897e2dabf579700ede3863655672d5c678494c4f4ab3457f1db322acb51", False),
+    "tiff": ("0361f4291c19c4f63d39485d3ee7b5e916ad9340257ec804d37a45e2339aa448", True),
+    "ulaw": ("ee980a599d335935c221337d85e3df6fd8a9b32717f8bf580b832cd579e88b69", False),
+    "wav": ("00407a3b907fe09b8181c89fc4ebb468413d8b315ad6309d8ebfbf5c83313838", False),
+}
+
+
+@pytest.mark.parametrize(
+    "fmt",
+    sorted(
+        n[len("synth_") : -len("_media")]
+        for n in dir(M)
+        if n.startswith("synth_") and n.endswith("_media")
+    ),
+)
+def test_synth_payload_bytes_and_spread_pinned(spark, fmt):
+    import hashlib
+    import struct
+
+    digest, spread = _SYNTH_PINS[fmt]  # a new fixture needs its pin
+    docs = spark.range(0, 420, 1, numPartitions=1).withColumnRenamed("id", "doc_id")
+    media = getattr(M, f"synth_{fmt}_media")(docs)
+    plan = media._jdf.queryExecution().executedPlan().toString()
+    assert ("RoundRobinPartitioning" in plan) == spread, plan
+    h = hashlib.sha256()
+    rows = sorted((r.media_id, bytes(r.payload)) for r in media.collect())
+    assert [mid for mid, _ in rows] == list(range(420))
+    for mid, payload in rows:
+        h.update(struct.pack("<qq", mid, len(payload)) + payload)
+    assert h.hexdigest() == digest

@@ -1,14 +1,20 @@
-"""Per-query profiling harness for the r16 optimization round.
+"""Per-query profiling harness: timings and plan dumps.
 
 Usage:  python tools/profile_bench.py [--plans-dir plans/r16] [--suffix before]
                                       [--samples 3] [name ...]
 
-For each named bench query (default: all bench queries):
-  * warms it once at sf0.001 (JVM/codegen),
-  * times `samples` noop-sink runs at $SPARK_GRAFT_SF_DIR (median reported),
-  * writes `.explain("formatted")` to <plans-dir>/<name>_<suffix>.txt.
+For each named query (any registered query; default: all bench queries):
+  * writes `.explain("formatted")` at $SPARK_GRAFT_SF_DIR to
+    <plans-dir>/<name>_<suffix>.txt,
+  * warms it once on the smallest sibling SF (JVM/codegen),
+  * times `samples` noop-sink runs at $SPARK_GRAFT_SF_DIR (median reported).
 
-Prints one JSON line per query: {"name": ..., "median_s": ..., "samples": [...]}.
+Prints one JSON line per timed query:
+{"name": ..., "median_s": ..., "samples": [...]}. `--samples 0` only
+dumps plans: no warm-up, no runs, no JSON line. E.g. a before/after pair
+for one query:
+  python tools/profile_bench.py --plans-dir plans/r17 --suffix before \
+      --samples 0 multimodal_decode_adpcm
 The explain dump is captured from the UNEXECUTED plan (AdaptiveSparkPlan
 initial form) — the same artifact tests/test_plans.py asserts against.
 """
@@ -27,7 +33,10 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_drone_sense_spark.caching import release_caches  # noqa: E402
-from etl_drone_sense_spark.plans.registry import bench_queries  # noqa: E402
+from etl_drone_sense_spark.plans.registry import (  # noqa: E402
+    all_queries,
+    bench_queries,
+)
 from etl_drone_sense_spark.session import get_spark  # noqa: E402
 
 
@@ -62,8 +71,8 @@ def main() -> int:
     spark = get_spark(app_name="etl-drone-sense-spark-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
-    queries = bench_queries()
-    names = args.names or sorted(queries)
+    queries = all_queries()
+    names = args.names or sorted(bench_queries())
     unknown = [n for n in names if n not in queries]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
@@ -89,6 +98,8 @@ def main() -> int:
                 "w", encoding="utf-8",
             ) as f:
                 f.write(buf.getvalue())
+        if not args.samples:
+            continue
         if not args.no_warm and os.path.isdir(warm_dir):
             run(fn, warm_dir)
         samples = []
