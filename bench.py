@@ -355,6 +355,24 @@ def _measure_attempt(spark, queries, sf_dir, sf_val, warm: bool) -> dict:
     }
 
 
+def _host_label(spark) -> dict:
+    """The core count the record was measured with (``cpus``, from the
+    session's ``local[N]`` master; ``local[*]`` counts every core), the
+    host's ``nproc`` and the pyspark version: a timing means nothing
+    without the host it ran on."""
+    import re
+
+    import pyspark
+
+    master = spark.sparkContext.master
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", master)
+    cpus = None
+    if m:
+        n = m.group(1) or "1"
+        cpus = os.cpu_count() if n == "*" else int(n)
+    return {"cpus": cpus, "nproc": os.cpu_count(), "pyspark": pyspark.__version__}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -405,6 +423,7 @@ def main() -> None:
                 file=sys.stderr,
             )
     record["attempt_history"] = history
+    record.update(_host_label(spark))
 
     print(json.dumps(record))
     # The driver records only the TAIL of stdout (exactly the last 2000

@@ -23,7 +23,7 @@ from ..functions import text as TXT
 from ..functions import vectors as V
 from ..operators import merge as M
 from ..operators import similarity
-from ..sources.readers import rebalance_for_compute
+from ..sources.readers import built_once, rebalance_for_compute
 from .registry import register, t
 from .extensions import _seeded_embeddings, _SEEDED_EMB_CTE
 
@@ -117,9 +117,6 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Schema evolution round-trip (field-ID rename/drop over committed tables)
 # ---------------------------------------------------------------------------
 
-_SCHEMA_EVO_TABLES: dict[tuple, str] = {}
-
-
 @register(
     "schema_evolution_read",
     oracle="""
@@ -145,18 +142,12 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the table's own lazy scan — no driver materialization. The evolved
     table is built once per source generation (fingerprint-keyed like the
     stream landing dirs) and re-read lazily afterwards."""
-    import tempfile
-
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _SCHEMA_EVO_TABLES.get(key)
-    if root is None:
+    def build(root):
         base = t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderstatus"
         )
-        root = tempfile.mkdtemp(prefix="sg_schema_evo_")
         TC.commit(base.filter(F.col("o_orderkey") % 3 == 0), root)
         TC.rename_column(root, "o_totalprice", "price")
         TC.commit(
@@ -169,11 +160,10 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append",
         )
         TC.drop_column(root, "o_orderstatus")
-        _SCHEMA_EVO_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "orders", "sg_schema_evo_", build)
     return TC.read_table(spark, root)
-
-
-_FEED_TABLES: dict[tuple, str] = {}
 
 
 @register(
@@ -196,16 +186,11 @@ def table_incremental_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     table with. Built once per source generation (fingerprint-keyed);
     later calls are a lazy sink scan."""
     import os as _os
-    import tempfile
 
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    sink = _FEED_TABLES.get(key)
-    if sink is None:
+    def build(work):
         base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-        work = tempfile.mkdtemp(prefix="sg_feed_")
         src, sink, ckpt = (
             _os.path.join(work, "src"),
             _os.path.join(work, "sink"),
@@ -222,11 +207,10 @@ def table_incremental_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         TC.process_table_appends(spark, src, ckpt, handle)
         assert TC.process_table_appends(spark, src, ckpt, handle) == 0
-        _FEED_TABLES[key] = sink
+        return sink
+
+    sink = built_once(sf_dir, "orders", "sg_feed_", build)
     return TC.read_table(spark, sink)
-
-
-_STREAM_MERGE_TABLES: dict[tuple, str] = {}
 
 
 @register(
@@ -263,16 +247,11 @@ def stream_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit is a pointer swap. Built once per source generation
     (fingerprint-keyed); later calls are a lazy table scan."""
     import os as _os
-    import tempfile
 
     from ..operators.merge import merge_into
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/customer.parquet"))
-    root = _STREAM_MERGE_TABLES.get(key)
-    if root is None:
-        work = tempfile.mkdtemp(prefix="sg_smerge_")
+    def build(work):
         root, feed, ckpt = (
             _os.path.join(work, "tbl"),
             _os.path.join(work, "feed"),
@@ -322,11 +301,12 @@ def stream_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_MERGE_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "customer", "sg_smerge_", build)
     return TC.read_table(spark, root)
 
 
-_BLOOM_TABLES: dict[tuple, str] = {}
 _BLOOM_PROBE_KEYS = (1, 500, 1337, -42)  # -42 = definite miss at every SF
 
 
@@ -352,28 +332,21 @@ def table_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each probe is O(files-that-might-match) opened, O(1)
     manifest read; the table is built once per source generation
     (fingerprint-keyed) and probed lazily afterwards."""
-    import tempfile
-
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _BLOOM_TABLES.get(key)
-    if root is None:
+    def build(root):
         base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-        root = tempfile.mkdtemp(prefix="sg_bloom_")
         TC.commit(
             base.repartition(8, "o_orderkey"), root, bloom_cols=["o_orderkey"]
         )
-        _BLOOM_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "orders", "sg_bloom_", build)
     out = None
     for k in _BLOOM_PROBE_KEYS:
         probe = TC.read_table_bloom_probe(spark, root, "o_orderkey", k)
         out = probe if out is None else out.unionByName(probe)
     return out
-
-
-_INC_AGG_TABLES: dict[tuple, str] = {}
 
 
 @register(
@@ -411,19 +384,14 @@ def table_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fingerprint-keyed); later calls are a lazy scan of the stored
     aggregate."""
     import os as _os
-    import tempfile
 
     from ..operators.incremental_agg import maintain_agg_table
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    agg_root = _INC_AGG_TABLES.get(key)
-    if agg_root is None:
+    def build(work):
         base = t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        work = tempfile.mkdtemp(prefix="sg_incagg_")
         src, agg_root, ckpt = (
             _os.path.join(work, "src"),
             _os.path.join(work, "agg"),
@@ -452,15 +420,14 @@ def table_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         assert drain() > 0
         assert drain() == 0  # idle refresh: aggregate already current
-        _INC_AGG_TABLES[key] = agg_root
+        return agg_root
+
+    agg_root = built_once(sf_dir, "orders", "sg_incagg_", build)
     return TC.read_table(spark, agg_root).select(
         "o_orderstatus",
         "n_orders",
         (F.col("sum_price_q").cast("double") / F.lit(1e6)).alias("sum_price"),
     )
-
-
-_PRUNED_TABLES: dict[tuple, str] = {}
 
 
 @register(
@@ -495,16 +462,12 @@ def table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning geometry — is identical at every SF. Built once per source
     generation (fingerprint-keyed) and re-read lazily afterwards."""
     import math
-    import tempfile
 
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _PRUNED_TABLES.get(key)
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    if root is None:
-        root = tempfile.mkdtemp(prefix="sg_pruned_")
+
+    def build(root):
         TC.commit(
             base.repartitionByRange(8, "o_orderkey").sortWithinPartitions(
                 "o_orderkey"
@@ -512,7 +475,9 @@ def table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             root,
             stats_cols=["o_orderkey"],
         )
-        _PRUNED_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "orders", "sg_pruned_", build)
     # the same scalar the oracle derives: floor(max(o_orderkey)/8)
     hi = int(
         math.floor(base.agg(F.max("o_orderkey")).collect()[0][0] / 8.0)
@@ -523,9 +488,6 @@ def table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"manifest pruning is a no-op: opens {n_open}/{n_total} files"
     )
     return TC.read_table_pruned(spark, root, "o_orderkey", 1, hi)
-
-
-_TIMETRAVEL_TABLES: dict[tuple, str] = {}
 
 
 @register(
@@ -554,16 +516,11 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vacuum) is the only thing that can break a pinned read, exactly as
     in the production lakehouses. Built once per source generation
     (fingerprint-keyed), re-read lazily afterwards."""
-    import tempfile
-
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _TIMETRAVEL_TABLES.get(key)
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    if root is None:
-        root = tempfile.mkdtemp(prefix="sg_travel_")
+
+    def build(root):
         TC.commit(base.filter(F.col("o_orderkey") % 2 == 0), root)
         TC.commit(
             base.filter(F.col("o_orderkey") % 2 == 1), root, mode="append"
@@ -571,16 +528,15 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         TC.commit(
             base.withColumn("o_totalprice", F.col("o_totalprice") + 1.0), root
         )
-        _TIMETRAVEL_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "orders", "sg_travel_", build)
     assert TC.current_version(root) == 3, "expected three committed versions"
     v2, v3 = TC.read_snapshot(root, 2), TC.read_snapshot(root, 3)
     assert set(v2.files) != set(v3.files), (
         "overwrite did not change the file list — time travel untestable"
     )
     return TC.read_table(spark, root, version=2)
-
-
-_CLONE_TABLES: dict[tuple, tuple[str, str]] = {}
 
 
 @register(
@@ -606,17 +562,14 @@ def table_zero_copy_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     the clone root, and the SOURCE is still at v1 with its original
     file list (the clone's evolution never touched it)."""
     import os as _os
-    import tempfile
 
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    roots = _CLONE_TABLES.get(key)
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    if roots is None:
-        src_root = tempfile.mkdtemp(prefix="sg_clone_src_")
-        dst_root = tempfile.mkdtemp(prefix="sg_clone_dst_")
+
+    def build(work):
+        src_root = _os.path.join(work, "src")
+        dst_root = _os.path.join(work, "dst")
         TC.commit(base.filter(F.col("o_orderkey") % 2 == 0), src_root)
         TC.clone_table(src_root, dst_root)
         TC.commit(
@@ -624,8 +577,9 @@ def table_zero_copy_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
             dst_root,
             mode="append",
         )
-        _CLONE_TABLES[key] = (src_root, dst_root)
-    src_root, dst_root = _CLONE_TABLES[key]
+        return src_root, dst_root
+
+    src_root, dst_root = built_once(sf_dir, "orders", "sg_clone_", build)
     # zero-copy: the clone's v1 references no file under its own root
     v1 = TC.read_snapshot(dst_root, 1)
     assert all(
@@ -645,9 +599,6 @@ def table_zero_copy_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source advanced — clone evolution leaked into it"
     )
     return TC.read_table(spark, dst_root)
-
-
-_ROLLBACK_TABLES: dict[tuple, str] = {}
 
 
 @register(
@@ -671,20 +622,17 @@ def table_rollback_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB a rollback is one manifest write — no data movement, no
     copy-back; the bad version's files await vacuum. Built once per
     source generation (fingerprint-keyed)."""
-    import tempfile
-
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _ROLLBACK_TABLES.get(key)
     base = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    if root is None:
-        root = tempfile.mkdtemp(prefix="sg_rollback_")
+
+    def build(root):
         TC.commit(base, root)
         TC.commit(base.withColumn("o_totalprice", F.lit(0.0)), root)
         TC.rollback(root, 1)
-        _ROLLBACK_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "orders", "sg_rollback_", build)
     assert TC.current_version(root) == 3, "rollback must move FORWARD"
     v1, v3 = TC.read_snapshot(root, 1), TC.read_snapshot(root, 3)
     assert list(v3.files) == list(v1.files), "rollback must reuse v1 files"
@@ -2043,9 +1991,6 @@ def sim_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming exact dedup (dropDuplicatesWithinWatermark, hash-oracled)
 # ---------------------------------------------------------------------------
 
-_DEDUP_LANDING: dict[tuple, str] = {}
-
-
 @register(
     "stream_dedup_exact",
     oracle="""
@@ -2072,23 +2017,16 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming import pipeline as SP
 
-    from ..sources.readers import fixture_fingerprint
-
-    # Keyed on the source footer's stat, not the path: the driver
-    # regenerates fixtures between rounds and a stale landing dir would
-    # silently replay the OLD events through the stream.
-    cache_key = (sf_dir, fixture_fingerprint(f"{sf_dir}/events.parquet"))
-    landing = _DEDUP_LANDING.get(cache_key)
     base = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    if landing is None:
-        import tempfile
 
-        landing = tempfile.mkdtemp(prefix="sg_dedup_landing_")
+    def build(landing):
         dups = base.filter(F.col("event_id") % 7 == 0)
         base.unionByName(dups).write.mode("overwrite").parquet(landing)
-        _DEDUP_LANDING[cache_key] = landing
+        return landing
+
+    landing = built_once(sf_dir, "events", "sg_dedup_landing_", build)
     stream = spark.readStream.schema(base.schema).parquet(landing)
     dd = SP.dedup_stream(stream, watermark="30 minutes")
     name = f"reg_dedup_stream_{uuid.uuid4().hex[:8]}"
@@ -2453,9 +2391,6 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_SCD2_TABLES: dict[tuple, str] = {}
-
-
 @register(
     "stream_scd2_apply",
     oracle="""
@@ -2509,15 +2444,10 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     join to close them; the commit is a pointer swap. Built once per
     source generation (fingerprint-keyed); later calls scan the table."""
     import os as _os
-    import tempfile
 
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/events.parquet"))
-    root = _STREAM_SCD2_TABLES.get(key)
-    if root is None:
-        work = tempfile.mkdtemp(prefix="sg_scd2_")
+    def build(work):
         root, feed, ckpt = (
             _os.path.join(work, "tbl"),
             _os.path.join(work, "feed"),
@@ -2608,10 +2538,10 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_SCD2_TABLES[key] = root
-    from ..sources import table_commit as TC2
+        return root
 
-    return TC2.read_table(spark, root).orderBy("user_id", "version")
+    root = built_once(sf_dir, "events", "sg_scd2_", build)
+    return TC.read_table(spark, root).orderBy("user_id", "version")
 
 
 # ---------------------------------------------------------------------------
@@ -3701,9 +3631,6 @@ def stream_domain_budget_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Partition evolution (r14): two physical layouts, one logical table
 # ---------------------------------------------------------------------------
 
-_PART_EVO_TABLES: dict[tuple, str] = {}
-
-
 @register(
     "table_partition_evolution_read",
     oracle="""
@@ -3742,21 +3669,15 @@ def table_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataFram
     carries O(files) stats; the pruned read opens O(selectivity) files.
     Built once per fixture generation (fingerprint-keyed), then a lazy
     pruned scan."""
-    import tempfile
-
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _PART_EVO_TABLES.get(key)
-    if root is None:
+    def build(root):
         base = t(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.month("o_orderdate").cast("int").alias("o_month"),
             "o_orderstatus",
             "o_totalprice",
         )
-        root = tempfile.mkdtemp(prefix="sg_part_evo_")
         # epoch 1: partitioned by month only — 4 coarse range files
         TC.commit(
             base.filter(F.col("o_orderkey") % 2 == 0).repartitionByRange(
@@ -3774,11 +3695,11 @@ def table_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataFram
             mode="append",
             stats_cols=["o_month", "o_orderstatus"],
         )
-        _PART_EVO_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "orders", "sg_part_evo_", build)
     return TC.read_table_pruned(spark, root, "o_month", 3, 5)
 
-
-_LAYOUT_MIG_TABLES: dict[tuple, str] = {}
 
 # ONE oracle string shared VERBATIM by table_layout_migration_read and
 # stream_migrate_apply (r16): a migration interleaved with live streaming
@@ -3817,21 +3738,15 @@ def table_layout_migration_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre/post manifest and row-set checks in tests/test_table_commit.py
     ::test_migrate_layout_*, alongside the pruning-improves and
     vacuum-interplay assertions."""
-    import tempfile
-
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _LAYOUT_MIG_TABLES.get(key)
-    if root is None:
+    def build(root):
         base = t(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.month("o_orderdate").cast("int").alias("o_month"),
             "o_orderstatus",
             "o_totalprice",
         )
-        root = tempfile.mkdtemp(prefix="sg_layout_mig_")
         TC.commit(
             base.filter(F.col("o_orderkey") % 2 == 0).repartitionByRange(
                 4, "o_month"
@@ -3861,11 +3776,10 @@ def table_layout_migration_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             files=epoch1,
             stats_cols=["o_month", "o_orderstatus"],
         )
-        _LAYOUT_MIG_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "orders", "sg_layout_mig_", build)
     return TC.read_table_pruned(spark, root, "o_month", 3, 5)
-
-
-_STREAM_MIG_TABLES: dict[tuple, str] = {}
 
 
 @register(
@@ -3902,21 +3816,16 @@ def stream_migrate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     that safe, not racy. The final pruned read shows the whole table
     uniformly finer-laid."""
     import os as _os
-    import tempfile
 
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _STREAM_MIG_TABLES.get(key)
-    if root is None:
+    def build(work):
         base = t(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.month("o_orderdate").cast("int").alias("o_month"),
             "o_orderstatus",
             "o_totalprice",
         )
-        work = tempfile.mkdtemp(prefix="sg_smig_")
         root, feed, ckpt = (
             _os.path.join(work, "tbl"),
             _os.path.join(work, "feed"),
@@ -3980,5 +3889,7 @@ def stream_migrate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_MIG_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "orders", "sg_smig_", build)
     return TC.read_table_pruned(spark, root, "o_month", 3, 5)

@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 from ..functions.geodesy import bearing_deg, bearing_sql, haversine_m, haversine_sql
 from ..operators.feature_transform import drone_features
 from ..schemas import SENSOR_SCHEMA
+from ..sources.readers import built_once
 from .registry import register, t
 
 # Deterministic telemetry derivation (SQL and Column forms kept in sync).
@@ -200,19 +201,15 @@ def drone_features_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flatten_features(drone_features(synth_drones(spark, sf_dir)))
 
 
-# JSON landing dirs for the streaming twin, one per sf_dir per process.
-_DRONE_LANDING: dict[str, str] = {}
-
-
 def _drone_landing(spark: SparkSession, sf_dir: str) -> str:
-    path = _DRONE_LANDING.get(sf_dir)
-    if path is None:
-        import tempfile
+    """JSON landing dir for the streaming twin, built once per generation
+    of the customer fixture that synth_drones reads."""
 
-        path = tempfile.mkdtemp(prefix="sg_drone_landing_")
+    def build(path):
         synth_drones(spark, sf_dir).write.mode("overwrite").json(path)
-        _DRONE_LANDING[sf_dir] = path
-    return path
+        return path
+
+    return built_once(sf_dir, "customer", "sg_drone_landing_", build)
 
 
 @register(

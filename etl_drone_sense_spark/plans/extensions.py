@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TXT
 from ..functions import vectors as V
 from ..operators import dedup, multimodal, sessionize, similarity
-from ..sources.readers import rebalance_for_compute
+from ..sources.readers import built_once, rebalance_for_compute
 from .registry import dsum, dsum_sql, register, t
 
 # LSH configuration shared by Spark and oracle sides.
@@ -2900,25 +2900,16 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the batch twins above are the oracle-checked equivalents)
 # ---------------------------------------------------------------------------
 
-_STREAM_LANDING: dict[tuple, str] = {}
-
-
 def _events_landing(spark: SparkSession, sf_dir: str) -> str:
     """Events fixture rewritten once per source generation as a
     µs-timestamp landing dir (the NANOS source parquet isn't
     stream-readable with a Timestamp schema). Cache is keyed on the source
     footer's stat so a driver fixture regeneration re-materializes."""
-    from ..sources.readers import fixture_fingerprint
-
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/events.parquet"))
-    path = _STREAM_LANDING.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="sg_events_landing_")
+    def build(path):
         t(spark, sf_dir, "events").write.mode("overwrite").parquet(path)
-        _STREAM_LANDING[key] = path
-    return path
+        return path
+
+    return built_once(sf_dir, "events", "sg_events_landing_", build)
 
 
 @register(
@@ -6239,9 +6230,6 @@ def _kmv_estimates(sketch: DataFrame, K: int) -> DataFrame:
     return per_type.unionByName(inter)
 
 
-_STREAM_KMV_TABLES: dict[tuple, str] = {}
-
-
 @register(
     "stream_sketch_kmv",
     oracle=_KMV_ORACLE,
@@ -6271,17 +6259,12 @@ def stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     state rows; the commit is a pointer swap. Built once per source
     generation (fingerprint-keyed); later calls scan the state table."""
     import os as _os
-    import tempfile
 
     from pyspark.sql.window import Window
 
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/events.parquet"))
-    root = _STREAM_KMV_TABLES.get(key)
-    if root is None:
-        work = tempfile.mkdtemp(prefix="sg_kmv_")
+    def build(work):
         root, feed, ckpt = (
             _os.path.join(work, d) for d in ("tbl", "feed", "ckpt")
         )
@@ -6331,7 +6314,9 @@ def stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_KMV_TABLES[key] = root
+        return root
+
+    root = built_once(sf_dir, "events", "sg_kmv_", build)
     from pyspark.sql.window import Window as W2
 
     state = TC.read_table(spark, root)
@@ -6343,9 +6328,6 @@ def stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rn"),
     ).localCheckpoint(eager=True)
     return _kmv_estimates(sketch, _KMV_K)
-
-
-_STREAM_MINHASH_TABLES: dict[tuple, str] = {}
 
 
 @register(
@@ -6382,16 +6364,11 @@ def stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     append commit (pointer swap; history files untouched). The final
     read is a plain scan of the committed table."""
     import os as _os
-    import tempfile
 
     from ..operators import dedup as D
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/documents.parquet"))
-    root = _STREAM_MINHASH_TABLES.get(key)
-    if root is None:
-        work = tempfile.mkdtemp(prefix="sg_mhidx_")
+    def build(work):
         root, feed, ckpt = (
             _os.path.join(work, d) for d in ("tbl", "feed", "ckpt")
         )
@@ -6434,13 +6411,10 @@ def stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_MINHASH_TABLES[key] = root
-    from ..sources import table_commit as TC2
+        return root
 
-    return TC2.read_table(spark, root).select("doc_id", "band_idx", "bucket")
-
-
-_STREAM_IVF_TABLES: dict[tuple, str] = {}
+    root = built_once(sf_dir, "documents", "sg_mhidx_", build)
+    return TC.read_table(spark, root).select("doc_id", "band_idx", "bucket")
 
 
 @register(
@@ -6488,17 +6462,12 @@ def stream_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a partition-pruned scan (sim_ivf_topk_frozen's docstring), so
     index maintenance cost per batch is O(batch), never O(corpus)."""
     import os as _os
-    import tempfile
 
     from ..operators.similarity import assign_cells
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
     from ._frozen_codebook import FROZEN_CENTROIDS
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    root = _STREAM_IVF_TABLES.get(key)
-    if root is None:
-        work = tempfile.mkdtemp(prefix="sg_ivfidx_")
+    def build(work):
         root, feed, ckpt = (
             _os.path.join(work, d) for d in ("tbl", "feed", "ckpt")
         )
@@ -6539,10 +6508,10 @@ def stream_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_IVF_TABLES[key] = root
-    from ..sources import table_commit as TC3
+        return root
 
-    return TC3.read_table(spark, root).select("vec_id", "cell_id")
+    root = built_once(sf_dir, "embeddings", "sg_ivfidx_", build)
+    return TC.read_table(spark, root).select("vec_id", "cell_id")
 
 
 @register(
@@ -6633,9 +6602,6 @@ _HOLT_ORACLE = f"""
 
 
 
-_STREAM_HOLT_TABLES: dict[tuple, str] = {}
-
-
 @register(
     "stream_holt_trend",
     oracle=_HOLT_ORACLE,
@@ -6668,15 +6634,10 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     pointer swap. Built once per source generation
     (fingerprint-keyed); later calls scan the state table."""
     import os as _os
-    import tempfile
 
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/events.parquet"))
-    root = _STREAM_HOLT_TABLES.get(key)
-    if root is None:
-        work = tempfile.mkdtemp(prefix="sg_holt_")
+    def build(work):
         root, feed, ckpt = (
             _os.path.join(work, d) for d in ("tbl", "feed", "ckpt")
         )
@@ -6772,11 +6733,11 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_HOLT_TABLES[key] = root
-    from ..sources import table_commit as TC3
+        return root
 
+    root = built_once(sf_dir, "events", "sg_holt_", build)
     P, B = _HOLT_P, _HOLT_B
-    state = TC3.read_table(spark, root)
+    state = TC.read_table(spark, root)
     return state.select(
         "user_id",
         "n_events",
@@ -7873,9 +7834,6 @@ def _graph_edges_oracle() -> str:
     WHERE rn <= {GR_KNN}"""
 
 
-_STREAM_GRAPH_TABLES: dict[tuple, str] = {}
-
-
 @register(
     "stream_graph_index",
     oracle=_graph_edges_oracle(),
@@ -7915,19 +7873,36 @@ def stream_graph_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-located join) + a batch-local WindowGroupLimit; the commit is a
     metadata append. Serving reads the trimmed edge relation exactly
     like sim_graph_topk's build output."""
+    from pyspark.sql.window import Window
+
+    from ..sources import table_commit as TC
+
+    w_final = Window.partitionBy("src").orderBy("d2", "dst")
+    return (
+        TC.read_table(spark, _graph_index(spark, sf_dir)[0])
+        .withColumn("rn", F.row_number().over(w_final))
+        .filter(F.col("rn") <= GR_KNN)
+        .select(
+            "src",
+            F.col("rn").cast("int").alias("rank"),
+            "dst",
+            F.col("d2").cast("long").alias("d2"),
+        )
+    )
+
+
+def _graph_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
+    """The (edges, signatures, vectors) table roots stream_graph_index
+    maintains, built once per source generation; sim_graph_topk_served
+    serves from the edges and the vectors."""
     import os as _os
-    import tempfile
 
     from pyspark.sql.window import Window
 
     from ..operators.similarity import sign_band_relation
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    roots = _STREAM_GRAPH_TABLES.get(key)
-    if roots is None:
-        work = tempfile.mkdtemp(prefix="sg_gidx_")
+    def build(work):
         e_root, s_root, v_root, feed, ckpt = (
             _os.path.join(work, d)
             for d in ("edges", "sig", "vec", "feed", "ckpt")
@@ -8029,24 +8004,9 @@ def stream_graph_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        roots = (e_root, s_root, v_root)
-        _STREAM_GRAPH_TABLES[key] = roots
-    from pyspark.sql.window import Window as W2
+        return e_root, s_root, v_root
 
-    from ..sources import table_commit as TC4
-
-    w_final = W2.partitionBy("src").orderBy("d2", "dst")
-    return (
-        TC4.read_table(spark, roots[0])
-        .withColumn("rn", F.row_number().over(w_final))
-        .filter(F.col("rn") <= GR_KNN)
-        .select(
-            "src",
-            F.col("rn").cast("int").alias("rank"),
-            "dst",
-            F.col("d2").cast("long").alias("d2"),
-        )
-    )
+    return built_once(sf_dir, "embeddings", "sg_gidx_", build)
 
 
 @register(
@@ -8073,13 +8033,11 @@ def sim_graph_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~n×k rows bucketed by src at 100 TB; vectors pruned to the beam's
     candidates per hop) — no signature pass, no banded join, cost
     independent of ingest history."""
-    from ..sources import table_commit as TC5
-    from ..sources.readers import fixture_fingerprint
+    from ..sources import table_commit as TC
 
     edges = stream_graph_index(spark, sf_dir).select("src", "dst")
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    v_root = _STREAM_GRAPH_TABLES[key][2]
-    qz = TC5.read_table(spark, v_root).select("vec_id", "qv")
+    v_root = _graph_index(spark, sf_dir)[2]
+    qz = TC.read_table(spark, v_root).select("vec_id", "qv")
     from ..caching import scoped_persist
 
     qz = scoped_persist("sim_graph.qz_served", qz)
@@ -8089,9 +8047,6 @@ def sim_graph_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Hyperplane-LSH family: maintain + serve (r16 — symmetric completion)
 # ---------------------------------------------------------------------------
-
-_STREAM_SLSH_TABLES: dict[tuple, str] = {}
-
 
 def _hp_bands_oracle() -> str:
     """The BATCH sign-band relation over the seeded corpus — the oracle
@@ -8150,16 +8105,11 @@ def stream_signlsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band_idx, band_val), making every downstream bucket probe a
     co-located join."""
     import os as _os
-    import tempfile
 
     from ..operators.similarity import sign_band_relation
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/embeddings.parquet"))
-    root = _STREAM_SLSH_TABLES.get(key)
-    if root is None:
-        work = tempfile.mkdtemp(prefix="sg_slsh_")
+    def build(work):
         root, feed, ckpt = (
             _os.path.join(work, "bands"),
             _os.path.join(work, "feed"),
@@ -8201,10 +8151,10 @@ def stream_signlsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_SLSH_TABLES[key] = root
-    from ..sources import table_commit as TC6
+        return root
 
-    return TC6.read_table(spark, root)
+    root = built_once(sf_dir, "embeddings", "sg_slsh_", build)
+    return TC.read_table(spark, root)
 
 
 @register(

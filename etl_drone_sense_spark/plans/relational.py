@@ -24,7 +24,7 @@ from pyspark.sql.window import Window
 
 from ..caching import scoped_persist
 from ..operators.skew import salted_join
-from ..sources.readers import rebalance_for_compute
+from ..sources.readers import built_once, rebalance_for_compute
 from .registry import davg, davg_sql, dsum, dsum_sql, register, t
 
 # ---------------------------------------------------------------------------
@@ -3080,9 +3080,6 @@ def profile_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUARANTINE_TABLES: dict[tuple, str] = {}
-
-
 @register(
     "governance_quarantine_split",
     oracle="""
@@ -3122,11 +3119,10 @@ def governance_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture (price cap: ~20% of orders; status 'P': ~34%) so the
     certified quarantine is never vacuous. Built once per source
     generation (fingerprint-keyed), then a lazy two-table readback."""
-    import tempfile
+    import os as _os
 
     from ..caching import scoped_persist
     from ..sources import table_commit as TC
-    from ..sources.readers import fixture_fingerprint
 
     v_price = F.col("o_totalprice") > 400000
     v_status = F.col("o_orderstatus") == "P"
@@ -3137,12 +3133,7 @@ def governance_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(""))
     )
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    root = _QUARANTINE_TABLES.get(key)
-    if root is None:
-        import os as _os
-
-        root = tempfile.mkdtemp(prefix="sg_quarantine_")
+    def build(root):
         flagged = scoped_persist(
             "relational.quarantine_flags",
             t(spark, sf_dir, "orders")
@@ -3156,9 +3147,9 @@ def governance_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             flagged.filter(F.col("rules") != ""),
             _os.path.join(root, "quarantine"),
         )
-        _QUARANTINE_TABLES[key] = root
-    import os as _os
+        return root
 
+    root = built_once(sf_dir, "orders", "sg_quarantine_", build)
     clean = TC.read_table(spark, _os.path.join(root, "clean")).select(
         "o_orderkey",
         "o_totalprice",
@@ -3172,9 +3163,6 @@ def governance_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rules",
     )
     return clean.unionByName(quar)
-
-
-_AVRO_LANDINGS: dict[tuple, str] = {}
 
 
 @register(
@@ -3219,14 +3207,10 @@ def _avro_landing(sf_dir: str) -> str:
     """Build (once per source generation) the two-file multi-codec Avro
     landing that avro_scan and stream_avro_scan read."""
     import os as _os
-    import tempfile
 
     from ..sources import avrolite as AL
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    landing = _AVRO_LANDINGS.get(key)
-    if landing is None:
+    def build(landing):
         import glob as _glob
 
         import pyarrow.parquet as pq
@@ -3278,7 +3262,6 @@ def _avro_landing(sf_dir: str) -> str:
                 },
             ],
         }
-        landing = tempfile.mkdtemp(prefix="sg_avro_")
         # deterministic four-file split by key (a length-based split
         # would need the whole slice in memory); one file per codec so
         # the driver row certifies deflate + null + snappy + zstandard
@@ -3295,8 +3278,9 @@ def _avro_landing(sf_dir: str) -> str:
                 codec=codec,
                 block_records=500,
             )
-        _AVRO_LANDINGS[key] = landing
-    return landing
+        return landing
+
+    return built_once(sf_dir, "orders", "sg_avro_", build)
 
 
 @register(
@@ -3329,9 +3313,6 @@ def stream_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-_ARROW_LANDINGS: dict[tuple, str] = {}
-
-
 def _arrow_landing(sf_dir: str) -> str:
     """Build (once per source generation) the three-file multi-codec
     Arrow IPC landing that arrowipc_scan reads: an orders slice split
@@ -3339,19 +3320,14 @@ def _arrow_landing(sf_dir: str) -> str:
     files, 256-row record batches so every file is MULTI-batch and the
     footer-indexed split path always has batch ranges to hand out."""
     import os as _os
-    import tempfile
 
     import duckdb as _duck
 
     from ..sources import arrowipc as AI
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    landing = _ARROW_LANDINGS.get(key)
-    if landing is None:
+    def build(landing):
         src = f"{sf_dir}/orders.parquet"
         glob = f"{src}/*.parquet" if _os.path.isdir(src) else src
-        landing = tempfile.mkdtemp(prefix="sg_arrow_")
         con = _duck.connect()
         codecs = (None, "lz4", "zstd")
         for i, codec in enumerate(codecs):
@@ -3369,8 +3345,9 @@ def _arrow_landing(sf_dir: str) -> str:
                 max_chunksize=256,
             )
         con.close()
-        _ARROW_LANDINGS[key] = landing
-    return landing
+        return landing
+
+    return built_once(sf_dir, "orders", "sg_arrow_", build)
 
 
 @register(
@@ -3442,9 +3419,6 @@ def stream_arrowipc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
-_ARROW_SINK_DIRS: dict[tuple, str] = {}
-
-
 @register(
     "arrowipc_sink_roundtrip",
     oracle="""
@@ -3465,16 +3439,9 @@ def arrowipc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec, or timestamp-unit bug on EITHER side of the roundtrip shifts
     values and hash-fails. Built once per source generation
     (fingerprint-keyed); later calls are a lazy scan."""
-    import os as _os
-    import tempfile
-
     from ..sources import arrowipc as AI
-    from ..sources.readers import fixture_fingerprint
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    out = _ARROW_SINK_DIRS.get(key)
-    if out is None:
-        out = tempfile.mkdtemp(prefix="sg_arrow_sink_")
+    def build(out):
         sliced = (
             t(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % 7 == 4)
@@ -3484,12 +3451,11 @@ def arrowipc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         AI.write_arrow_ipc_records(sliced, out, compression="zstd")
-        _ARROW_SINK_DIRS[key] = out
+        return out
+
+    out = built_once(sf_dir, "orders", "sg_arrow_sink_", build)
     AI.register(spark)
     return spark.read.format("arrowipc").load(out)
-
-
-_AVRO_SINK_DIRS: dict[tuple, str] = {}
 
 
 @register(
@@ -3518,14 +3484,10 @@ def avro_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: the sink is mapPartitionsWithIndex — write
     parallelism = input partitioning, no driver materialization (the
     returned count is the only driver traffic)."""
-    import tempfile
-
     from ..sources import avrolite as AL
-    from ..sources.readers import fixture_fingerprint, read_avro_records
+    from ..sources.readers import read_avro_records
 
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
-    out = _AVRO_SINK_DIRS.get(key)
-    if out is None:
+    def build(out):
         src = (
             t(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % 7 == 3)
@@ -3537,33 +3499,11 @@ def avro_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "o_orderdate",
             )
         )
-        out = tempfile.mkdtemp(prefix="sg_avro_sink_")
         AL.write_avro_records(src, out, codec="snappy")
-        _AVRO_SINK_DIRS[key] = out
+        return out
+
+    out = built_once(sf_dir, "orders", "sg_avro_sink_", build)
     return read_avro_records(spark, out)
-
-
-_CSV_LANDINGS: dict[tuple, str] = {}
-_ORC_LANDINGS: dict[tuple, str] = {}
-# Guards the check-then-write on the landing caches (r10 ADVICE): two
-# concurrent first calls would otherwise each write a full landing (one
-# leaked). Entries for superseded fingerprints are dropped under the
-# same lock — the old dirs are tempfile-owned and reaped with the OS
-# tmpdir, but the map should not grow unboundedly across regenerations.
-import threading as _threading
-
-_LANDINGS_LOCK = _threading.Lock()
-
-
-def _landing_for(cache: dict, key: tuple, build) -> str:
-    with _LANDINGS_LOCK:
-        landing = cache.get(key)
-        if landing is None:
-            landing = build()
-            for stale in [k for k in cache if k[0] == key[0] and k != key]:
-                del cache[stale]  # fingerprint rotated: fixture regenerated
-            cache[key] = landing
-    return landing
 
 
 @register(
@@ -3596,9 +3536,6 @@ def csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture is built once per source generation; later calls are a lazy
     scan with pushed column pruning."""
     import os as _os
-    import tempfile
-
-    from ..sources.readers import fixture_fingerprint
 
     cols = [
         "o_orderkey",
@@ -3609,10 +3546,9 @@ def csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     ]
     ts_fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
 
-    def _build_csv() -> str:
-        landing = _os.path.join(tempfile.mkdtemp(prefix="sg_csv_"), "orders")
+    def build(work: str) -> str:
+        landing = _os.path.join(work, "orders")
         (
             t(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % 11 == 4)
@@ -3623,7 +3559,7 @@ def csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return landing
 
-    landing = _landing_for(_CSV_LANDINGS, key, _build_csv)
+    landing = built_once(sf_dir, "orders", "sg_csv_", build)
     schema = (
         "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, "
         "o_orderstatus STRING, o_orderdate TIMESTAMP, o_orderpriority STRING"
@@ -3662,9 +3598,6 @@ def orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     on) — at 100 TB this is the same scan class as parquet. Fixture
     built once per source generation; later calls are a lazy scan."""
     import os as _os
-    import tempfile
-
-    from ..sources.readers import fixture_fingerprint
 
     cols = [
         "o_orderkey",
@@ -3674,10 +3607,9 @@ def orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         "o_orderpriority",
     ]
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
 
-    def _build_orc() -> str:
-        landing = _os.path.join(tempfile.mkdtemp(prefix="sg_orc_"), "orders")
+    def build(work: str) -> str:
+        landing = _os.path.join(work, "orders")
         (
             t(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % 11 == 7)
@@ -3686,11 +3618,8 @@ def orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return landing
 
-    landing = _landing_for(_ORC_LANDINGS, key, _build_orc)
+    landing = built_once(sf_dir, "orders", "sg_orc_", build)
     return spark.read.orc(landing).select(*cols)
-
-
-_XML_LANDINGS: dict[tuple, str] = {}
 
 
 @register(
@@ -3720,9 +3649,6 @@ def xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass. Fixture built once per source generation under the shared
     landing lock."""
     import os as _os
-    import tempfile
-
-    from ..sources.readers import fixture_fingerprint
 
     cols = [
         "o_orderkey",
@@ -3733,10 +3659,9 @@ def xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
     ]
     ts_fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    key = (sf_dir, fixture_fingerprint(f"{sf_dir}/orders.parquet"))
 
-    def _build_xml() -> str:
-        landing = _os.path.join(tempfile.mkdtemp(prefix="sg_xml_"), "orders")
+    def build(work: str) -> str:
+        landing = _os.path.join(work, "orders")
         (
             t(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % 11 == 9)
@@ -3749,7 +3674,7 @@ def xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return landing
 
-    landing = _landing_for(_XML_LANDINGS, key, _build_xml)
+    landing = built_once(sf_dir, "orders", "sg_xml_", build)
     schema = (
         "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, "
         "o_orderstatus STRING, o_orderdate TIMESTAMP, o_orderpriority STRING"

@@ -15,6 +15,8 @@ Decode modes mirror the reference's decode-or-throw (task.ts:119-121):
 from __future__ import annotations
 
 import json
+import tempfile
+import threading
 import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,18 +45,54 @@ def fixture_fingerprint(path: str) -> tuple[str, int, int]:
     The driver regenerates /root/testdata between rounds — any cache keyed
     on the PATH alone would serve stale decisions (ts unit, derived landing
     dirs) across a regeneration and corrupt every downstream timestamp by
-    1000×. Keying on the footer's stat makes every such cache self-heal."""
+    1000×. Keying on the footer's stat makes every such cache self-heal.
+    ``built_once`` below is the one place fixture-derived builds (tables,
+    landing and sink dirs) are keyed on it."""
     import os
 
     probe = path
     if os.path.isdir(path):
         probe = next(
-            os.path.join(path, f)
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
+            (
+                os.path.join(path, f)
+                for f in sorted(os.listdir(path))
+                if f.endswith(".parquet")
+            ),
+            None,
         )
+        if probe is None:
+            raise FileNotFoundError(f"no .parquet file under {path}")
     st = os.stat(probe)
     return (probe, st.st_mtime_ns, st.st_size)
+
+
+_BUILT: dict[tuple, object] = {}
+# Guards the check-then-build on _BUILT (r10 ADVICE): two concurrent first
+# calls would otherwise each write a full landing (one leaked). One lock
+# is enough while no build calls another memoized build; if one ever must,
+# the fix is a per-key lock, not a re-entrant one (foreachBatch callbacks
+# run on another driver thread).
+_BUILT_LOCK = threading.Lock()
+
+
+def built_once(sf_dir: str, table: str, prefix: str, build):
+    """What ``build(work)`` returns, ``work`` being a fresh
+    ``tempfile.mkdtemp(prefix=prefix)``, built once per generation of the
+    fixture ``{sf_dir}/{table}.parquet``: a committed table root, a landing
+    or sink dir, or a tuple of them. ``prefix`` identifies the calling
+    site. Keyed on ``sf_dir`` as given plus the fixture's footer stat, so
+    a rewrite builds again and a hard-linked copy at a new ``sf_dir``
+    builds again too. A superseded entry of the same ``(prefix, sf_dir)``
+    is dropped; its dir is tempfile-owned and reaped with the OS tmpdir.
+    A ``build`` that raises stores nothing."""
+    key = (prefix, sf_dir, fixture_fingerprint(f"{sf_dir}/{table}.parquet"))
+    with _BUILT_LOCK:
+        if key not in _BUILT:
+            value = build(tempfile.mkdtemp(prefix=prefix))
+            for stale in [k for k in _BUILT if k[:2] == key[:2]]:
+                del _BUILT[stale]  # fingerprint rotated: fixture regenerated
+            _BUILT[key] = value
+        return _BUILT[key]
 
 
 _TS_UNIT_CACHE: dict[tuple[str, int, int], str] = {}

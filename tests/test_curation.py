@@ -276,11 +276,9 @@ def test_stream_dedup_restores_original_relation(spark, sf_dir):
     """The landing holds events + exact copies of every 7th event; the
     streaming dedup must emit exactly one row per event_id — and the
     injection must be real (landing strictly larger than the fixture)."""
-    from etl_drone_sense_spark.plans.curation import (
-        _DEDUP_LANDING,
-        stream_dedup_exact,
-    )
+    from etl_drone_sense_spark.plans.curation import stream_dedup_exact
     from etl_drone_sense_spark.sources.readers import (
+        _BUILT,
         fixture_fingerprint,
         read_table,
     )
@@ -289,8 +287,12 @@ def test_stream_dedup_restores_original_relation(spark, sf_dir):
     n_events = read_table(spark, sf_dir, "events").count()
     assert out.count() == n_events
     assert out.select("event_id").distinct().count() == n_events
-    cache_key = (sf_dir, fixture_fingerprint(f"{sf_dir}/events.parquet"))
-    landing = spark.read.parquet(_DEDUP_LANDING[cache_key])
+    cache_key = (
+        "sg_dedup_landing_",
+        sf_dir,
+        fixture_fingerprint(f"{sf_dir}/events.parquet"),
+    )
+    landing = spark.read.parquet(_BUILT[cache_key])
     assert landing.count() > n_events
 
 

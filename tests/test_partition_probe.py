@@ -71,3 +71,16 @@ def test_fixture_fingerprint_changes_on_rewrite(spark, tmp_path):
     fp2 = R.fixture_fingerprint(p)
     assert fp1 != fp2
     assert R.fixture_fingerprint(p) == fp2  # stable while file unchanged
+
+
+def test_fixture_fingerprint_names_a_table_dir_without_parquet(tmp_path):
+    """A table dir that holds no .parquet file is a missing fixture: the
+    probe raises FileNotFoundError naming the dir, not a bare
+    StopIteration (which a generator caller would turn into RuntimeError)."""
+    import pytest
+
+    p = tmp_path / "t.parquet"
+    p.mkdir()
+    (p / "_SUCCESS").write_text("")
+    with pytest.raises(FileNotFoundError, match="t.parquet"):
+        R.fixture_fingerprint(str(p))

@@ -748,6 +748,29 @@ def test_anomaly_mad_shuffles_only_on_user(spark, sf_dir):
     assert all(p.strip().startswith("user_id") for p in parts), parts
 
 
+def test_anomaly_mad_shuffles_user_once_when_executed(spark, sf_dir):
+    """The static plan shows the same user_id repartition subtree many
+    times; run to completion, AQE exchange reuse must leave exactly ONE
+    materialized user_id shuffle in the final plan, every other
+    occurrence a ReusedExchange of it."""
+    import re
+
+    df = get("events_anomaly_mad").fn(spark, sf_dir)
+    df.collect()
+    aqe = df._jdf.queryExecution().executedPlan()
+    assert aqe.isFinalPlan()
+    final = aqe.executedPlan().toString()
+    shuffled = re.findall(
+        r"(?m)^[\s:|+\-]*Exchange hashpartitioning\(([^,)]+)", final
+    )
+    reused = re.findall(
+        r"(?m)^[\s:|+\-]*ReusedExchange .*?Exchange hashpartitioning\(([^,)]+)",
+        final,
+    )
+    assert len(shuffled) == 1 and shuffled[0].startswith("user_id"), final
+    assert reused and all(k.startswith("user_id") for k in reused), final
+
+
 def test_ols_is_single_aggregation_pass(spark, sf_dir):
     """The regression fit is ONE partial-aggregable shuffle: moments
     aggregate with map-side combine, coefficients are a projection."""

@@ -108,6 +108,22 @@ def test_stream_drone_features_matches_batch(spark, sf_dir, tmp_path):
     assert _sorted_rows(got, cols) == _sorted_rows(expected, cols)
 
 
+def test_stream_drone_landing_follows_fixture_rewrite(spark, sf_dir, tmp_path):
+    """The registered streaming twin's JSON landing is derived from
+    customer.parquet: rewriting that fixture in the same process must
+    re-land it, not replay the previous generation's drones."""
+    import pyarrow.parquet as pq
+
+    from etl_drone_sense_spark.plans.drone import stream_drone_features_flat
+
+    customer = pq.read_table(f"{sf_dir}/customer.parquet")
+    src = str(tmp_path / "sf")
+    (tmp_path / "sf").mkdir()
+    for n in (20, 35):
+        pq.write_table(customer.slice(0, n), f"{src}/customer.parquet")
+        assert stream_drone_features_flat(spark, src).count() == n
+
+
 def test_watermark_drops_late_data(spark, tmp_path):
     """Append-mode windowed agg with a 10-minute watermark across two
     micro-batches (maxFilesPerTrigger=1): batch 2 delivers an event far
@@ -526,11 +542,11 @@ def test_stream_scd2_apply_is_multi_batch_and_idempotent(spark, sf_dir):
     the final snapshot must carry the second chunk's txn watermark so a
     replayed batch would no-op."""
     from etl_drone_sense_spark.plans.curation import stream_scd2_apply
-    from etl_drone_sense_spark.plans.curation import _STREAM_SCD2_TABLES
     from etl_drone_sense_spark.sources import table_commit as TC
+    from etl_drone_sense_spark.sources.readers import _BUILT
 
     stream_scd2_apply(spark, sf_dir).collect()  # builds (or reuses) the table
-    (root,) = [v for k, v in _STREAM_SCD2_TABLES.items() if k[0] == sf_dir]
+    (root,) = [v for k, v in _BUILT.items() if k[:2] == ("sg_scd2_", sf_dir)]
     version = TC.current_version(root)
     ops = []
     for v in range(1, version + 1):
@@ -697,14 +713,12 @@ def test_ivf_index_stream_is_multi_batch_and_idempotent(spark, sf_dir):
     drained chunk (4 — AvailableNow must not have coalesced them) and
     the final snapshot's txn watermark makes any replayed batch a
     no-op."""
-    from etl_drone_sense_spark.plans.extensions import (
-        _STREAM_IVF_TABLES,
-        stream_ivf_index,
-    )
+    from etl_drone_sense_spark.plans.extensions import stream_ivf_index
     from etl_drone_sense_spark.sources import table_commit as TC
+    from etl_drone_sense_spark.sources.readers import _BUILT
 
     stream_ivf_index(spark, sf_dir).collect()
-    (root,) = [v for k, v in _STREAM_IVF_TABLES.items() if k[0] == sf_dir]
+    (root,) = [v for k, v in _BUILT.items() if k[:2] == ("sg_ivfidx_", sf_dir)]
     version = TC.current_version(root)
     ops = [
         TC.read_snapshot(root, v).operation for v in range(1, version + 1)
@@ -995,14 +1009,12 @@ def test_stream_migrate_apply_is_mid_stream_and_idempotent(spark, sf_dir):
     stream), the txn watermark at the last batch, and no coarse-epoch
     file left — so a replayed migration step finds nothing to rewrite
     and skips (idempotent alongside the replayed append's txn no-op)."""
-    from etl_drone_sense_spark.plans.curation import (
-        _STREAM_MIG_TABLES,
-        stream_migrate_apply,
-    )
+    from etl_drone_sense_spark.plans.curation import stream_migrate_apply
     from etl_drone_sense_spark.sources import table_commit as TC
+    from etl_drone_sense_spark.sources.readers import _BUILT
 
     stream_migrate_apply(spark, sf_dir).collect()
-    (root,) = [v for k, v in _STREAM_MIG_TABLES.items() if k[0] == sf_dir]
+    (root,) = [v for k, v in _BUILT.items() if k[:2] == ("sg_smig_", sf_dir)]
     version = TC.current_version(root)
     ops = [
         TC.read_snapshot(root, v).operation for v in range(1, version + 1)
