@@ -24,6 +24,7 @@ from ..functions import vectors as V
 from ..operators import merge as M
 from ..operators import similarity
 from ..sources.readers import built_once, rebalance_for_compute
+from ..streaming import pipeline as SP
 from .registry import register, t
 from .extensions import _seeded_embeddings, _SEEDED_EMB_CTE
 
@@ -252,11 +253,7 @@ def stream_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import table_commit as TC
 
     def build(work):
-        root, feed, ckpt = (
-            _os.path.join(work, "tbl"),
-            _os.path.join(work, "feed"),
-            _os.path.join(work, "ckpt"),
-        )
+        root = _os.path.join(work, "tbl")
         cust = t(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
         TC.commit(cust.filter(F.col("c_custkey") % 3 == 0), root)
 
@@ -273,8 +270,6 @@ def stream_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(None).cast("double").alias("c_acctbal"),
             )
         )
-        batch1.coalesce(1).write.mode("append").parquet(feed)
-        batch2.coalesce(1).write.mode("append").parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             tgt = TC.read_table(bdf.sparkSession, root)
@@ -289,18 +284,7 @@ def stream_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn=("stream_merge", batch_id),
             )
 
-        stream = (
-            spark.readStream.schema("c_custkey bigint, op string, c_acctbal double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        SP.replay([batch1, batch2], work, apply_batch)
         return root
 
     root = built_once(sf_dir, "customer", "sg_smerge_", build)
@@ -2015,8 +1999,6 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark advance and none can be dropped as late."""
     import uuid
 
-    from ..streaming import pipeline as SP
-
     base = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -2030,8 +2012,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(base.schema).parquet(landing)
     dd = SP.dedup_stream(stream, watermark="30 minutes")
     name = f"reg_dedup_stream_{uuid.uuid4().hex[:8]}"
-    q = SP.run_to_memory(dd, name, output_mode="append")
-    q.awaitTermination()
+    SP.run_to_memory(dd, name, output_mode="append")
     return spark.table(name)
 
 
@@ -2097,17 +2078,12 @@ def _stream_view_click_join(
     import os
     import tempfile
 
-    from ..streaming import pipeline as SP
-
     base = tempfile.mkdtemp(prefix="sg_ssjo_")
     cdir, vdir, ckpt, out = (
         os.path.join(base, d) for d in ("clicks", "views", "ckpt", "out")
     )
     ev = t(spark, sf_dir, "events")
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try:
+    with SP.scoped_conf(spark, "spark.sql.shuffle.partitions", SP.STATE_SHARDS):
         ev.filter(F.col("event_type") == "click").coalesce(1).write.mode(
             "overwrite"
         ).parquet(cdir)
@@ -2132,8 +2108,6 @@ def _stream_view_click_join(
             how,
         ).select(*cols)
         SP.run_available_now(j, ckpt, out)
-    finally:
-        spark.conf.set(key, prev)
     return spark.read.parquet(out)
 
 
@@ -2221,14 +2195,12 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = the final totals."""
     import uuid
 
-    from ..streaming import pipeline as SP
     from .extensions import _events_landing
 
     landing = _events_landing(spark, sf_dir)
     stream = SP.running_totals_stateful(SP.stream_events(spark, landing))
     name = f"reg_totals_stream_{uuid.uuid4().hex[:8]}"
-    q = SP.run_to_memory(stream, name, output_mode="update")
-    q.awaitTermination()
+    SP.run_to_memory(stream, name, output_mode="update")
     return spark.table(name)
 
 
@@ -2267,7 +2239,6 @@ def stream_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     HDFS-backed provider rejects) is scoped to this query and restored."""
     import uuid
 
-    from ..streaming import pipeline as SP
     from .extensions import _events_landing
 
     if not SP.tws_available(spark):
@@ -2277,19 +2248,12 @@ def stream_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(SPARK_GRAFT_PROTOBUF_PATH)"
         )
     landing = _events_landing(spark, sf_dir)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
+    name = f"reg_tws_stream_{uuid.uuid4().hex[:8]}"
+    with SP.scoped_conf(
+        spark, "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
+    ):
         stream = SP.running_totals_tws(SP.stream_events(spark, landing))
-        name = f"reg_tws_stream_{uuid.uuid4().hex[:8]}"
-        q = SP.run_to_memory(stream, name, output_mode="update")
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+        SP.run_to_memory(stream, name, output_mode="update")
     return spark.table(name)
 
 
@@ -2313,7 +2277,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming queries."""
     import uuid
 
-    from ..streaming import pipeline as SP
     from .extensions import _events_landing
 
     landing = _events_landing(spark, sf_dir)
@@ -2325,8 +2288,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "c_mktsegment", "c_name"
     )
     name = f"reg_enrich_stream_{uuid.uuid4().hex[:8]}"
-    q = SP.run_to_memory(enriched, name, output_mode="append")
-    q.awaitTermination()
+    SP.run_to_memory(enriched, name, output_mode="append")
     return spark.table(name)
 
 
@@ -2420,14 +2382,14 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING type-2 SCD maintenance — the dimension-history
     complement of stream_merge_apply's type-1 latest-state apply: a
     time-chunked change stream (purchase events split at an event-time
-    cutoff, sequential appends so mod-time draining order = event-time
-    order, ``maxFilesPerTrigger=1``) folds into a committed history
-    table batch by batch. Each micro-batch: dedupe per (user, ts),
-    suppress changes equal to the user's CURRENT tier (cross-batch
-    suppression — the lag chain continues across the boundary), CLOSE
-    the open row at the first kept change's timestamp, append new
-    versions numbered from the user's current version, and commit with a
-    txn watermark so a retried batch is a no-op.
+    cutoff, replayed in event-time order by streaming/pipeline.replay)
+    folds into a committed history table batch by batch. Each
+    micro-batch: dedupe per (user, ts), suppress changes equal to the
+    user's CURRENT tier (cross-batch suppression — the lag chain
+    continues across the boundary), CLOSE the open row at the first
+    kept change's timestamp, append new versions numbered from the
+    user's current version, and commit with a txn watermark so a
+    retried batch is a no-op.
 
     The ORACLE IS THE BATCH BUILD over all changes at once (the same
     construction as scd2_point_in_time's history CTE): the hash gate is
@@ -2448,11 +2410,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import table_commit as TC
 
     def build(work):
-        root, feed, ckpt = (
-            _os.path.join(work, "tbl"),
-            _os.path.join(work, "feed"),
-            _os.path.join(work, "ckpt"),
-        )
+        root = _os.path.join(work, "tbl")
         hist_schema = (
             "user_id bigint, tier double, valid_from timestamp, "
             "valid_to timestamp, version bigint"
@@ -2468,14 +2426,6 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         cutoff = changes.agg(
             F.min("ts") + (F.max("ts") - F.min("ts")) / 2
         ).first()[0]
-        # sequential appends: mod-time order = event-time order, the
-        # append-only landing convention the file source drains in
-        changes.filter(F.col("ts") < cutoff).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-        changes.filter(F.col("ts") >= cutoff).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             sp = bdf.sparkSession
@@ -2526,18 +2476,14 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn=("stream_scd2", batch_id),
             )
 
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, tier double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        SP.replay(
+            [
+                changes.filter(F.col("ts") < cutoff),
+                changes.filter(F.col("ts") >= cutoff),
+            ],
+            work,
+            apply_batch,
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return root
 
     root = built_once(sf_dir, "events", "sg_scd2_", build)
@@ -3561,10 +3507,10 @@ def stream_domain_budget_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState) and the cutoff is exact instead of
     in-expectation.
 
-    The corpus drains in four micro-batches (doc_id % 4 chunk files ×
-    maxFilesPerTrigger=1 — the feed's appends are seconds apart, so the
-    file source's mtime order IS the chunk order), giving the arrival
-    order (doc_id % 4, doc_id); the oracle restates the whole run as a
+    The corpus drains in four micro-batches (doc_id % 4 chunk files
+    landed in order by streaming/pipeline.land_in_order ×
+    maxFilesPerTrigger=1), giving the arrival order
+    (doc_id % 4, doc_id); the oracle restates the whole run as a
     window cumsum over exactly that order, so the hash gate certifies
     the state carrying across micro-batches (at sf0.01 every fixture
     domain's cutoff lands mid-stream — in batch 2 or 3 — so acceptance
@@ -3575,29 +3521,11 @@ def stream_domain_budget_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from ..streaming import pipeline as SP
-
-    work = tempfile.mkdtemp(prefix="sg_dombudget_")
-    feed = _os.path.join(work, "feed")
+    feed = _os.path.join(tempfile.mkdtemp(prefix="sg_dombudget_"), "feed")
     docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    # FileStreamSource orders files by mtime; the four appends are
-    # back-to-back and Hadoop mtimes are ms-granular, so on a
-    # coarse-mtime filesystem a tie would fall back to path order
-    # (random part-file UUIDs) and diverge from the oracle's
-    # (doc_id % 4, doc_id) arrival order. Stamp each chunk's files with
-    # an explicit strictly-increasing mtime so replay order is the
-    # write order by construction (r15, ADVICE).
-    seen: set = set()
-    base = _os.stat(work).st_mtime
-    for i in range(4):
-        docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-        for f in _os.listdir(feed):
-            p = _os.path.join(feed, f)
-            if f.endswith(".parquet") and p not in seen:
-                _os.utime(p, (base + i, base + i))
-                seen.add(p)
+    SP.land_in_order(
+        [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)], feed
+    )
     stream = (
         spark.readStream.schema("doc_id bigint, source string, text string")
         .option("maxFilesPerTrigger", 1)
@@ -3610,20 +3538,8 @@ def stream_domain_budget_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = SP.domain_budget_cutoff(stream, budget=_DOMAIN_BUDGET_TOKENS)
     name = f"reg_dombudget_{uuid.uuid4().hex[:8]}"
-    # The state store shards at spark.sql.shuffle.partitions; a plain
-    # session's 200 shards x 4 micro-batches is ~800 near-empty state
-    # tasks for a |domains|-cardinality key space. Scope a narrow width
-    # to this query's planning (set + restore around the blocking
-    # drain — the stream_running_totals_tws provider-conf pattern);
-    # the checkpoint pins the shard count for the query's lifetime.
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try:
-        q = SP.run_to_memory(out, name, output_mode="update")
-        q.awaitTermination()
-    finally:
-        spark.conf.set(key, prev)
+    with SP.scoped_conf(spark, "spark.sql.shuffle.partitions", SP.STATE_SHARDS):
+        SP.run_to_memory(out, name, output_mode="update")
     return spark.table(name)
 
 
@@ -3826,11 +3742,7 @@ def stream_migrate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderstatus",
             "o_totalprice",
         )
-        root, feed, ckpt = (
-            _os.path.join(work, "tbl"),
-            _os.path.join(work, "feed"),
-            _os.path.join(work, "ckpt"),
-        )
+        root = _os.path.join(work, "tbl")
         # Epoch 1: a quarter of orders under the COARSE spec.
         TC.commit(
             base.filter(F.col("o_orderkey") % 4 == 0).repartitionByRange(
@@ -3839,10 +3751,6 @@ def stream_migrate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             root,
             stats_cols=["o_month"],
         )
-        for i in (1, 2, 3):
-            base.filter(F.col("o_orderkey") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             sp = bdf.sparkSession
@@ -3874,21 +3782,11 @@ def stream_migrate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                         stats_cols=["o_month", "o_orderstatus"],
                     )
 
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey bigint, o_month int, "
-                "o_orderstatus string, o_totalprice double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        SP.replay(
+            [base.filter(F.col("o_orderkey") % 4 == i) for i in (1, 2, 3)],
+            work,
+            apply_batch,
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return root
 
     root = built_once(sf_dir, "orders", "sg_smig_", build)

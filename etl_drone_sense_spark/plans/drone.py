@@ -232,8 +232,7 @@ def stream_drone_features_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = _drone_landing(spark, sf_dir)
     flat = flatten_features(stream_drone_features(spark, landing))
     name = f"reg_drone_stream_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(flat, name, output_mode="append")
-    q.awaitTermination()
+    run_to_memory(flat, name, output_mode="append")
     return spark.table(name)
 
 

@@ -17,6 +17,7 @@ from ..functions import text as TXT
 from ..functions import vectors as V
 from ..operators import dedup, multimodal, sessionize, similarity
 from ..sources.readers import built_once, rebalance_for_compute
+from ..streaming import pipeline as SP
 from .registry import dsum, dsum_sql, register, t
 
 # LSH configuration shared by Spark and oracle sides.
@@ -1922,13 +1923,10 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash check of streaming session semantics, not just a rows count."""
     import uuid
 
-    from ..streaming import pipeline as SP
-
     landing = _events_landing(spark, sf_dir)
     stream = SP.session_counts(SP.stream_events(spark, landing))
     name = f"reg_sess_stream_{uuid.uuid4().hex[:8]}"
-    q = SP.run_to_memory(stream, name, output_mode="complete")
-    q.awaitTermination()
+    SP.run_to_memory(stream, name, output_mode="complete")
     return spark.table(name)
 
 
@@ -2950,8 +2948,6 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from ..streaming import pipeline as SP
-
     base = tempfile.mkdtemp(prefix="sg_tumble_replay_")
     landing, ckpt = os.path.join(base, "landing"), os.path.join(base, "ckpt")
     ev = t(spark, sf_dir, "events")
@@ -2960,10 +2956,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_batch_a = (F.col("event_id") % 2 == 1) & (F.col("ts") <= F.lit(tcut))
     name = f"reg_stream_{uuid.uuid4().hex[:8]}"
 
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try:
+    with SP.scoped_conf(spark, "spark.sql.shuffle.partitions", SP.STATE_SHARDS):
         ev.filter(in_batch_a).coalesce(1).write.mode("overwrite").parquet(
             landing
         )
@@ -2983,8 +2976,6 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain()
         ev.filter(~in_batch_a).coalesce(1).write.mode("append").parquet(landing)
         drain()
-    finally:
-        spark.conf.set(key, prev)
     return spark.table(name)
 
 
@@ -3053,8 +3044,6 @@ def stream_watermark_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from ..streaming import pipeline as SP
-
     base = tempfile.mkdtemp(prefix="sg_wm_replay_")
     landing, ckpt, out = (
         os.path.join(base, d) for d in ("landing", "ckpt", "out")
@@ -3064,14 +3053,7 @@ def stream_watermark_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     tcut = mx - datetime.timedelta(hours=2)
     in_batch_a = (F.col("event_id") % 2 == 1) & (F.col("ts") <= F.lit(tcut))
 
-    # State-store partition count is frozen into the checkpoint at first
-    # query start; the session default (often 200) means 200 tiny state
-    # files per micro-batch for a bounded fixture replay. Scope it down
-    # for the two runs, then restore.
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try:
+    with SP.scoped_conf(spark, "spark.sql.shuffle.partitions", SP.STATE_SHARDS):
         ev.filter(in_batch_a).coalesce(1).write.mode("overwrite").parquet(
             landing
         )
@@ -3082,8 +3064,6 @@ def stream_watermark_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
         SP.run_available_now(
             SP.windowed_counts(SP.stream_events(spark, landing)), ckpt, out
         )
-    finally:
-        spark.conf.set(key, prev)
     return spark.read.parquet(out).select(
         "window_start", "event_type", "n_events", "sum_value"
     )
@@ -3130,8 +3110,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from ..streaming import pipeline as SP
-
     base = tempfile.mkdtemp(prefix="sg_ssj_")
     cdir, vdir, ckpt, out = (
         os.path.join(base, d) for d in ("clicks", "views", "ckpt", "out")
@@ -3143,21 +3121,13 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts").cast("double") - F.lit(lo).cast("double"))
         / F.lit(16 * 86400.0)
     )
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try:
+    with SP.scoped_conf(spark, "spark.sql.shuffle.partitions", SP.STATE_SHARDS):
         for side, d in (("click", cdir), ("view", vdir)):
             rows = ev.filter(F.col("event_type") == side).withColumn(
                 "_b", bucket
             )
-            for i in range(n_chunks):
-                # sequential appends → mod-time order matches event-time
-                # order, the append-only landing convention the file
-                # source drains in
-                rows.filter(F.col("_b") == i).drop("_b").coalesce(
-                    1
-                ).write.mode("append").parquet(d)
+            chunks = [rows.filter(F.col("_b") == i) for i in range(n_chunks)]
+            SP.land_in_order([c.drop("_b") for c in chunks], d)
         SP.run_available_now(
             SP.attribution_join(
                 SP.stream_events(spark, cdir, max_files_per_trigger=1),
@@ -3166,8 +3136,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ckpt,
             out,
         )
-    finally:
-        spark.conf.set(key, prev)
     return spark.read.parquet(out)
 
 
@@ -6265,21 +6233,13 @@ def stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import table_commit as TC
 
     def build(work):
-        root, feed, ckpt = (
-            _os.path.join(work, d) for d in ("tbl", "feed", "ckpt")
-        )
+        root = _os.path.join(work, "tbl")
         TC.commit(
             spark.createDataFrame([], "event_type string, h bigint"), root
         )
         ev = t(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type"
         )
-        # four arbitrary chunks (set semantics — order is irrelevant to a
-        # sketch, unlike the SCD2 feed's time-cutoff chunks)
-        for i in range(4):
-            ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             sp = bdf.sparkSession
@@ -6302,18 +6262,13 @@ def stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn=("stream_kmv", batch_id),
             )
 
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        # four arbitrary chunks (set semantics — order is irrelevant to a
+        # sketch, unlike the SCD2 feed's time-cutoff chunks)
+        SP.replay(
+            [ev.filter(F.col("event_id") % 4 == i) for i in range(4)],
+            work,
+            apply_batch,
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return root
 
     root = built_once(sf_dir, "events", "sg_kmv_", build)
@@ -6369,9 +6324,7 @@ def stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import table_commit as TC
 
     def build(work):
-        root, feed, ckpt = (
-            _os.path.join(work, d) for d in ("tbl", "feed", "ckpt")
-        )
+        root = _os.path.join(work, "tbl")
         TC.commit(
             spark.createDataFrame(
                 [], "doc_id bigint, band_idx int, bucket string"
@@ -6379,12 +6332,6 @@ def stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             root,
         )
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-        # four arbitrary chunks: the index build is a per-doc pure map,
-        # so the final table must be chop-invariant (pinned in tests)
-        for i in range(4):
-            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             idx = D.minhash_index(
@@ -6399,18 +6346,13 @@ def stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn=("stream_minhash", batch_id),
             )
 
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        # four arbitrary chunks: the index build is a per-doc pure map,
+        # so the final table must be chop-invariant (pinned in tests)
+        SP.replay(
+            [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)],
+            work,
+            apply_batch,
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return root
 
     root = built_once(sf_dir, "documents", "sg_mhidx_", build)
@@ -6468,19 +6410,11 @@ def stream_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._frozen_codebook import FROZEN_CENTROIDS
 
     def build(work):
-        root, feed, ckpt = (
-            _os.path.join(work, d) for d in ("tbl", "feed", "ckpt")
-        )
+        root = _os.path.join(work, "tbl")
         TC.commit(
             spark.createDataFrame([], "vec_id bigint, cell_id int"), root
         )
         emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        # four arbitrary chunks: assignment is a per-vector pure map, so
-        # the final table must be chop-invariant (pinned in tests)
-        for i in range(4):
-            emb.filter(F.col("vec_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             sp = bdf.sparkSession
@@ -6496,18 +6430,13 @@ def stream_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn=("stream_ivf", batch_id),
             )
 
-        stream = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        # four arbitrary chunks: assignment is a per-vector pure map, so
+        # the final table must be chop-invariant (pinned in tests)
+        SP.replay(
+            [emb.filter(F.col("vec_id") % 4 == i) for i in range(4)],
+            work,
+            apply_batch,
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return root
 
     root = built_once(sf_dir, "embeddings", "sg_ivfidx_", build)
@@ -6612,8 +6541,8 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of events_holt_trend, and the proof that the packed
     ordered fold MIGRATES: the event feed is chopped into four
     TIME-CUTOFF chunk files (row_number over (ts, event_id) quartiles —
-    the SCD2/interval-join convention, so ``maxFilesPerTrigger=1``
-    drains them in time order); each micro-batch folds ONLY ITS OWN
+    the SCD2/interval-join convention, replayed in time order by
+    streaming/pipeline.replay); each micro-batch folds ONLY ITS OWN
     rows on top of the committed per-user (accumulator, count) state —
     the fold's initial value is the stored accumulator, joined straight
     into the SAME ``aggregate(...)`` expression text the batch query
@@ -6638,9 +6567,7 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import table_commit as TC
 
     def build(work):
-        root, feed, ckpt = (
-            _os.path.join(work, d) for d in ("tbl", "feed", "ckpt")
-        )
+        root = _os.path.join(work, "tbl")
         TC.commit(
             spark.createDataFrame(
                 [], "user_id bigint, acc bigint, n_events bigint"
@@ -6651,7 +6578,7 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "ts", "user_id", "value"
         )
         # TIME-CUTOFF chunks: quartiles of the (ts, event_id) total
-        # order, written smallest-first so file order IS time order
+        # order, replayed smallest-first so batch order IS time order
         from pyspark.sql.window import Window as _W
 
         ranked = ev.withColumn(
@@ -6659,12 +6586,13 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(_W.orderBy("ts", "event_id")),
         )
         n_total = ev.count()
-        for i in range(4):
-            lo = i * n_total // 4
-            hi = (i + 1) * n_total // 4
+        chunks = [
             ranked.filter(
-                (F.col("_rn") > lo) & (F.col("_rn") <= hi)
-            ).drop("_rn").coalesce(1).write.mode("append").parquet(feed)
+                (F.col("_rn") > i * n_total // 4)
+                & (F.col("_rn") <= (i + 1) * n_total // 4)
+            ).drop("_rn")
+            for i in range(4)
+        ]
 
         P, B = _HOLT_P, _HOLT_B
         fold = (
@@ -6721,18 +6649,7 @@ def stream_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn=("stream_holt", batch_id),
             )
 
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        SP.replay(chunks, work, apply_batch)
         return root
 
     root = built_once(sf_dir, "events", "sg_holt_", build)
@@ -7903,9 +7820,8 @@ def _graph_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     from ..sources import table_commit as TC
 
     def build(work):
-        e_root, s_root, v_root, feed, ckpt = (
-            _os.path.join(work, d)
-            for d in ("edges", "sig", "vec", "feed", "ckpt")
+        e_root, s_root, v_root = (
+            _os.path.join(work, d) for d in ("edges", "sig", "vec")
         )
         TC.commit(
             spark.createDataFrame([], "src bigint, dst bigint, d2 bigint"),
@@ -7922,10 +7838,6 @@ def _graph_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
             v_root,
         )
         emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        for i in range(4):
-            emb.filter(F.col("vec_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             sp = bdf.sparkSession
@@ -7992,18 +7904,11 @@ def _graph_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
                 txn=("stream_graph_v", batch_id),
             )
 
-        stream = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        SP.replay(
+            [emb.filter(F.col("vec_id") % 4 == i) for i in range(4)],
+            work,
+            apply_batch,
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return e_root, s_root, v_root
 
     return built_once(sf_dir, "embeddings", "sg_gidx_", build)
@@ -8110,11 +8015,7 @@ def stream_signlsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import table_commit as TC
 
     def build(work):
-        root, feed, ckpt = (
-            _os.path.join(work, "bands"),
-            _os.path.join(work, "feed"),
-            _os.path.join(work, "ckpt"),
-        )
+        root = _os.path.join(work, "bands")
         TC.commit(
             spark.createDataFrame(
                 [], "vec_id bigint, band_idx int, band_val string"
@@ -8124,10 +8025,6 @@ def stream_signlsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         seeded = _seeded_embeddings(spark, sf_dir).select(
             "vec_id", "embedding"
         )
-        for i in range(4):
-            seeded.filter(F.col("vec_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             bands = (
@@ -8141,16 +8038,11 @@ def stream_signlsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 txn=("stream_slsh", batch_id),
             )
 
-        q = (
-            spark.readStream.schema("vec_id bigint, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        SP.replay(
+            [seeded.filter(F.col("vec_id") % 4 == i) for i in range(4)],
+            work,
+            apply_batch,
         )
-        q.awaitTermination()
         return root
 
     root = built_once(sf_dir, "embeddings", "sg_slsh_", build)

@@ -3308,8 +3308,7 @@ def stream_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     AL.register(spark)
     stream = spark.readStream.format("avrolite").load(landing)
     name = f"reg_avro_stream_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(stream, name, output_mode="append")
-    q.awaitTermination()
+    run_to_memory(stream, name, output_mode="append")
     return spark.table(name)
 
 
@@ -3414,8 +3413,7 @@ def stream_arrowipc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     AI.register(spark)
     stream = spark.readStream.format("arrowipc").load(landing)
     name = f"reg_arrow_stream_{uuid.uuid4().hex[:8]}"
-    q = run_to_memory(stream, name, output_mode="append")
-    q.awaitTermination()
+    run_to_memory(stream, name, output_mode="append")
     return spark.table(name)
 
 

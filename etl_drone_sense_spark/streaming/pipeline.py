@@ -15,6 +15,21 @@ machinery the reference lacks:
   ``applyInPandasWithState`` (the extension point for operators Spark
   lacks natively).
 
+Bounded replays of a fixture go through three helpers:
+
+* ``land_in_order`` — append chunk DataFrames to a feed dir, one parquet
+  file each, in a pinned order;
+* ``replay`` — land chunks, then drain them one file per micro-batch
+  through ``foreachBatch`` to completion (AvailableNow);
+* ``scoped_conf`` — set a session conf for one block and restore it.
+
+Ordering condition: the file source drains files by modification time,
+and ties fall back to listing order (neither landing order nor name
+order). Back-to-back chunk writes can share an mtime on a filesystem
+with 1-second mtime granularity, so ``land_in_order`` stamps strictly
+increasing whole-second mtimes and the order-dependent folds replay in
+landing order everywhere.
+
 Scale notes: state stores partition by key (shuffle.partitions state
 shards); watermarks bound state size — never run an unbounded stateful agg
 without one at production scale.
@@ -22,7 +37,10 @@ without one at production scale.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+import os
+import time
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -292,7 +310,8 @@ def tws_available(spark: SparkSession | None = None) -> bool:
     ``ensure_protobuf`` can often vendor a pure-python runtime (see its
     docstring). The operator additionally needs the RocksDB state store
     provider — HDFSBackedStateStoreProvider rejects the API's multiple
-    column families; callers scope that conf around the query."""
+    column families; callers scope that conf around the query
+    (``scoped_conf``)."""
     return ensure_protobuf(spark)
 
 
@@ -301,9 +320,9 @@ def running_totals_tws(events: DataFrame) -> DataFrame:
     ``running_totals_stateful``): per-user exact totals + max via a named
     ValueState. Gated on ``tws_available()``; the CALLER must also set
     ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
-    provider for the query's duration (scoped, not session-wide — an
-    HDFS-provider checkpoint resumed under RocksDB would mismatch). The
-    oracle-able semantics (fixed-point exactness) match
+    provider for the query's duration (``scoped_conf``, not session-wide
+    — an HDFS-provider checkpoint resumed under RocksDB would mismatch).
+    The oracle-able semantics (fixed-point exactness) match
     running_totals_stateful."""
     if not tws_available(events.sparkSession):
         raise RuntimeError(
@@ -368,13 +387,78 @@ def run_available_now(stream: DataFrame, checkpoint: str, out_path: str) -> None
 
 
 def run_to_memory(stream: DataFrame, name: str, output_mode: str = "update"):
-    """Memory-sink runner for tests; returns the started query."""
-    return (
+    """Drain ``stream`` AvailableNow into the memory table ``name``;
+    returns the finished query."""
+    q = (
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+# A stateful query's state store shards at spark.sql.shuffle.partitions
+# AS OF ITS FIRST START, and the checkpoint freezes that count; the
+# bounded fixture replays need a handful of shards, not a session
+# default of 200 near-empty state tasks per micro-batch.
+STATE_SHARDS = "8"
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the block; restore the
+    previous value afterwards, or unset ``key`` when it had none."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def land_in_order(chunks: Sequence[DataFrame], feed: str) -> None:
+    """Write each chunk into the new directory ``feed`` as one
+    ``coalesce(1)`` parquet file, stamped with strictly increasing
+    whole-second mtimes 1 s apart, so the file source drains the chunks
+    in list order (module docstring)."""
+    base = int(time.time())
+    seen: set[str] = set()
+    for i, chunk in enumerate(chunks):
+        chunk.coalesce(1).write.mode("append").parquet(feed)
+        for f in os.listdir(feed):
+            if f.endswith(".parquet") and f not in seen:
+                os.utime(os.path.join(feed, f), (base + i, base + i))
+                seen.add(f)
+
+
+def replay(
+    chunks: Sequence[DataFrame],
+    work: str,
+    apply_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """Land ``chunks`` in order under ``work/feed`` and fold them one file
+    per micro-batch through ``foreachBatch(apply_batch)`` (checkpoint
+    ``work/ckpt``, AvailableNow), returning once the feed is drained.
+    Batch ``i`` carries chunk ``i``; the stream reads ``chunks[0]``'s
+    schema."""
+    feed = os.path.join(work, "feed")
+    land_in_order(chunks, feed)
+    (
+        chunks[0]
+        .sparkSession.readStream.schema(chunks[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
 
 

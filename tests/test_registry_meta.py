@@ -81,3 +81,22 @@ def test_query_order_is_stalest_first_over_committed_artifacts():
     pos = {n: i for i, n in enumerate(RG.REGISTRY)}
     keys = [(rounds[n], pos[n]) for n in order]
     assert keys == sorted(keys)
+
+
+def test_plans_leave_replay_plumbing_to_streaming_pipeline():
+    """Replay order, foreachBatch drains and session-conf scoping are
+    decided in one module, streaming/pipeline.py (land_in_order, replay,
+    scoped_conf); a plans module that hand-rolls one of them again forks
+    that decision."""
+    import pathlib
+
+    banned = ("foreachBatch(", "utime(", "spark.conf.set(", "spark.conf.unset(")
+    plans = pathlib.Path(RG.__file__).parent
+    hits = [
+        f"{p.name}:{n}: {tok}"
+        for p in sorted(plans.glob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        for tok in banned
+        if tok in line
+    ]
+    assert not hits, hits

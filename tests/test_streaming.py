@@ -28,8 +28,7 @@ def events_dir(spark, sf_dir, tmp_path_factory):
 
 
 def _drain(spark, stream, name, mode):
-    q = SP.run_to_memory(stream, name, output_mode=mode)
-    q.awaitTermination()
+    SP.run_to_memory(stream, name, output_mode=mode)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -297,29 +296,22 @@ def test_tws_operator_gated_or_runs(spark, sf_dir):
         return
     import uuid
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
+    from etl_drone_sense_spark.plans.extensions import _events_landing
+
+    with SP.scoped_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
-    )
-    try:
-        from etl_drone_sense_spark.plans.extensions import _events_landing
-
+    ):
         landing = _events_landing(spark, sf_dir)
         stream = SP.running_totals_tws(SP.stream_events(spark, landing))
         name = f"tws_{uuid.uuid4().hex[:8]}"
-        SP.run_to_memory(stream, name, output_mode="update").awaitTermination()
+        SP.run_to_memory(stream, name, output_mode="update")
         got = {
             r.user_id: (r.total_value, r.n_seen)
             for r in spark.table(name).collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     from pyspark.sql import functions as F
 
     want = {
@@ -556,6 +548,81 @@ def test_stream_scd2_apply_is_multi_batch_and_idempotent(spark, sf_dir):
     assert last.txn_map.get("stream_scd2") == 1, last.txn
 
 
+def test_replay_drains_chunks_in_landing_order(spark, tmp_path):
+    """streaming/pipeline.replay: micro-batch i carries chunk i, and the
+    feed files carry strictly increasing mtimes at least 1 s apart, so
+    the order holds on a filesystem with 1-second mtime granularity.
+    Chunk keys DESCEND, so neither key nor content order can stand in
+    for landing order."""
+    import os
+
+    chunks = [
+        spark.range(30 - 10 * i, 33 - 10 * i).withColumnRenamed("id", "k")
+        for i in range(4)
+    ]
+    seen = {}
+
+    def apply_batch(bdf, batch_id: int) -> None:
+        seen[batch_id] = sorted(r.k for r in bdf.collect())
+
+    work = str(tmp_path / "work")
+    SP.replay(chunks, work, apply_batch)
+    assert seen == {i: [30 - 10 * i + j for j in range(3)] for i in range(4)}
+    feed = os.path.join(work, "feed")
+    mtimes = sorted(
+        os.stat(os.path.join(feed, f)).st_mtime
+        for f in os.listdir(feed)
+        if f.endswith(".parquet")
+    )
+    assert len(mtimes) == 4
+    assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+
+def test_registered_replays_land_feeds_in_content_order(spark, sf_dir):
+    """The order-dependent folds replay their feed in mtime order, so
+    sorting each registered build's feed files by mtime must give
+    content order (stream_holt_trend and stream_scd2_apply: time
+    chunks, each ending where the next begins; stream_merge_apply: the
+    update batch before the insert/delete batch), with consecutive
+    mtimes at least 1 s apart."""
+    import glob
+    import os
+
+    from etl_drone_sense_spark.plans.curation import (
+        stream_merge_apply,
+        stream_scd2_apply,
+    )
+    from etl_drone_sense_spark.plans.extensions import stream_holt_trend
+    from etl_drone_sense_spark.sources.readers import _BUILT
+
+    def feed_by_mtime(query, prefix: str) -> list:
+        query(spark, sf_dir)  # builds (or reuses) the committed table
+        (root,) = [v for k, v in _BUILT.items() if k[:2] == (prefix, sf_dir)]
+        feed = os.path.join(os.path.dirname(root), "feed")
+        files = sorted(
+            (os.stat(p).st_mtime, p) for p in glob.glob(f"{feed}/*.parquet")
+        )
+        mtimes = [m for m, _ in files]
+        assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
+        return [spark.read.parquet(p) for _, p in files]
+
+    for query, prefix, n in (
+        (stream_holt_trend, "sg_holt_", 4),
+        (stream_scd2_apply, "sg_scd2_", 2),
+    ):
+        spans = [
+            tuple(f.agg(F.min("ts"), F.max("ts")).first())
+            for f in feed_by_mtime(query, prefix)
+        ]
+        assert len(spans) == n, spans
+        assert all(a[1] <= b[0] for a, b in zip(spans, spans[1:])), spans
+    ops = [
+        {r.op for r in f.select("op").distinct().collect()}
+        for f in feed_by_mtime(stream_merge_apply, "sg_smerge_")
+    ]
+    assert ops == [{"U"}, {"I", "D"}], ops
+
+
 def test_minhash_index_stream_chop_invariance(spark, sf_dir, tmp_path):
     """r13 (stream_minhash_index): the committed LSH index must be
     IDENTICAL however the document feed is chopped into micro-batches —
@@ -583,18 +650,12 @@ def test_minhash_index_stream_chop_invariance(spark, sf_dir, tmp_path):
 
     def build(nchop: int, tag: str) -> list:
         root = str(tmp_path / f"tbl_{tag}")
-        feed = str(tmp_path / f"feed_{tag}")
-        ckpt = str(tmp_path / f"ckpt_{tag}")
         TC.commit(
             spark.createDataFrame(
                 [], "doc_id bigint, band_idx int, bucket string"
             ),
             root,
         )
-        for i in range(nchop):
-            docs.filter(F.col("doc_id") % nchop == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             idx = D.minhash_index(
@@ -607,16 +668,11 @@ def test_minhash_index_stream_chop_invariance(spark, sf_dir, tmp_path):
                 txn=(f"chop_{tag}", batch_id),
             )
 
-        q = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        SP.replay(
+            [docs.filter(F.col("doc_id") % nchop == i) for i in range(nchop)],
+            str(tmp_path / f"work_{tag}"),
+            apply_batch,
         )
-        q.awaitTermination()
         return sorted(
             (r["doc_id"], r["band_idx"], r["bucket"])
             for r in TC.read_table(spark, root).collect()
@@ -663,15 +719,9 @@ def test_ivf_index_stream_chop_invariance(spark, sf_dir, tmp_path):
 
     def build(nchop: int, tag: str) -> list:
         root = str(tmp_path / f"ivf_tbl_{tag}")
-        feed = str(tmp_path / f"ivf_feed_{tag}")
-        ckpt = str(tmp_path / f"ivf_ckpt_{tag}")
         TC.commit(
             spark.createDataFrame([], "vec_id bigint, cell_id int"), root
         )
-        for i in range(nchop):
-            emb.filter(F.col("vec_id") % nchop == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             idx = assign_cells(bdf, cents).select("vec_id", "cell_id")
@@ -681,16 +731,11 @@ def test_ivf_index_stream_chop_invariance(spark, sf_dir, tmp_path):
                 txn=(f"ivfchop_{tag}", batch_id),
             )
 
-        q = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        SP.replay(
+            [emb.filter(F.col("vec_id") % nchop == i) for i in range(nchop)],
+            str(tmp_path / f"ivf_work_{tag}"),
+            apply_batch,
         )
-        q.awaitTermination()
         return sorted(
             (r["vec_id"], r["cell_id"])
             for r in TC.read_table(spark, root).collect()
@@ -761,8 +806,6 @@ def test_graph_index_stream_chop_invariance(spark, sf_dir, tmp_path):
         e_root = str(tmp_path / f"g_edges_{tag}")
         s_root = str(tmp_path / f"g_sig_{tag}")
         v_root = str(tmp_path / f"g_vec_{tag}")
-        feed = str(tmp_path / f"g_feed_{tag}")
-        ckpt = str(tmp_path / f"g_ckpt_{tag}")
         TC.commit(
             spark.createDataFrame([], "src bigint, dst bigint, d2 bigint"),
             e_root,
@@ -777,10 +820,6 @@ def test_graph_index_stream_chop_invariance(spark, sf_dir, tmp_path):
             spark.createDataFrame([], "vec_id bigint, qv array<bigint>"),
             v_root,
         )
-        for i in range(nchop):
-            emb.filter(F.col("vec_id") % nchop == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             sp = bdf.sparkSession
@@ -835,16 +874,11 @@ def test_graph_index_stream_chop_invariance(spark, sf_dir, tmp_path):
             TC.commit(sig_b, s_root, mode="append", txn=(f"gc_{tag}_s", batch_id))
             TC.commit(qz_b, v_root, mode="append", txn=(f"gc_{tag}_v", batch_id))
 
-        q = (
-            spark.readStream.schema("vec_id bigint, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        SP.replay(
+            [emb.filter(F.col("vec_id") % nchop == i) for i in range(nchop)],
+            str(tmp_path / f"g_work_{tag}"),
+            apply_batch,
         )
-        q.awaitTermination()
         w_final = Window.partitionBy("src").orderBy("d2", "dst")
         return sorted(
             (r["src"], r["rn"], r["dst"], r["d2"])
@@ -919,18 +953,12 @@ def test_stream_migrate_chop_invariance(spark, sf_dir, tmp_path):
 
     def build(nchop: int, tag: str) -> tuple[list, list]:
         root = str(tmp_path / f"smig_tbl_{tag}")
-        feed = str(tmp_path / f"smig_feed_{tag}")
-        ckpt = str(tmp_path / f"smig_ckpt_{tag}")
         TC.commit(
             base.filter(F.col("o_orderkey") % (nchop + 1) == 0)
             .repartitionByRange(4, "o_month"),
             root,
             stats_cols=["o_month"],
         )
-        for i in range(nchop):
-            base.filter(
-                F.col("o_orderkey") % (nchop + 1) == i + 1
-            ).coalesce(1).write.mode("append").parquet(feed)
         mig_at = nchop // 2
 
         def apply_batch(bdf, batch_id: int) -> None:
@@ -953,19 +981,14 @@ def test_stream_migrate_chop_invariance(spark, sf_dir, tmp_path):
                         stats_cols=["o_month", "o_orderstatus"],
                     )
 
-        q = (
-            spark.readStream.schema(
-                "o_orderkey bigint, o_month int, "
-                "o_orderstatus string, o_totalprice double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        SP.replay(
+            [
+                base.filter(F.col("o_orderkey") % (nchop + 1) == i + 1)
+                for i in range(nchop)
+            ],
+            str(tmp_path / f"smig_work_{tag}"),
+            apply_batch,
         )
-        q.awaitTermination()
         snap = TC.read_snapshot(root)
         rows = sorted(
             tuple(r) for r in TC.read_table(spark, root).collect()
@@ -1050,18 +1073,12 @@ def test_signlsh_index_stream_chop_invariance(spark, sf_dir, tmp_path):
 
     def build(nchop: int, tag: str) -> list:
         root = str(tmp_path / f"slsh_tbl_{tag}")
-        feed = str(tmp_path / f"slsh_feed_{tag}")
-        ckpt = str(tmp_path / f"slsh_ckpt_{tag}")
         TC.commit(
             spark.createDataFrame(
                 [], "vec_id bigint, band_idx int, band_val string"
             ),
             root,
         )
-        for i in range(nchop):
-            emb.filter(F.col("vec_id") % nchop == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(feed)
 
         def apply_batch(bdf, batch_id: int) -> None:
             bands = (
@@ -1075,16 +1092,11 @@ def test_signlsh_index_stream_chop_invariance(spark, sf_dir, tmp_path):
                 txn=(f"slshchop_{tag}", batch_id),
             )
 
-        q = (
-            spark.readStream.schema("vec_id bigint, embedding array<double>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        SP.replay(
+            [emb.filter(F.col("vec_id") % nchop == i) for i in range(nchop)],
+            str(tmp_path / f"slsh_work_{tag}"),
+            apply_batch,
         )
-        q.awaitTermination()
         return sorted(
             tuple(r) for r in TC.read_table(spark, root).collect()
         )
