@@ -1997,8 +1997,6 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-vs-corpus operator covers the beyond-horizon case). The drain
     is one AvailableNow micro-batch, so no duplicate straddles a
     watermark advance and none can be dropped as late."""
-    import uuid
-
     base = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -2011,9 +2009,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = built_once(sf_dir, "events", "sg_dedup_landing_", build)
     stream = spark.readStream.schema(base.schema).parquet(landing)
     dd = SP.dedup_stream(stream, watermark="30 minutes")
-    name = f"reg_dedup_stream_{uuid.uuid4().hex[:8]}"
-    SP.run_to_memory(dd, name, output_mode="append")
-    return spark.table(name)
+    return SP.run_to_memory(dd, "dedup_stream", output_mode="append")
 
 
 # ---------------------------------------------------------------------------
@@ -2193,15 +2189,11 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator oracle-able at all (a float-accumulating state would drift
     with batch splits). One AvailableNow micro-batch → one update row per
     key = the final totals."""
-    import uuid
-
     from .extensions import _events_landing
 
     landing = _events_landing(spark, sf_dir)
     stream = SP.running_totals_stateful(SP.stream_events(spark, landing))
-    name = f"reg_totals_stream_{uuid.uuid4().hex[:8]}"
-    SP.run_to_memory(stream, name, output_mode="update")
-    return spark.table(name)
+    return SP.run_to_memory(stream, "totals_stream", output_mode="update")
 
 
 _ROCKSDB_PROVIDER = (
@@ -2237,8 +2229,6 @@ def stream_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the relational restatement. The RocksDB state store
     provider (required: the API uses multiple column families, which the
     HDFS-backed provider rejects) is scoped to this query and restored."""
-    import uuid
-
     from .extensions import _events_landing
 
     if not SP.tws_available(spark):
@@ -2248,13 +2238,11 @@ def stream_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(SPARK_GRAFT_PROTOBUF_PATH)"
         )
     landing = _events_landing(spark, sf_dir)
-    name = f"reg_tws_stream_{uuid.uuid4().hex[:8]}"
     with SP.scoped_conf(
         spark, "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
     ):
         stream = SP.running_totals_tws(SP.stream_events(spark, landing))
-        SP.run_to_memory(stream, name, output_mode="update")
-    return spark.table(name)
+        return SP.run_to_memory(stream, "tws_stream", output_mode="update")
 
 
 @register(
@@ -2275,8 +2263,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH sides in state. Stateless ⇒ append mode, exact rows ⇒ full hash
     oracle. Drained AvailableNow to a memory sink like the other
     streaming queries."""
-    import uuid
-
     from .extensions import _events_landing
 
     landing = _events_landing(spark, sf_dir)
@@ -2287,9 +2273,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "event_type", "c_mktsegment", "c_name"
     )
-    name = f"reg_enrich_stream_{uuid.uuid4().hex[:8]}"
-    SP.run_to_memory(enriched, name, output_mode="append")
-    return spark.table(name)
+    return SP.run_to_memory(enriched, "enrich_stream", output_mode="append")
 
 
 # ---------------------------------------------------------------------------
@@ -3519,7 +3503,6 @@ def stream_domain_budget_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, domain, n_tokens)."""
     import os as _os
     import tempfile
-    import uuid
 
     feed = _os.path.join(tempfile.mkdtemp(prefix="sg_dombudget_"), "feed")
     docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
@@ -3537,10 +3520,8 @@ def stream_domain_budget_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = SP.domain_budget_cutoff(stream, budget=_DOMAIN_BUDGET_TOKENS)
-    name = f"reg_dombudget_{uuid.uuid4().hex[:8]}"
     with SP.scoped_conf(spark, "spark.sql.shuffle.partitions", SP.STATE_SHARDS):
-        SP.run_to_memory(out, name, output_mode="update")
-    return spark.table(name)
+        return SP.run_to_memory(out, "dombudget", output_mode="update")
 
 
 # ---------------------------------------------------------------------------

@@ -225,15 +225,11 @@ def stream_drone_features_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     is invocation-agnostic, so the BATCH oracle is the streaming oracle —
     the driver hash-checks the drained table against the same SQL as
     ``drone_features_flat``."""
-    import uuid
-
     from ..streaming.pipeline import run_to_memory, stream_drone_features
 
     landing = _drone_landing(spark, sf_dir)
     flat = flatten_features(stream_drone_features(spark, landing))
-    name = f"reg_drone_stream_{uuid.uuid4().hex[:8]}"
-    run_to_memory(flat, name, output_mode="append")
-    return spark.table(name)
+    return run_to_memory(flat, "drone_stream", output_mode="append")
 
 
 @register(

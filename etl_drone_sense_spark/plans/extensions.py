@@ -1921,13 +1921,9 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside one drained micro-batch, so no session is split by the
     watermark and the batch islands query is an exact oracle — a full
     hash check of streaming session semantics, not just a rows count."""
-    import uuid
-
     landing = _events_landing(spark, sf_dir)
     stream = SP.session_counts(SP.stream_events(spark, landing))
-    name = f"reg_sess_stream_{uuid.uuid4().hex[:8]}"
-    SP.run_to_memory(stream, name, output_mode="complete")
-    return spark.table(name)
+    return SP.run_to_memory(stream, "sess_stream", output_mode="complete")
 
 
 @register(
@@ -2976,7 +2972,9 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain()
         ev.filter(~in_batch_a).coalesce(1).write.mode("append").parquet(landing)
         drain()
-    return spark.table(name)
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)  # the frame holds the sink itself
+    return df
 
 
 @register(

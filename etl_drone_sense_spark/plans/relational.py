@@ -3299,17 +3299,13 @@ def stream_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-count offsets, prefix-hash enforcement) carried by the Avro
     source. Decode is invocation-agnostic, so the BATCH oracle is the
     streaming oracle, exactly the stream_drone_features_flat pattern."""
-    import uuid
-
     from ..sources import avrolite as AL
     from ..streaming.pipeline import run_to_memory
 
     landing = _avro_landing(sf_dir)
     AL.register(spark)
     stream = spark.readStream.format("avrolite").load(landing)
-    name = f"reg_avro_stream_{uuid.uuid4().hex[:8]}"
-    run_to_memory(stream, name, output_mode="append")
-    return spark.table(name)
+    return run_to_memory(stream, "avro_stream", output_mode="append")
 
 
 def _arrow_landing(sf_dir: str) -> str:
@@ -3404,17 +3400,13 @@ def stream_arrowipc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-count offsets, prefix-hash enforcement) carried by the Arrow
     source, exactly the avrolite/dronesense pattern. Decode is
     invocation-agnostic, so the BATCH oracle is the streaming oracle."""
-    import uuid
-
     from ..sources import arrowipc as AI
     from ..streaming.pipeline import run_to_memory
 
     landing = _arrow_landing(sf_dir)
     AI.register(spark)
     stream = spark.readStream.format("arrowipc").load(landing)
-    name = f"reg_arrow_stream_{uuid.uuid4().hex[:8]}"
-    run_to_memory(stream, name, output_mode="append")
-    return spark.table(name)
+    return run_to_memory(stream, "arrow_stream", output_mode="append")
 
 
 @register(

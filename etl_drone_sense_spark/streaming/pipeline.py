@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from contextlib import contextmanager
 
@@ -386,18 +387,24 @@ def run_available_now(stream: DataFrame, checkpoint: str, out_path: str) -> None
     )
 
 
-def run_to_memory(stream: DataFrame, name: str, output_mode: str = "update"):
-    """Drain ``stream`` AvailableNow into the memory table ``name``;
-    returns the finished query."""
-    q = (
+def run_to_memory(stream: DataFrame, prefix: str, output_mode: str = "update"):
+    """Drain ``stream`` AvailableNow into a fresh memory sink
+    ``reg_<prefix>_<uuid8>`` and return its rows as a DataFrame. The
+    sink's temp view is dropped before returning: the frame holds the
+    sink itself, so no catalog entry outlives the call."""
+    name = f"reg_{prefix}_{uuid.uuid4().hex[:8]}"
+    (
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
-    return q
+    spark = stream.sparkSession
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
 # A stateful query's state store shards at spark.sql.shuffle.partitions

@@ -1,7 +1,8 @@
-"""Registry self-consistency and the query order of the entry contract:
-the contract degrades silently when these drift (a bench query with no
-budget, an undeclared rows-only entry, a retired name back in the
-registry, a query order that stops rotating), so pin them."""
+"""Registry self-consistency, the query order of the entry contract and
+bench.py's budget rule: the contract degrades silently when these drift
+(budgets read from the wrong host's record, an undeclared rows-only
+entry, a retired name back in the registry, a query order that stops
+rotating), so pin them."""
 
 from __future__ import annotations
 
@@ -25,12 +26,53 @@ def test_rows_only_set_is_exactly_the_declared_one():
     assert actual == DECLARED_ROWS_ONLY
 
 
-def test_every_bench_query_has_a_budget():
+def _bench_record(root, fname: str, n: int, queries: dict, cpus: int = 4,
+                  sf: float = 0.1, rc: int = 0, contaminated: bool = False):
+    (root / fname).write_text(json.dumps({
+        "n": n, "rc": rc, "cpus": cpus, "sf": sf,
+        "parsed": {"queries": queries, "contaminated": contaminated},
+    }))
+
+
+def test_budgets_follow_the_newest_clean_record_at_this_cpus_and_sf(tmp_path):
+    """A budget is max(1.8 t, t + 0.6) over the newest round's record at
+    the run's cpus and sf; a loud, failed, empty or other-host record is
+    never a baseline, and without a matching record there are none."""
     import bench
 
-    bench_names = {n for n, s in RG.REGISTRY.items() if s.bench}
-    missing = bench_names - set(bench.BUDGETS_S)
-    assert not missing, f"bench queries without a budget: {sorted(missing)}"
+    names = {"a", "b", "c", "missing"}
+
+    def budgets():
+        return bench.budgets(names, 4, 0.1, str(tmp_path))
+
+    assert budgets() == ({}, None)
+    _bench_record(tmp_path, "BENCH_r01.json", 1, {"a": 9.0, "b": 9.0})
+    # r10 sorts before r9 by name: only the round number may decide.
+    _bench_record(tmp_path, "BENCH_r9.json", 9, {"a": 5.0, "b": 5.0})
+    _bench_record(tmp_path, "BENCH_r10.json", 10,
+                  {"a": 0.5, "b": 2.0, "c": 0.75, "retired": 1.0})
+    # Newer rounds, each disqualified by one field.
+    _bench_record(tmp_path, "BENCH_r11.json", 11, {"a": 0.1}, cpus=32)
+    _bench_record(tmp_path, "BENCH_r12.json", 12, {"a": 0.1}, sf=0.01)
+    _bench_record(tmp_path, "BENCH_r13.json", 13, {"a": 0.1}, rc=1)
+    _bench_record(tmp_path, "BENCH_r14.json", 14, {"a": 0.1}, contaminated=True)
+    _bench_record(tmp_path, "BENCH_r15.json", 15, {})
+    # t + 0.6 below the 0.75 s crossover, 1.8 t above it, equal on it.
+    assert budgets() == ({"a": 1.1, "b": 3.6, "c": 1.35}, "BENCH_r10.json")
+
+
+def test_committed_bench_records_budget_every_bench_query():
+    """The committed driver records as they stand: r17 at 32 and 8 cores
+    budgets all 63 bench queries; no record was taken at 4 cores, so a
+    4-core run is its own baseline."""
+    import bench
+
+    names = {n for n, s in RG.REGISTRY.items() if s.bench}
+    at32, record32 = bench.budgets(names, 32, 0.1)
+    assert record32 == "BENCH_r17.json"
+    assert len(names) == 63 and set(at32) == names
+    assert bench.budgets(names, 8, 0.1)[1] == "BENCH_r17_c8.json"
+    assert bench.budgets(names, 4, 0.1) == ({}, None)
 
 
 def test_retired_names_stay_retired():

@@ -27,18 +27,13 @@ def events_dir(spark, sf_dir, tmp_path_factory):
     return path
 
 
-def _drain(spark, stream, name, mode):
-    SP.run_to_memory(stream, name, output_mode=mode)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 def _sorted_rows(df, cols):
     return [tuple(r) for r in df.select(*cols).orderBy(*cols).collect()]
 
 
 def test_windowed_counts_matches_batch(spark, events_dir):
     stream = SP.windowed_counts(SP.stream_events(spark, events_dir))
-    got = _drain(spark, stream, "t_windowed", "complete")
+    got = SP.run_to_memory(stream, "t_windowed", output_mode="complete")
     expected = tumbling_window_agg(
         spark.read.schema(TPCH_SCHEMAS["events"]).parquet(events_dir),
         duration="15 minutes",
@@ -49,7 +44,7 @@ def test_windowed_counts_matches_batch(spark, events_dir):
 
 def test_session_counts_matches_batch(spark, events_dir):
     stream = SP.session_counts(SP.stream_events(spark, events_dir))
-    got = _drain(spark, stream, "t_sessions", "complete")
+    got = SP.run_to_memory(stream, "t_sessions", output_mode="complete")
     expected = sessionize(
         spark.read.schema(TPCH_SCHEMAS["events"]).parquet(events_dir),
         gap="10 minutes",
@@ -61,13 +56,13 @@ def test_session_counts_matches_batch(spark, events_dir):
 def test_dedup_stream_drops_duplicate_keys(spark, events_dir):
     base = spark.read.schema(TPCH_SCHEMAS["events"]).parquet(events_dir)
     stream = SP.dedup_stream(SP.stream_events(spark, events_dir))
-    got = _drain(spark, stream, "t_dedup", "append")
+    got = SP.run_to_memory(stream, "t_dedup", output_mode="append")
     assert got.count() == base.select("event_id").distinct().count()
 
 
 def test_running_totals_stateful_matches_batch(spark, events_dir):
     stream = SP.running_totals_stateful(SP.stream_events(spark, events_dir))
-    got = _drain(spark, stream, "t_totals", "update")
+    got = SP.run_to_memory(stream, "t_totals", output_mode="update")
     # AvailableNow over one landing dir = one micro-batch → one row per key.
     # Fixed-point state: the batch twin quantizes per row exactly like
     # the operator, so the comparison is EXACT equality, not approx.
@@ -89,6 +84,24 @@ def test_running_totals_stateful_matches_batch(spark, events_dir):
         assert g[uid]["n_seen"] == row["n_seen"]
 
 
+def test_memory_drains_leave_no_catalog_entry(spark, sf_dir):
+    """A registered memory-sink drain returns its rows and drops its temp
+    view: repeated calls must not pile ``reg_*`` tables, each holding its
+    whole result on the driver, into the session catalog."""
+    from etl_drone_sense_spark.plans.extensions import (
+        stream_session_counts,
+        stream_tumbling_counts,
+    )
+
+    runs = [stream_session_counts(spark, sf_dir) for _ in range(3)]
+    tumbling = stream_tumbling_counts(spark, sf_dir)
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [n for n in names if n.startswith("reg_")], names
+    rows = [sorted(df.collect()) for df in runs]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
+    assert tumbling.count() > 0
+
+
 def test_stream_drone_features_matches_batch(spark, sf_dir, tmp_path):
     """A1/A2/A3-A17 as a streaming job over a JSON landing dir (the
     scheduled-ingest parity path, reference task.ts:87)."""
@@ -97,7 +110,7 @@ def test_stream_drone_features_matches_batch(spark, sf_dir, tmp_path):
     drones.write.mode("overwrite").json(landing)
 
     stream = SP.stream_drone_features(spark, landing)
-    got = _drain(spark, stream, "t_drone_feats", "append")
+    got = SP.run_to_memory(stream, "t_drone_feats", output_mode="append")
 
     expected = drone_features(
         spark.read.schema(DRONE_LOCATION_SCHEMA).json(landing)
@@ -159,7 +172,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
         .parquet(str(landing))
     )
     windowed = SP.windowed_counts(stream, window="15 minutes", watermark="10 minutes")
-    got = _drain(spark, windowed, "t_late", "append")
+    got = SP.run_to_memory(windowed, "t_late", output_mode="append")
     starts = sorted(r["window_start"] for r in got.collect())
 
     assert (t0 - timedelta(hours=2)) not in starts  # evicted: beyond watermark
@@ -294,8 +307,6 @@ def test_tws_operator_gated_or_runs(spark, sf_dir):
         with _pytest.raises(RuntimeError, match="protobuf"):
             SP.running_totals_tws(events)
         return
-    import uuid
-
     from etl_drone_sense_spark.plans.extensions import _events_landing
 
     with SP.scoped_conf(
@@ -306,11 +317,9 @@ def test_tws_operator_gated_or_runs(spark, sf_dir):
     ):
         landing = _events_landing(spark, sf_dir)
         stream = SP.running_totals_tws(SP.stream_events(spark, landing))
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        SP.run_to_memory(stream, name, output_mode="update")
         got = {
             r.user_id: (r.total_value, r.n_seen)
-            for r in spark.table(name).collect()
+            for r in SP.run_to_memory(stream, "tws", output_mode="update").collect()
         }
     from pyspark.sql import functions as F
 

@@ -1,17 +1,18 @@
 """Core-scaling lane (r17 — r16 VERDICT item 6): at sf0.1 the whole bench
-is scheduler/fixed-overhead-bound (8 cores beat 32, every low/high-core
-ratio <= 1.26), so local wall-clock cannot confirm parallelism and plan
-pins were the only guard against a change that serializes a path. This
-probe times a handful of heavy parallel-by-design queries against the
-10x (sf1) full fixture at local[8] and local[32] and records the ratio —
-a serialization regression now shows up in NUMBERS (ratio collapsing
-toward 1), not just plan shape.
+is scheduler/fixed-overhead-bound, so local wall-clock cannot confirm
+parallelism and plan pins were the only guard against a change that
+serializes a path. This probe times a handful of heavy
+parallel-by-design queries against the 10x (sf1) full fixture at
+local[1] and at local[N], N being every core of the host
+(``os.cpu_count()``), and records the ratio — a serialization regression
+shows up in NUMBERS (ratio collapsing toward 1), not just plan shape.
+One core against all of the host's cores never oversubscribes it.
 
 Each core count runs in its own subprocess (one JVM cannot change its
 master); the fixture is the same synthesize_full output scale_probe uses.
-Writes CORE_SCALING.json at the repo root:
-  {"sf_base": 0.1, "scale": 10, "cpus": [8, 32],
-   "queries": {name: {"s_8": .., "s_32": .., "ratio": ..}},
+Writes CORE_SCALING.json at the repo root, e.g. on a 4-core host:
+  {"sf_base": 0.1, "scale": 10, "cpus": [1, 4],
+   "queries": {name: {"s_1": .., "s_4": .., "ratio": ..}},
    "min_ratio": .., "median_ratio": ..}
 
 Run standalone on a QUIET machine:  python tools/core_scaling_probe.py
@@ -99,8 +100,9 @@ def main() -> int:
     sf_dir = synthesize_full(spark, args.scale)
     spark.stop()
 
+    lo, hi = 1, os.cpu_count() or 1
     timings: dict[int, dict[str, float]] = {}
-    for cpus in (8, 32):
+    for cpus in (lo, hi):
         proc = subprocess.run(
             [
                 sys.executable, os.path.abspath(__file__),
@@ -122,9 +124,9 @@ def main() -> int:
 
     queries = {
         name: {
-            "s_8": timings[8][name],
-            "s_32": timings[32][name],
-            "ratio": round(timings[8][name] / max(timings[32][name], 1e-9), 2),
+            f"s_{lo}": timings[lo][name],
+            f"s_{hi}": timings[hi][name],
+            "ratio": round(timings[lo][name] / max(timings[hi][name], 1e-9), 2),
         }
         for name in PROBE_QUERIES
     }
@@ -132,7 +134,7 @@ def main() -> int:
     report = {
         "sf_base": 0.1,
         "scale": args.scale,
-        "cpus": [8, 32],
+        "cpus": [lo, hi],
         "queries": queries,
         "min_ratio": ratios[0],
         "median_ratio": ratios[len(ratios) // 2],

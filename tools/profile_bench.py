@@ -27,11 +27,11 @@ import json
 import os
 import statistics
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import run_noop, warm_dir  # noqa: E402
 from etl_drone_sense_spark.caching import release_caches  # noqa: E402
 from etl_drone_sense_spark.plans.registry import (  # noqa: E402
     all_queries,
@@ -58,16 +58,6 @@ def main() -> int:
             file=sys.stderr,
         )
         return 2
-    # warm on the smallest sibling SF of the bench dir rather than a
-    # hard-coded absolute path (r16 ADVICE): falls back to the bench dir
-    # itself when no smaller sibling exists
-    root = os.path.dirname(sf_dir.rstrip("/"))
-    sibs = sorted(
-        (d for d in os.listdir(root or ".")
-         if d.startswith("sf") and os.path.isdir(os.path.join(root, d))),
-        key=lambda d: float(d[2:]) if d[2:].replace(".", "").isdigit() else 1e9,
-    )
-    warm_dir = os.path.join(root, sibs[0]) if sibs else sf_dir
     spark = get_spark(app_name="etl-drone-sense-spark-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -80,10 +70,6 @@ def main() -> int:
 
     if args.plans_dir:
         os.makedirs(args.plans_dir, exist_ok=True)
-
-    def run(fn, d):
-        fn(spark, d).write.mode("overwrite").format("noop").save()
-        release_caches()
 
     for name in names:
         fn = queries[name]
@@ -100,13 +86,11 @@ def main() -> int:
                 f.write(buf.getvalue())
         if not args.samples:
             continue
-        if not args.no_warm and os.path.isdir(warm_dir):
-            run(fn, warm_dir)
-        samples = []
-        for _ in range(args.samples):
-            t0 = time.perf_counter()
-            run(fn, sf_dir)
-            samples.append(round(time.perf_counter() - t0, 3))
+        if not args.no_warm:
+            run_noop(spark, fn, warm_dir(sf_dir))
+        samples = [
+            round(run_noop(spark, fn, sf_dir), 3) for _ in range(args.samples)
+        ]
         print(json.dumps({
             "name": name,
             "median_s": round(statistics.median(samples), 3),
