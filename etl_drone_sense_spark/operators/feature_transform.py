@@ -19,6 +19,8 @@ Semantics pinned from the reference:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -116,19 +118,14 @@ def _sensor_fov() -> Column:
     )
 
 
-def drone_features(drones: DataFrame) -> DataFrame:
-    """One GeoJSON Feature row per drone record (task.ts:124-214).
-
-    Narrow transform: select-only, no shuffle, arbitrarily partitionable.
-    The first-match sensor is computed once in its own projection: it is a
-    higher-order (non-cheap) expression referenced by ~8 output fields, and
-    CollapseProject deliberately won't inline multi-referenced non-cheap
-    exprs — measured ~18% on the flattened bench query vs inline re-eval.
-    """
-    withv = drones.withColumn("_video_sensor", _video_sensor())
+@functools.lru_cache(maxsize=1)
+def _feature_columns(jvm) -> tuple[Column, tuple[Column, ...]]:
+    """The ``_video_sensor`` column and the Feature columns over it, built
+    once per ``jvm``: they are unresolved expressions tied to no session or
+    plan, so one build serves every call in the same JVM."""
     sensor = F.col("_video_sensor")
     has_video = sensor.isNotNull()
-    return withv.select(
+    return _video_sensor(), (
         F.col("id"),
         F.lit("Feature").alias("type"),
         F.struct(
@@ -155,6 +152,21 @@ def drone_features(drones: DataFrame) -> DataFrame:
             ).alias("coordinates"),
         ).alias("geometry"),
     )
+
+
+def drone_features(drones: DataFrame) -> DataFrame:
+    """One GeoJSON Feature row per drone record (task.ts:124-214).
+
+    Narrow transform: select-only, no shuffle, arbitrarily partitionable.
+    The first-match sensor is computed once in its own projection: it is a
+    higher-order (non-cheap) expression referenced by ~8 output fields, and
+    CollapseProject deliberately won't inline multi-referenced non-cheap
+    exprs — measured ~18% on the flattened bench query vs inline re-eval.
+    The Column trees, about a hundred py4j calls, are built once per JVM
+    (``_feature_columns``); a call only analyzes its two projections.
+    """
+    video_sensor, columns = _feature_columns(drones.sparkSession.sparkContext._jvm)
+    return drones.withColumn("_video_sensor", video_sensor).select(*columns)
 
 
 def feature_collection(features: DataFrame) -> DataFrame:

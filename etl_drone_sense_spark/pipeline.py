@@ -14,7 +14,6 @@ This is the surface a user of the reference switches to:
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,7 +26,6 @@ from .sources.readers import fetch_drone_records
 from .sources.sinks import (
     EtlEndpoint,
     RestPoster,
-    feature_collection_json,
     rest_post_batches,
 )
 
@@ -79,8 +77,8 @@ def run_ingest(
     )
     feats = drone_features(records)
     if env.DEBUG:
-        for row in json.loads(feature_collection_json(feats))["features"]:
-            print(json.dumps(row))  # reference's verbose mode (task.ts:120)
+        for line in feats.toJSON().collect():
+            print(line)  # reference's verbose mode (task.ts:120)
     if post is not None:
         rest_post_batches(feats, post, batch_size=batch_size)
     return feats

@@ -15,6 +15,7 @@ Decode modes mirror the reference's decode-or-throw (task.ts:119-121):
 from __future__ import annotations
 
 import json
+import operator
 import tempfile
 import threading
 import urllib.request
@@ -373,12 +374,103 @@ def fetch_drone_records(
     land-to-object-store + ``read_json_records`` (or a streaming source),
     not a bigger driver fetch. ``_payload`` injects a pre-fetched body for
     tests/offline runs.
+
+    The typed decode (A2) is one Arrow conversion, ``decode_drone_payload``,
+    sliced into ``defaultParallelism`` record batches that cross into the
+    JVM as they are: no per-row pickling and no Python worker. The frame is
+    created with ``spark.sql.execution.arrow.localRelationThreshold`` at 0
+    so it stays RDD-backed, one partition per batch, decoded on executors.
+    Below the threshold Spark would build a ``LocalRelation``, and the
+    optimizer's ``ConvertToLocalRelation`` would then evaluate the whole
+    feature projection single-threaded and interpreted on the driver (a
+    larger JVM heap tick after tick).
     """
+    import pyarrow as pa
+
+    from ..streaming.pipeline import scoped_conf
+
     if _payload is None:
         req = urllib.request.Request(url, headers={"X-API-KEY": api_key})
         with urllib.request.urlopen(req, timeout=timeout) as resp:  # pragma: no cover
             _payload = json.loads(resp.read())
-    if not isinstance(_payload, list):
+    whole = decode_drone_payload(_payload)
+    n, parts = whole.num_rows, spark.sparkContext.defaultParallelism
+    bounds = [i * n // parts for i in range(parts + 1)]
+    table = pa.Table.from_batches(
+        [whole.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])], schema=whole.schema
+    )
+    with scoped_conf(spark, "spark.sql.execution.arrow.localRelationThreshold", "0"):
+        return spark.createDataFrame(table, schema=DRONE_LOCATION_SCHEMA)
+
+
+def decode_drone_payload(payload: list):
+    """Decode-or-throw (task.ts:119-121): the drone records as one
+    ``pyarrow.RecordBatch`` of ``DRONE_LOCATION_SCHEMA``, or a ``ValueError``
+    naming the field path at fault (``speed``, ``sensors[].id``).
+
+    Whole numbers are numbers, as the reference's ``Type.Number()``
+    fields accept them: Arrow widens ``0`` to ``0.0``. Booleans are not,
+    though Arrow would silently take ``True`` as ``1.0``. Missing keys and
+    nulls are found from the null counts of the decoded arrays."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(payload, list):
         raise ValueError("drone payload must be a JSON array (task.ts:119)")
-    # createDataFrame with the declared schema is the decode-or-throw step.
-    return spark.createDataFrame(_payload, schema=DRONE_LOCATION_SCHEMA)
+    if not all(isinstance(r, dict) for r in payload):
+        raise ValueError("drone payload must be an array of JSON objects (task.ts:119)")
+    schema = to_arrow_schema(DRONE_LOCATION_SCHEMA)
+    try:
+        batch = pa.RecordBatch.from_pylist(payload, schema=schema)
+    except (pa.ArrowInvalid, pa.ArrowTypeError) as exc:
+        path = _unconvertible_path(payload, pa.struct(list(schema)), "")
+        raise ValueError(f"drone record field {path!r} has the wrong type: {exc}") from exc
+    for field, column in zip(schema, batch.columns):
+        path = _null_path(column, field, field.name)
+        if path is not None:
+            raise ValueError(f"drone record field {path!r} is missing or null")
+    for field in DRONE_LOCATION_SCHEMA.fields:
+        if isinstance(field.dataType, T.DoubleType):
+            if bool in set(map(type, map(operator.itemgetter(field.name), payload))):
+                raise ValueError(
+                    f"drone record field {field.name!r} has the wrong type: "
+                    "a boolean is not a number"
+                )
+    return batch
+
+
+def _null_path(array, field, path: str) -> str | None:
+    """The first path under ``array`` (of Arrow ``field``) that holds a null
+    where its field is not nullable, or None."""
+    import pyarrow as pa
+
+    if array.null_count:
+        if not field.nullable:
+            return path
+        array = array.drop_null()
+    if pa.types.is_struct(field.type):
+        for child, values in zip(field.type, array.flatten()):
+            found = _null_path(values, child, f"{path}.{child.name}")
+            if found is not None:
+                return found
+    elif pa.types.is_list(field.type):
+        return _null_path(array.flatten(), field.type.value_field, f"{path}[]")
+    return None
+
+
+def _unconvertible_path(values: list, typ, path: str) -> str:
+    """The deepest path under which ``values`` do not convert to the Arrow
+    type ``typ``: the error path of ``decode_drone_payload`` only."""
+    import pyarrow as pa
+
+    if pa.types.is_struct(typ) and all(v is None or isinstance(v, dict) for v in values):
+        for child in typ:
+            column = [None if v is None else v.get(child.name) for v in values]
+            try:
+                pa.array(column, type=child.type)
+            except (pa.ArrowInvalid, pa.ArrowTypeError):
+                name = f"{path}.{child.name}" if path else child.name
+                return _unconvertible_path(column, child.type, name)
+    elif pa.types.is_list(typ) and all(v is None or isinstance(v, list) for v in values):
+        return _unconvertible_path([x for v in values if v for x in v], typ.value_type, f"{path}[]")
+    return path

@@ -6,6 +6,8 @@ env (reference README.md:14-22). The engine offers:
 
 * ``features_parquet`` / ``features_jsonl`` — row-per-feature distributed
   sinks (the scale path: every executor writes its partition);
+* ``feature_collection_body`` — the one FeatureCollection body builder,
+  joining Spark's ``toJSON`` lines as they are;
 * ``feature_collection_json`` — single-document parity sink (driver-side
   assembly; only for reference-sized payloads);
 * ``rest_post_batches`` — executor-side REST sink: each partition POSTs its
@@ -16,9 +18,9 @@ env (reference README.md:14-22). The engine offers:
 
 from __future__ import annotations
 
-import json
+import itertools
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -35,14 +37,20 @@ def features_jsonl(features: DataFrame, path: str, mode: str = "overwrite") -> N
     features.write.mode(mode).json(path)
 
 
+def feature_collection_body(features: Iterable[str]) -> str:
+    """One FeatureCollection document from Feature JSON strings (Spark's
+    ``toJSON`` lines), joined as they are: no parse and no re-dump, so
+    the body is compact JSON."""
+    return '{"type":"FeatureCollection","features":[' + ",".join(features) + "]}"
+
+
 def feature_collection_json(features: DataFrame) -> str:
     """Assemble the single FeatureCollection document as a JSON string.
 
     Collect-to-driver by design — matches the reference's in-memory
     accumulation (task.ts:107-110). Guarded for scale misuse.
     """
-    rows = [json.loads(r) for r in features.toJSON().collect()]
-    return json.dumps({"type": "FeatureCollection", "features": rows})
+    return feature_collection_body(features.toJSON().collect())
 
 
 def rest_post_batches(
@@ -62,6 +70,9 @@ def rest_post_batches(
     to an endpoint URL, or a file-writing capture in tests; unpicklable
     callables fail fast here rather than as an opaque task-serialization
     error. Runs one Spark job; returns the total number of features POSTed.
+    Each body joins Spark's own ``toJSON`` lines as they are
+    (``feature_collection_body``): compact JSON that no Python code parses
+    or dumps again.
 
     Delivery is AT-LEAST-ONCE: Spark re-runs failed/speculative tasks, so a
     partition's batches can be POSTed more than once (the driver-side loop
@@ -85,16 +96,9 @@ def rest_post_batches(
         ) from exc
 
     def _post_partition(lines):
-        n = 0
-        batch: list[dict] = []
-        for r in lines:
-            batch.append(json.loads(r))
-            if len(batch) >= batch_size:
-                post(json.dumps({"type": "FeatureCollection", "features": batch}))
-                n += len(batch)
-                batch = []
-        if batch:
-            post(json.dumps({"type": "FeatureCollection", "features": batch}))
+        lines, n = iter(lines), 0
+        while batch := list(itertools.islice(lines, batch_size)):
+            post(feature_collection_body(batch))
             n += len(batch)
         yield n
 
