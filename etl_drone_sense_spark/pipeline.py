@@ -26,6 +26,7 @@ from .sources.readers import fetch_drone_records
 from .sources.sinks import (
     EtlEndpoint,
     RestPoster,
+    feature_json_lines,
     rest_post_batches,
 )
 
@@ -77,7 +78,7 @@ def run_ingest(
     )
     feats = drone_features(records)
     if env.DEBUG:
-        for line in feats.toJSON().collect():
+        for line in feature_json_lines(feats).to_pylist():
             print(line)  # reference's verbose mode (task.ts:120)
     if post is not None:
         rest_post_batches(feats, post, batch_size=batch_size)
@@ -97,9 +98,10 @@ def handler(
     ``control()`` dataflow on a schedule, with the submit target provided
     by the runtime as ``ETL_API``/``ETL_LAYER`` env (README.md:14-22).
     This is that contract: resolve the endpoint from env, run the ingest,
-    POST features executor-side, return a run summary. ``transport``
-    replaces the network for offline runs; ``payload`` injects pre-fetched
-    records (tests / replays).
+    POST features from the driver, return a run summary: ``features``
+    posted and ``batches``, the number of bodies they went out in.
+    ``transport`` replaces the network for offline runs; ``payload``
+    injects pre-fetched records (tests / replays).
     """
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
@@ -111,4 +113,5 @@ def handler(
     n = rest_post_batches(
         feats, RestPoster(endpoint.url, transport=transport), batch_size=batch_size
     )
-    return {"event": event or {}, "layer": endpoint.layer, "features": n}
+    batches = -(-n // batch_size)
+    return {"event": event or {}, "layer": endpoint.layer, "features": n, "batches": batches}

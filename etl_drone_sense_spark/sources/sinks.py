@@ -6,27 +6,31 @@ env (reference README.md:14-22). The engine offers:
 
 * ``features_parquet`` / ``features_jsonl`` — row-per-feature distributed
   sinks (the scale path: every executor writes its partition);
+* ``feature_json_lines`` — every feature as one compact JSON string,
+  collected to the driver over one Arrow stream;
 * ``feature_collection_body`` — the one FeatureCollection body builder,
-  joining Spark's ``toJSON`` lines as they are;
-* ``feature_collection_json`` — single-document parity sink (driver-side
-  assembly; only for reference-sized payloads);
-* ``rest_post_batches`` — executor-side REST sink: each partition POSTs its
-  own batches, so the output never funnels through the driver;
+  joining those lines as they are;
+* ``feature_collection_json`` — single-document parity sink;
+* ``rest_post_batches`` — driver-side REST sink: one collect, then
+  ``batch_size``-feature bodies POSTed in order, each once per call;
 * ``EtlEndpoint`` / ``RestPoster`` — the reference's env-configured submit
-  target as a picklable POST callable.
+  target as a POST callable.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ConfigError
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def features_parquet(features: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -37,20 +41,34 @@ def features_jsonl(features: DataFrame, path: str, mode: str = "overwrite") -> N
     features.write.mode(mode).json(path)
 
 
-def feature_collection_body(features: Iterable[str]) -> str:
-    """One FeatureCollection document from Feature JSON strings (Spark's
-    ``toJSON`` lines), joined as they are: no parse and no re-dump, so
-    the body is compact JSON."""
-    return '{"type":"FeatureCollection","features":[' + ",".join(features) + "]}"
+def feature_json_lines(features: DataFrame) -> "pa.ChunkedArray":
+    """Every feature as one compact JSON string, in row order: Spark's
+    ``to_json`` of the whole row, the same lines ``toJSON`` writes,
+    collected over one Arrow stream. The JVM serializes; no Python worker
+    runs and no Python string exists per row."""
+    return features.select(F.to_json(F.struct("*"))).toArrow().column(0)
+
+
+def feature_collection_body(lines: "pa.ChunkedArray") -> str:
+    """One FeatureCollection document from Feature JSON lines, joined as
+    they are by one Arrow kernel: no parse and no re-dump, so the body is
+    compact JSON."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    flat = lines.combine_chunks()
+    one_list = pa.ListArray.from_arrays(pa.array([0, len(flat)], pa.int32()), flat)
+    features = pc.binary_join(one_list, ",")[0].as_py()
+    return '{"type":"FeatureCollection","features":[' + features + "]}"
 
 
 def feature_collection_json(features: DataFrame) -> str:
     """Assemble the single FeatureCollection document as a JSON string.
 
     Collect-to-driver by design — matches the reference's in-memory
-    accumulation (task.ts:107-110). Guarded for scale misuse.
+    accumulation (task.ts:107-110).
     """
-    return feature_collection_body(features.toJSON().collect())
+    return feature_collection_body(feature_json_lines(features))
 
 
 def rest_post_batches(
@@ -58,51 +76,29 @@ def rest_post_batches(
     post: Callable[[str], None],
     batch_size: int = 500,
 ) -> int:
-    """POST features as batched FeatureCollection documents, executor-side.
+    """POST features as batched FeatureCollection documents, from the driver.
 
-    ``post`` is shipped in the task closure and invoked WHERE each
-    partition lives: every partition slices itself into ≤ ``batch_size``
-    FeatureCollection bodies and POSTs them locally, so a 1000-executor
-    job fans the submit load across the cluster instead of serializing the
-    whole output through one driver process (the reference posts a single
-    document per run, task.ts:216 — fine at drone-fleet size, not at
-    100 TB). ``post`` must therefore be picklable — a ``RestPoster`` bound
-    to an endpoint URL, or a file-writing capture in tests; unpicklable
-    callables fail fast here rather than as an opaque task-serialization
-    error. Runs one Spark job; returns the total number of features POSTed.
-    Each body joins Spark's own ``toJSON`` lines as they are
-    (``feature_collection_body``): compact JSON that no Python code parses
-    or dumps again.
+    Runs one Spark job that collects every feature's JSON line over Arrow
+    (``feature_json_lines``), then slices the lines into
+    ``ceil(n / batch_size)`` bodies, every one ``batch_size`` features but
+    the last, and calls ``post`` once per body, in order. Only one piece
+    is joined into a string at a time. The reference likewise posts from
+    the process that fetched the drones (task.ts:216). Returns the number
+    of features POSTed.
 
-    Delivery is AT-LEAST-ONCE: Spark re-runs failed/speculative tasks, so a
-    partition's batches can be POSTed more than once (the driver-side loop
-    this replaced was effectively exactly-once). Make bodies idempotent on
-    the receiving side (e.g. a batch id) or disable speculation
-    (``spark.speculation=false``, the default) if duplicates are unacceptable.
+    Delivery is ONCE PER CALL: a Spark task retry re-runs the collect, not
+    a POST, so no body is sent twice. A ``post`` that raises stops the
+    loop; the bodies already sent stay sent and the rest are not sent.
+    The driver holds one call's JSON, the same order of size as the
+    payload the tick decoded there; ``features_parquet`` and
+    ``features_jsonl`` are the bulk path.
     """
-    # Probe with cloudpickle — what Spark actually ships closures with —
-    # not stdlib pickle, which rejects lambdas/local closures cloudpickle
-    # handles fine (a stdlib probe would fail-fast callables that work).
-    from pyspark import cloudpickle
-
-    try:
-        cloudpickle.dumps(post)
-    except Exception as exc:
-        raise TypeError(
-            "rest_post_batches requires a serializable `post` callable (it "
-            "is shipped to executors inside the task closure) — use "
-            "RestPoster or a module-level function; cloudpickle failed "
-            f"with: {exc!r}"
-        ) from exc
-
-    def _post_partition(lines):
-        lines, n = iter(lines), 0
-        while batch := list(itertools.islice(lines, batch_size)):
-            post(feature_collection_body(batch))
-            n += len(batch)
-        yield n
-
-    return sum(features.toJSON().mapPartitions(_post_partition).collect())
+    if batch_size < 1:
+        raise ValueError(f"batch_size must be at least 1, got {batch_size}")
+    lines = feature_json_lines(features)
+    for start in range(0, len(lines), batch_size):
+        post(feature_collection_body(lines.slice(start, batch_size)))
+    return len(lines)
 
 
 @dataclass(frozen=True)
@@ -130,13 +126,11 @@ class EtlEndpoint:
 
 
 class RestPoster:
-    """Picklable POST callable for ``rest_post_batches``.
+    """POST callable for ``rest_post_batches``, called on the driver.
 
-    Instances carry only plain attributes (url/headers/timeout), so the
-    task closure serializes cleanly to executors; the HTTP client is
-    imported lazily inside the call, on the executor. ``transport``
-    (url, body) → None substitutes the network for offline tests and must
-    itself be picklable."""
+    It carries the url, headers and timeout; the HTTP client is imported
+    lazily inside the call. ``transport`` (url, body) → None substitutes
+    the network for offline runs."""
 
     def __init__(
         self,

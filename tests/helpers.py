@@ -1,45 +1,10 @@
-"""Picklable POST-capture helpers for executor-side sink tests.
+"""Shared test helpers.
 
-``rest_post_batches`` invokes its callable on executors, so a driver-side
-closure (``list.append``) never sees the calls. These capture each body as
-one file instead — executor processes share the local filesystem in tests.
+Sink tests need no capture helper: ``rest_post_batches`` calls ``post``
+on the driver, in order, so a plain ``list.append`` sees every body.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import uuid
-
-
-class CapturePoster:
-    """``post(body)`` callable: one file per POSTed body."""
-
-    def __init__(self, directory):
-        self.directory = str(directory)
-
-    def _write(self, payload: str) -> None:
-        name = f"{os.getpid()}-{uuid.uuid4().hex}.json"
-        with open(os.path.join(self.directory, name), "w") as fh:
-            fh.write(payload)
-
-    def __call__(self, body: str) -> None:
-        self._write(body)
-
-
-class CaptureTransport(CapturePoster):
-    """``transport(url, body)`` callable for ``RestPoster``: records the
-    target URL alongside the body."""
-
-    def __call__(self, url: str, body: str) -> None:  # type: ignore[override]
-        self._write(json.dumps({"url": url, "body": body}))
-
-
-def read_bodies(directory) -> list[str]:
-    d = str(directory)
-    return [
-        open(os.path.join(d, f)).read() for f in sorted(os.listdir(d))
-    ]
 
 
 def skip_unless_frozen_artifacts_fresh():

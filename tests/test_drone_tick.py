@@ -1,12 +1,13 @@
 """The reference tick's Arrow path: fetch → typed decode → Feature → POST.
 
 ``fetch_drone_records`` decodes the payload with one Arrow conversion and
-hands the JVM record batches; ``rest_post_batches`` joins Spark's own
-``toJSON`` lines into each body. Pinned here: the decode's verdicts
-(whole numbers in, booleans and nulls out, each fault named by its field
-path), parity with the row-by-row ``createDataFrame`` path on every
-transform branch, the RDD-backed plan, and bodies that differ from the
-``toJSON`` lines only in whitespace.
+hands the JVM record batches; ``rest_post_batches`` collects Spark's own
+JSON lines over Arrow and joins them into each body on the driver.
+Pinned here: the decode's verdicts (whole numbers in, booleans and nulls
+out, each fault named by its field path), parity with the row-by-row
+``createDataFrame`` path on every transform branch, the RDD-backed plan,
+Arrow lines equal to the ``toJSON`` lines, and bodies that differ from
+them only in whitespace.
 """
 
 from __future__ import annotations
@@ -138,33 +139,40 @@ def test_decode_rejects_non_records():
         readers.decode_drone_payload([_rec(), "d2"])
 
 
-def test_empty_payload_posts_nothing(spark, tmp_path, monkeypatch):
-    from tests.helpers import CaptureTransport, read_bodies
-
+def test_empty_payload_posts_nothing(spark, monkeypatch):
+    posts: list[tuple[str, str]] = []
     monkeypatch.setenv("ETL_API", "http://etl.local")
     monkeypatch.setenv("ETL_LAYER", "19")
-    out = P.handler(spark=spark, payload=[], transport=CaptureTransport(tmp_path))
-    assert out["features"] == 0
-    assert read_bodies(tmp_path) == []
+    out = P.handler(
+        spark=spark, payload=[], transport=lambda url, body: posts.append((url, body))
+    )
+    assert (out["features"], out["batches"]) == (0, 0)
+    assert posts == []
 
 
-def test_bodies_are_the_tojson_lines(spark, tmp_path, capsys):
+def test_arrow_lines_are_the_tojson_lines(spark):
+    """``feature_json_lines`` (``to_json`` of the whole row, collected
+    over Arrow) equals ``toJSON`` row for row and in order, on every golden
+    branch and on two fleet ticks."""
+    feats = drone_features(readers.fetch_drone_records(spark, _payload=_tick_records()))
+    assert sinks.feature_json_lines(feats).to_pylist() == feats.toJSON().collect()
+
+
+def test_bodies_are_the_tojson_lines(spark, capsys):
     """Every posted body, the driver-side document and the DEBUG dump carry
     exactly the features ``toJSON`` writes: only whitespace may differ."""
-    from tests.helpers import CapturePoster, read_bodies
-
+    bodies: list[str] = []
     records = _tick_records()
     feats = P.run_ingest(
         spark,
         env=Environment(DroneSenseToken="t", DEBUG=True),
         payload=records,
-        post=CapturePoster(tmp_path),
+        post=bodies.append,
         batch_size=7,
     )
     lines = feats.toJSON().collect()
     want = sorted((json.loads(line) for line in lines), key=lambda f: f["id"])
 
-    bodies = read_bodies(tmp_path)
     docs = [json.loads(b) for b in bodies]
     assert all(b.startswith('{"type":"FeatureCollection","features":[') for b in bodies)
     assert all(len(d["features"]) <= 7 and d["type"] == "FeatureCollection" for d in docs)

@@ -48,41 +48,41 @@ PAYLOAD = [
 ]
 
 
-def test_run_ingest_end_to_end(spark, tmp_path):
-    from tests.helpers import CapturePoster, read_bodies
-
+def test_run_ingest_end_to_end(spark):
+    bodies: list[str] = []
     feats = P.run_ingest(
         spark,
         env=Environment(DroneSenseToken="t", DEBUG=False),
         payload=PAYLOAD,
-        post=CapturePoster(tmp_path),
+        post=bodies.append,
         batch_size=10,
     )
     rows = {r["id"]: r.asDict(recursive=True) for r in feats.collect()}
     assert rows["d1"]["properties"]["video"]["url"] == "rtsp://r"
     assert rows["d2"]["properties"]["video"] is None
 
-    docs = [json.loads(b) for b in read_bodies(tmp_path)]
+    docs = [json.loads(b) for b in bodies]
     assert sum(len(d["features"]) for d in docs) == 2
     assert all(d["type"] == "FeatureCollection" for d in docs)
 
 
-def test_handler_env_configured_submit(spark, tmp_path, monkeypatch):
+def test_handler_env_configured_submit(spark, monkeypatch):
     """The scheduled entry point resolves ETL_API/ETL_LAYER from env
-    (reference task.ts:221-223, README.md:14-22) and submits executor-side
-    through RestPoster."""
-    from tests.helpers import CaptureTransport, read_bodies
-
+    (reference task.ts:221-223, README.md:14-22) and submits through
+    RestPoster."""
+    posts: list[tuple[str, str]] = []
     monkeypatch.setenv("ETL_API", "http://etl.local")
     monkeypatch.setenv("ETL_LAYER", "19")
     out = P.handler(
-        spark=spark, payload=PAYLOAD, transport=CaptureTransport(tmp_path)
+        spark=spark,
+        payload=PAYLOAD,
+        transport=lambda url, body: posts.append((url, body)),
+        batch_size=1,
     )
-    assert out["layer"] == "19"
-    assert out["features"] == 2
-    posts = [json.loads(b) for b in read_bodies(tmp_path)]
-    assert all(p["url"] == "http://etl.local/api/layer/19/cot" for p in posts)
-    assert sum(len(json.loads(p["body"])["features"]) for p in posts) == 2
+    assert (out["layer"], out["features"], out["batches"]) == ("19", 2, 2)
+    assert len(posts) == 2
+    assert all(url == "http://etl.local/api/layer/19/cot" for url, _ in posts)
+    assert sum(len(json.loads(body)["features"]) for _, body in posts) == 2
 
 
 def test_handler_requires_endpoint_env(spark, monkeypatch):

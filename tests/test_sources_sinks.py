@@ -2,12 +2,14 @@
 
 Reference behaviors pinned: decode-or-throw (task.ts:119-121) via FAILFAST;
 the single-FeatureCollection POST (task.ts:107-110, 216) via the driver-side
-document sink and the batched REST sink (scale path).
+document sink and the batched REST sink.
 """
 
 from __future__ import annotations
 
+import inspect
 import json
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -120,53 +122,83 @@ def test_feature_collection_json_document(spark, sf_dir):
     assert all(f["type"] == "Feature" for f in doc["features"])
 
 
-def test_rest_post_batches(spark, sf_dir, tmp_path):
-    from tests.helpers import CapturePoster, read_bodies
-
+def test_rest_post_batches(spark, sf_dir):
+    bodies: list[str] = []
     feats = drone_features(synth_drones(spark, sf_dir)).repartition(4)
     n = feats.count()
-    posted = sinks.rest_post_batches(feats, CapturePoster(tmp_path), batch_size=40)
+    posted = sinks.rest_post_batches(feats, bodies.append, batch_size=40)
     assert posted == n
-    docs = [json.loads(b) for b in read_bodies(tmp_path)]
+    docs = [json.loads(b) for b in bodies]
     assert sum(len(d["features"]) for d in docs) == n
     assert all(len(d["features"]) <= 40 for d in docs)
     assert all(d["type"] == "FeatureCollection" for d in docs)
 
 
-def test_rest_post_batches_partition_local(spark, sf_dir, tmp_path):
-    """With batch_size above the row count, exactly one body per non-empty
-    partition appears — proof the batching runs partition-local on
-    executors rather than funneling rows through the driver."""
-    from tests.helpers import CapturePoster, read_bodies
+def test_rest_post_batches_partition_local(spark, sf_dir):
+    """Batching is global, not per partition: over 4 partitions,
+    ``batch_size`` above the row count posts exactly one body and
+    ``batch_size=40`` posts ``ceil(n / 40)`` bodies, every one 40 features
+    but the last, in row order. ``post`` runs on the driver, so a plain
+    ``list.append`` sees every body."""
+    feats = drone_features(synth_drones(spark, sf_dir)).repartition(4).cache()
+    lines = [json.loads(line) for line in feats.toJSON().collect()]
+    n = len(lines)
+    assert n > 80 and feats.rdd.getNumPartitions() == 4
 
-    feats = drone_features(synth_drones(spark, sf_dir)).repartition(4)
-    posted = sinks.rest_post_batches(
-        feats, CapturePoster(tmp_path), batch_size=1_000_000
-    )
-    assert posted == feats.count()
-    assert len(read_bodies(tmp_path)) == 4
+    whole: list[str] = []
+    assert sinks.rest_post_batches(feats, whole.append, batch_size=1_000_000) == n
+    assert len(whole) == 1
+    assert json.loads(whole[0])["features"] == lines
+
+    bodies: list[str] = []
+    assert sinks.rest_post_batches(feats, bodies.append, batch_size=40) == n
+    sizes = [len(json.loads(b)["features"]) for b in bodies]
+    assert len(bodies) == math.ceil(n / 40)
+    assert sizes[:-1] == [40] * (len(bodies) - 1) and 0 < sizes[-1] <= 40
+    assert [f for b in bodies for f in json.loads(b)["features"]] == lines
+    feats.unpersist()
 
 
-def test_rest_post_batches_accepts_local_closure(spark, sf_dir, tmp_path):
-    """The serializability probe must use cloudpickle (what Spark ships
-    closures with), so a local closure — which stdlib pickle rejects —
-    passes the fail-fast check and runs."""
-    from tests.helpers import read_bodies
+def test_rest_post_batches_accepts_local_closure(spark, sf_dir):
+    """Any callable works as ``post``, a local closure included: nothing
+    is shipped to executors."""
+    bodies: list[str] = []
 
-    out = str(tmp_path)
-
-    def post(body):  # local closure over `out`: unpicklable via stdlib pickle
-        import os
-        import uuid
-
-        with open(os.path.join(out, f"{uuid.uuid4().hex}.json"), "w") as f:
-            f.write(body)
+    def post(body):
+        bodies.append(body)
 
     feats = drone_features(synth_drones(spark, sf_dir)).limit(10)
     posted = sinks.rest_post_batches(feats, post, batch_size=5)
     assert posted == 10
-    docs = [json.loads(b) for b in read_bodies(tmp_path)]
-    assert sum(len(d["features"]) for d in docs) == 10
+    docs = [json.loads(b) for b in bodies]
+    assert [len(d["features"]) for d in docs] == [5, 5]
+
+
+def test_rest_post_batches_stops_at_a_failed_post(spark, sf_dir):
+    """A raising ``post`` ends the call: the bodies already sent stay
+    sent, the rest are not sent, and none is sent twice. A ``batch_size``
+    below 1 is refused."""
+    bodies: list[str] = []
+
+    def post(body):
+        if len(bodies) == 2:
+            raise OSError("endpoint down")
+        bodies.append(body)
+
+    feats = drone_features(synth_drones(spark, sf_dir)).limit(10)
+    with pytest.raises(OSError, match="endpoint down"):
+        sinks.rest_post_batches(feats, post, batch_size=3)
+    assert [len(json.loads(b)["features"]) for b in bodies] == [3, 3]
+    with pytest.raises(ValueError, match="batch_size"):
+        sinks.rest_post_batches(feats, bodies.append, batch_size=0)
+
+
+def test_sinks_post_from_the_driver_only():
+    """The REST sink has one path, on the driver: no executor-side
+    ``mapPartitions`` body and no closure-pickling probe can come back."""
+    source = inspect.getsource(sinks)
+    assert "mapPartitions(" not in source
+    assert "cloudpickle" not in source
 
 
 def test_etl_endpoint_from_env():
