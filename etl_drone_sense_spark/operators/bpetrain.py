@@ -52,7 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bpe as BPE
-from .graph import narrow_private_session, on_session
+from .graph import narrow_private_session, observed_checkpoint, on_session
 
 # Adjacent-pair extraction from a token list: the same expression the
 # r13 full-pass trainer counts with (plans/curation.py) — kept textually
@@ -88,7 +88,7 @@ def _init_training_state(
     start from the IDENTICAL state, so the initialization lives in one
     place instead of two lockstep copies (r15 ADVICE)."""
     caller = docs.sparkSession
-    vocab0 = (
+    vocab0, seen = observed_checkpoint(
         docs.select(F.explode(BPE.words(F.col(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("wc"))
@@ -96,9 +96,8 @@ def _init_training_state(
             F.regexp_replace("w", "(.)", f"{BPE.O}$1{BPE.C}").alias("state"),
             "wc",
         )
-        .localCheckpoint(eager=True)
     )
-    priv = narrow_private_session(caller, vocab0.count())
+    priv = narrow_private_session(caller, seen["rows"])
     vocab = on_session(vocab0, priv)
 
     pc = (

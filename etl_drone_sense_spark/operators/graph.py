@@ -9,8 +9,8 @@ computes them with iterative min-label propagation:
 * each round, a node adopts the minimum label among itself and its
   neighbors (one join edges⨝labels + one min-aggregate — both
   partial-aggregable equi-shuffles on node id);
-* converges in O(diameter) rounds; the driver checks the convergence
-  counter (a 1-row aggregate) each round, exactly like the k-means loop.
+* converges in O(diameter) rounds; each round's checkpoint job also
+  observes how many labels changed, so a round costs exactly one job.
 
 Label propagation is the standard large-graph CC shape (GraphX/Pregel use
 the same exchange pattern); dedup clusters have tiny diameters (chains of
@@ -23,7 +23,7 @@ import itertools
 import os
 import warnings
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # Process-unique suffix source for the global-temp-view handoff names —
@@ -66,6 +66,26 @@ def _narrow_private_session(spark: SparkSession, measured_rows: int) -> SparkSes
     return priv
 
 
+def _observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it with the values
+    observed while it materialized: ``rows`` (its row count) plus each
+    aggregate in ``aggs`` under its keyword.
+
+    The loops need a number from almost every checkpoint — the row count
+    that sizes the private session, or how many rows have not converged.
+    Asking for it afterwards (a ``count()``, or a limit-1 probe of the
+    unconverged rows) is a second job per checkpoint, and a limit probe is
+    worse than that: its generated code numbers its limit counter
+    globally, so every probe is new source that Janino compiles again,
+    whatever the size of the codegen cache. An ``Observation`` computes
+    the aggregates inside the checkpoint's own job, so a checkpoint costs
+    one job and compiles nothing on its second call."""
+    obs = Observation()
+    cols = [F.count(F.lit(1)).alias("rows")]
+    cols += [agg.alias(name) for name, agg in aggs.items()]
+    return df.observe(obs, *cols).localCheckpoint(eager=True), obs.get
+
+
 # Public aliases (r14): the private-session loop discipline (narrow
 # AQE-off SQLConf + cross-session re-homing of checkpointed relations)
 # is shared by non-graph iterative operators — the sampled BPE trainer
@@ -73,6 +93,10 @@ def _narrow_private_session(spark: SparkSession, measured_rows: int) -> SparkSes
 # way the label/distance loops here do.
 def narrow_private_session(spark: SparkSession, measured_rows: int) -> SparkSession:
     return _narrow_private_session(spark, measured_rows)
+
+
+def observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    return _observed_checkpoint(df, **aggs)
 
 
 def on_session(df: DataFrame, target: SparkSession) -> DataFrame:
@@ -116,44 +140,45 @@ def connected_components(
     leaked the narrow width to anything planned concurrently). The
     checkpointed inputs cross sessions as RDD-backed frames — no data
     moves and nothing recomputes. ``narrow_shuffle=False`` skips the
-    sizing count and the private session entirely and loops at the
-    caller's width.
+    private session and loops at the caller's width.
+
+    Every checkpoint is one job (the private session plans without AQE,
+    which would run each shuffle stage as a job of its own): the edge
+    pin, the symmetric edge relation, the seed labels, then one per
+    round — the round's checkpoint also observes how many labels
+    changed, which is the convergence test.
     """
     # localCheckpoint (not persist): the input may carry an arbitrarily deep
     # plan (e.g. the whole LSH pipeline), and every propagation round would
     # re-analyze it — checkpointing truncates the lineage so round N's plan
-    # is O(1), not O(N × input-plan).
-    sym = (
+    # is O(1), not O(N × input-plan). The pin is a narrow projection, so
+    # it adds no job beyond the input's own.
+    pairs, seen = _observed_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
     )
-
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-
     # Size the loop's shuffle width from the MEASURED edge count instead of
     # inheriting the caller's conf: every round shuffles the (tiny compared
     # to the corpus) edge/label relations, and eager localCheckpoints stop
     # AQE from coalescing those exchanges, so a 32-wide conf costs ~32
     # near-empty tasks per stage per round. ~50k edge-rows per partition
     # keeps tasks meaningful; the caller's conf stays the CAP, so a 100 TB
-    # edge list keeps its full width. sym is already materialized, so the
-    # count is a cheap scan, paid once. The narrow width lives on a
-    # PRIVATE session — no caller-visible conf mutation, nothing to
-    # restore (the sizing count stays inside the branch: with
-    # narrow_shuffle=False the count job would be a wasted scan — r5
-    # ADVICE).
+    # edge list keeps its full width. The symmetric relation holds at
+    # most twice the pinned rows. The narrow width lives on a PRIVATE
+    # session — no caller-visible conf mutation, nothing to restore.
     caller = edges.sparkSession
     if narrow_shuffle:
-        priv = _narrow_private_session(caller, sym.count())
-        sym = _on_session(sym, priv)
-        labels = _on_session(labels, priv)
+        pairs = _on_session(pairs, _narrow_private_session(caller, 2 * seen["rows"]))
+    sym = (
+        pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        sym.select(F.col("u").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("component"))
+        .localCheckpoint(eager=True)
+    )
 
     converged = False
     rounds = 0
@@ -166,25 +191,21 @@ def connected_components(
         )
         # One join computes BOTH the new label and the did-it-change
         # flag (a node changes iff a neighbor's label beats its own),
-        # so the convergence probe is a scan of the checkpointed
-        # result instead of a third shuffling join per round — the
-        # loop is overhead-bound on small relations, so one fewer
-        # exchange per round is ~30% off the steady-state wall clock.
-        flagged = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
+        # and the checkpoint job counts the flags as it materializes —
+        # no third shuffling join and no probe job per round.
+        flagged, seen = _observed_checkpoint(
+            labels.join(neighbor_min, "node", "left").select(
                 "node",
                 F.least(
                     F.col("component"),
                     F.coalesce(F.col("_nbr_min"), F.col("component")),
                 ).alias("component"),
                 (F.col("_nbr_min") < F.col("component")).alias("_changed"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            changed=F.count_if(F.col("_changed")),
         )
-        changed = flagged.filter(F.col("_changed")).limit(1).count()
         labels = flagged.drop("_changed")
-        if changed == 0:
+        if seen["changed"] == 0:
             converged = True
             break
     if narrow_shuffle:
@@ -282,8 +303,9 @@ def pagerank_fixed_point(
     the u side alone — in a symmetric list every endpoint appears as a
     source, so the union with the v side is a second full edge scan for
     nothing."""
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = sym.localCheckpoint(eager=True)
+    sym, seen = _observed_checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    )
 
     caller = edges.sparkSession
     # The whole loop — adjacency build included — runs on a PRIVATE
@@ -293,7 +315,7 @@ def pagerank_fixed_point(
     # their width). The adjacency build MUST share the loop's session:
     # its pinned hash(u, W) partitioning is what lets every round join
     # without moving the edges.
-    priv = _narrow_private_session(caller, sym.count())
+    priv = _narrow_private_session(caller, seen["rows"])
     loop_w = int(priv.conf.get("spark.sql.shuffle.partitions"))
     sym = _on_session(sym, priv)
     adj = sym.repartition(loop_w, "u").localCheckpoint(eager=True)
@@ -420,56 +442,53 @@ def flatten_hierarchy(
     node-scale state on the ancestor pointer; lineage is truncated per
     round (eager localCheckpoint) and the loop runs on a private session
     narrowed to the measured node count — the same caller-invisible
-    scoping discipline as connected_components above.
+    scoping discipline as connected_components above. A call costs one
+    job to pin the input plus one per round: each round's checkpoint
+    observes how many rows have not reached their root yet.
 
     The output is exact integers (depth = real edges to the root), so a
     fixed recurrence is bit-identical to any other engine's recursive-CTE
     evaluation — the registry query hash-checks this loop against DuckDB
     ``WITH RECURSIVE`` directly.
     """
-    state = nodes.select(
-        F.col(key).alias("key"),
-        F.coalesce(F.col(parent), F.col(key)).alias("ptr"),
-        F.when(F.col(parent).isNull(), F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("long")
-        .alias("steps"),
-        F.col(parent).isNull().alias("done"),
-    ).localCheckpoint(eager=True)
+    state, seen = _observed_checkpoint(
+        nodes.select(
+            F.col(key).alias("key"),
+            F.coalesce(F.col(parent), F.col(key)).alias("ptr"),
+            F.when(F.col(parent).isNull(), F.lit(0))
+            .otherwise(F.lit(1))
+            .cast("long")
+            .alias("steps"),
+            F.col(parent).isNull().alias("done"),
+        )
+    )
 
     caller = nodes.sparkSession
     converged = False
     # The doubling rounds run on a PRIVATE session sized to the measured
     # node count — same scoping discipline as connected_components
     # above: no caller-visible conf mutation, nothing to restore.
-    priv = _narrow_private_session(caller, state.count())
+    priv = _narrow_private_session(caller, seen["rows"])
     state = _on_session(state, priv)
-    # Probe AFTER each join, and only from round 2 on: after round j
-    # the jump is 2^j edges, so rounds 1-2 can only have converged on
-    # a ≤4-deep forest — for real hierarchies the early probes are
-    # guaranteed-false jobs. The loop is barrier-bound (each round is
-    # an eager localCheckpoint), so every skipped job is wall-clock.
-    for j in range(1, max_doublings + 1):
+    for _ in range(max_doublings):
         hop = state.select(
             F.col("key").alias("_k"),
             F.col("ptr").alias("_p"),
             F.col("steps").alias("_s"),
             F.col("done").alias("_d"),
         )
-        state = (
-            state.join(hop, state.ptr == hop._k)
-            .select(
+        state, seen = _observed_checkpoint(
+            state.join(hop, state.ptr == hop._k).select(
                 "key",
                 F.col("_p").alias("ptr"),
                 (F.col("steps") + F.col("_s")).alias("steps"),
                 F.col("_d").alias("done"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            open=F.count_if(~F.col("done")),
         )
-        if j >= min(2, max_doublings):
-            if state.filter(~F.col("done")).limit(1).count() == 0:
-                converged = True
-                break
+        if seen["open"] == 0:
+            converged = True
+            break
     state = _on_session(state, caller)
     if not converged:
         warnings.warn(
@@ -550,12 +569,14 @@ def sssp_fixed_rounds(
     pin, 6.6 s rounds 1-4, 1.4 s rounds 5-6; private-session bootstrap
     measured 0.01 s, refuting the r12 spin-up hypothesis. The loop cost
     was full-relation relaxation; delta removes exactly that term."""
-    sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
-    ).localCheckpoint(eager=True)
+    sym, seen = _observed_checkpoint(
+        edges.select(
+            F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
+        )
+    )
 
     caller = edges.sparkSession
-    priv = _narrow_private_session(caller, sym.count())
+    priv = _narrow_private_session(caller, seen["rows"])
     loop_w = int(priv.conf.get("spark.sql.shuffle.partitions"))
     sym = _on_session(sym, priv)
     adj = sym.repartition(loop_w, "u").localCheckpoint(eager=True)
@@ -647,15 +668,14 @@ def connected_components_contract(
 
     Only nodes appearing in an edge are returned (singletons label
     themselves by omission), matching ``connected_components``."""
-    base = (
+    base, seen = _observed_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     caller = edges.sparkSession
-    priv = _narrow_private_session(caller, base.count())
-    cur = _on_session(base, priv)
+    priv = _narrow_private_session(caller, seen["rows"])
+    cur, cur_rows = _on_session(base, priv), seen["rows"]
 
     converged = False
     for _ in range(max_rounds):
@@ -689,22 +709,20 @@ def connected_components_contract(
             .select(F.col("v").alias("u"), F.col("_mn").alias("v"))
         )
         part_self = minsd.select("u", F.col("_mn").alias("v"))
-        nxt = (
+        nxt, seen = _observed_checkpoint(
             part_nbrs.unionByName(part_self)
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        # exact set-equality convergence probe (both sides distinct +
-        # materialized): same count and empty difference
-        if (
-            nxt.count() == cur.count()
-            and nxt.exceptAll(cur).limit(1).count() == 0
-        ):
+        # exact set-equality convergence test (both sides distinct +
+        # materialized): the observed counts agree and the difference is
+        # empty. isEmpty() is a top-level CollectLimit, which is not
+        # whole-stage generated, so it compiles nothing new per call.
+        same = seen["rows"] == cur_rows and nxt.exceptAll(cur).isEmpty()
+        cur, cur_rows = nxt, seen["rows"]
+        if same:
             converged = True
-            cur = nxt
             break
-        cur = nxt
     if not converged:
         warnings.warn(
             f"connected_components_contract did not converge after "
@@ -774,11 +792,12 @@ def label_propagation_fixed(
     groupBy(v) over the count relation (<= message-scale in round 1,
     shrinking as labels coalesce). Lineage truncates every
     ``checkpoint_every`` rounds plus the final round."""
-    sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = sym.localCheckpoint(eager=True)
+    sym, seen = _observed_checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    )
 
     caller = edges.sparkSession
-    priv = _narrow_private_session(caller, sym.count())
+    priv = _narrow_private_session(caller, seen["rows"])
     loop_w = int(priv.conf.get("spark.sql.shuffle.partitions"))
     sym = _on_session(sym, priv)
     adj = sym.repartition(loop_w, "u").localCheckpoint(eager=True)

@@ -4,6 +4,18 @@ Defaults are chosen for correctness-parity with the DuckDB oracle (UTC
 session timezone, Arrow enabled) and for scale (AQE on, skew-join handling,
 partition coalescing).  On a real cluster the same builder is used — only
 ``master`` and the shuffle-partition count change.
+
+Spark keeps every class it generates (keyed by its source) in one LRU cache
+per JVM, 100 entries by default: far fewer than one pass over the bench
+queries generates, so at the default every repeat of a query compiled all
+of its classes again with Janino on the driver and task threads.  The
+cache is raised to 2048 entries (``spark.sql.codegen.cache.maxEntries``),
+enough to hold a bench pass, so a repeated query reuses the code it
+compiled the first time.  Whole-stage classes are also named without their
+stage id (``spark.sql.codegen.useIdInClassName``): AQE numbers codegen
+stages in the order it plans its query stages, which follows the order in
+which earlier stages finish, so a query like ``dedup_paragraph`` gave the
+same stage a new id, hence new source, on most calls.
 """
 
 from __future__ import annotations
@@ -27,6 +39,15 @@ _DEFAULTS = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.shuffle.partitions": "32",
+    # Generated-code cache (a static conf, read once per JVM): one 63-query
+    # bench pass at sf0.001 compiles 1,020 distinct classes (868 with the
+    # stage id out of the class names, below), far over the default of 100,
+    # so at the default every pass compiled them all again.
+    "spark.sql.codegen.cache.maxEntries": "2048",
+    # The stage id in a generated class name varies from call to call under
+    # AQE, which made identical code a cache miss: dedup_paragraph compiled
+    # 6-48 classes per warm call with the id, 0-4 without it.
+    "spark.sql.codegen.useIdInClassName": "false",
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
 }
@@ -52,3 +73,18 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_totals(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, ms spent compiling them) so far in this JVM.
+
+    The count is ``CodegenMetrics``' compile-time histogram count; the ms
+    are ``CodeGenerator.compileTime``, the exact running sum of the same
+    timings (the histogram keeps only a sample of them). A cache hit
+    compiles nothing and counts nothing, so the difference across a
+    repeated query is 0 when it reuses its code.
+    """
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return metrics.METRIC_COMPILATION_TIME().getCount(), generator.compileTime() / 1e6

@@ -6,6 +6,25 @@ on the driver, in order, so a plain ``list.append`` sees every body.
 
 from __future__ import annotations
 
+import itertools
+
+_GROUPS = itertools.count()
+
+
+def jobs_run(spark, call):
+    """``(call(), jobs)``: the Spark jobs ``call`` ran, counted through a
+    job group of its own (private sessions share the SparkContext and
+    the thread's job group, so their jobs count too)."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
 
 def skip_unless_frozen_artifacts_fresh():
     """Skip (with a retrain instruction) when the frozen codebooks were

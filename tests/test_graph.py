@@ -108,8 +108,9 @@ def test_connected_components_private_session_scoping(spark):
 
 
 def test_no_sizing_count_job_when_not_narrowing(spark, monkeypatch):
-    """ADVICE r5 regression: the shuffle-width sizing count is only spent
-    when narrow_shuffle=True actually uses the value."""
+    """ADVICE r5 regression: no job is spent on the shuffle-width sizing.
+    The edge count is observed inside the edge pin's checkpoint job, so
+    neither path calls count() — with or without narrowing."""
     # patch the CONCRETE class — pyspark.sql.DataFrame is a dispatch
     # facade in Spark 4 and instances don't resolve count() through it
     from pyspark.sql.classic.dataframe import DataFrame
@@ -127,16 +128,48 @@ def test_no_sizing_count_job_when_not_narrowing(spark, monkeypatch):
         return orig(self)
 
     monkeypatch.setattr(DataFrame, "count", counting)
-    calls["n"] = 0
-    connected_components(edges, max_iters=5, narrow_shuffle=True)
-    with_narrow = calls["n"]
-    calls["n"] = 0
-    connected_components(edges, max_iters=5, narrow_shuffle=False)
-    without = calls["n"]
-    assert without == with_narrow - 1, (
-        f"expected exactly one fewer count job without narrowing "
-        f"(got {with_narrow} vs {without})"
+    for narrow in (True, False):
+        connected_components(edges, max_iters=5, narrow_shuffle=narrow)
+        assert calls["n"] == 0, f"narrow_shuffle={narrow} called count()"
+
+
+def _jobs_checkpoints_compiles(spark, monkeypatch, call):
+    """Spark jobs, eager localCheckpoints and Janino compiles of ``call()``."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from etl_drone_sense_spark.session import codegen_totals
+    from tests.helpers import jobs_run
+
+    checkpoints = {"n": 0}
+    orig = DataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        checkpoints["n"] += 1
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    before = codegen_totals(spark)[0]
+    _, jobs = jobs_run(spark, call)
+    return jobs, checkpoints["n"], codegen_totals(spark)[0] - before
+
+
+def test_connected_components_one_job_per_checkpoint(spark, monkeypatch):
+    """The loop runs no job but its checkpoints: the sizing count and each
+    round's convergence test are observed inside checkpoint jobs. A path
+    of 8 nodes takes 8 rounds (7 carry label 0 to the far end, the 8th
+    changes nothing) after 3 checkpoints (edge pin, symmetric edges,
+    seed labels). A second call compiles no class."""
+    from etl_drone_sense_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(7)], "id_a long, id_b long"
     )
+    for _ in range(2):
+        jobs, checkpoints, compiles = _jobs_checkpoints_compiles(
+            spark, monkeypatch, lambda: connected_components(edges)
+        )
+        assert jobs == checkpoints == 3 + 8
+    assert compiles == 0
 
 
 def test_sf1_harness_carries_no_driver_side_closure():
@@ -215,6 +248,26 @@ def test_flatten_hierarchy_never_mutates_caller_conf(spark):
     nodes = spark.createDataFrame([(1, None), (2, 1)], "key long, parent long")
     flatten_hierarchy(nodes).collect()
     assert spark.conf.get(key) == before
+
+
+def test_flatten_hierarchy_one_job_per_round(spark, monkeypatch):
+    """A call runs 1 + rounds jobs: the input pin, then one checkpoint job
+    per doubling round that also observes how many rows are still open.
+    After round j every node within 2^(j-1) edges of its root is done, so
+    a 16-deep chain takes 5 rounds. A second call compiles no class: a
+    limit probe would compile new source every call."""
+    from etl_drone_sense_spark.operators.graph import flatten_hierarchy
+
+    nodes = spark.createDataFrame(
+        [(0, None)] + [(i, i - 1) for i in range(1, 17)],
+        "key long, parent long",
+    )
+    for _ in range(2):
+        jobs, checkpoints, compiles = _jobs_checkpoints_compiles(
+            spark, monkeypatch, lambda: flatten_hierarchy(nodes)
+        )
+        assert jobs == checkpoints == 1 + 5
+    assert compiles == 0
 
 
 def test_contract_cc_matches_union_find_and_propagation(spark):

@@ -885,3 +885,44 @@ def test_q18_single_lineitem_scan(spark, sf_dir):
     # the only HashAggregates are the partial/final pair of the one
     # per-order sum — the old plan had a second pair above the joins
     assert plan.count("HashAggregate") == 2, plan
+
+
+# Bench queries whose generated classes together overflow Spark's default
+# codegen cache of 100 entries, and that each run in well under a second
+# at sf0.001.
+_CODEGEN_WORKING_SET = (
+    "events_anomaly_mad",
+    "q2_min_cost_supplier",
+    "q8_market_share",
+    "q21_waiting_suppliers",
+    "q9_product_profit",
+    "q5_region_revenue",
+    "q3_shipping_priority",
+)
+
+
+def test_repeat_pass_compiles_no_class(spark, sf_dir):
+    """A second pass over a set of bench queries compiles no class: the
+    session's codegen cache holds the working set of a pass. The set
+    generates more than 100 classes, so at Spark's default cache size
+    the LRU evicts each class before its next use and every pass compiles
+    them all again. The cache is emptied first, so the first pass counts
+    the whole working set whatever ran before it in this JVM."""
+    from bench import run_noop
+    from etl_drone_sense_spark.session import codegen_totals
+
+    codegen = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    cache = codegen.getDeclaredField("cache")
+    cache.setAccessible(True)
+    cache.get(None).invalidateAll()
+
+    compiled = []
+    for _ in range(2):
+        before = codegen_totals(spark)[0]
+        for name in _CODEGEN_WORKING_SET:
+            run_noop(spark, get(name).fn, sf_dir)
+        compiled.append(codegen_totals(spark)[0] - before)
+    assert compiled[0] > 100, compiled
+    assert compiled[1] == 0, compiled

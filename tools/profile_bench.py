@@ -7,10 +7,14 @@ For each named query (any registered query; default: all bench queries):
   * writes `.explain("formatted")` at $SPARK_GRAFT_SF_DIR to
     <plans-dir>/<name>_<suffix>.txt,
   * warms it once on the smallest sibling SF (JVM/codegen),
-  * times `samples` noop-sink runs at $SPARK_GRAFT_SF_DIR (median reported).
+  * times `samples` noop-sink runs at $SPARK_GRAFT_SF_DIR (median reported),
+    counting for each the classes Janino compiled and the ms it took.
 
 Prints one JSON line per timed query:
-{"name": ..., "median_s": ..., "samples": [...]}. `--samples 0` only
+{"name": ..., "median_s": ..., "samples": [...], "compiles": [...],
+"compile_ms": [...]}. A warm sample compiles 0 classes; a query that
+compiles on every sample generates new source per call, or its working
+set no longer fits the session's codegen cache. `--samples 0` only
 dumps plans: no warm-up, no runs, no JSON line. E.g. a before/after pair
 for one query:
   python tools/profile_bench.py --plans-dir plans/r17 --suffix before \
@@ -37,7 +41,15 @@ from etl_drone_sense_spark.plans.registry import (  # noqa: E402
     all_queries,
     bench_queries,
 )
-from etl_drone_sense_spark.session import get_spark  # noqa: E402
+from etl_drone_sense_spark.session import codegen_totals, get_spark  # noqa: E402
+
+
+def timed_sample(spark, fn, sf_dir: str) -> tuple[float, int, float]:
+    """(wall s, classes compiled, compile ms) of one noop-sink run."""
+    c0, ms0 = codegen_totals(spark)
+    wall = run_noop(spark, fn, sf_dir)
+    c1, ms1 = codegen_totals(spark)
+    return wall, c1 - c0, ms1 - ms0
 
 
 def main() -> int:
@@ -88,13 +100,14 @@ def main() -> int:
             continue
         if not args.no_warm:
             run_noop(spark, fn, warm_dir(sf_dir))
-        samples = [
-            round(run_noop(spark, fn, sf_dir), 3) for _ in range(args.samples)
-        ]
+        runs = [timed_sample(spark, fn, sf_dir) for _ in range(args.samples)]
+        samples = [round(wall, 3) for wall, _, _ in runs]
         print(json.dumps({
             "name": name,
             "median_s": round(statistics.median(samples), 3),
             "samples": samples,
+            "compiles": [n for _, n, _ in runs],
+            "compile_ms": [round(ms, 1) for _, _, ms in runs],
         }), flush=True)
     return 0
 
