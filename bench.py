@@ -41,6 +41,7 @@ import time
 
 from etl_drone_sense_spark.caching import release_caches
 from etl_drone_sense_spark.plans.registry import bench_queries
+from etl_drone_sense_spark.schemas import TABLE_NAMES
 from etl_drone_sense_spark.session import get_spark
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -166,10 +167,7 @@ def _measure_attempt(spark, queries, sf_dir, budget, warm: bool) -> dict:
 
     oracles = all_oracles()
     con = duckdb.connect()
-    for t_name in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
+    for t_name in TABLE_NAMES:
         p = f"{sf_dir}/{t_name}.parquet"
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.execute(f"CREATE VIEW {t_name} AS SELECT * FROM '{src}'")

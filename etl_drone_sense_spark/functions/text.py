@@ -168,16 +168,6 @@ def shingle_hashes_sql(col: str, n: int = 3) -> str:
     )
 
 
-def minhash_component(hashes: Column, seed: int) -> Column:
-    """Signature component ``seed`` from the pre-computed shingle hashes."""
-    a, b = _mh_a(seed), _mh_b(seed)
-    return F.array_min(
-        F.transform(
-            hashes, lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(MINHASH_P))
-        )
-    )
-
-
 def minhash_component_sql(hashes: str, seed: int) -> str:
     a, b = _mh_a(seed), _mh_b(seed)
     return (
@@ -235,16 +225,6 @@ def simhash_bits_sql(col: str, nbits: int = 16) -> str:
         for i in range(nbits)
     ]
     return "concat(" + ", ".join(bits) + ")"
-
-
-def hamming_bits(a: Column, b: Column, nbits: int = 16) -> Column:
-    """Hamming distance between two '0'/'1' fingerprint strings."""
-    out = F.lit(0)
-    for i in range(nbits):
-        out = out + F.when(
-            F.substring(a, i + 1, 1) != F.substring(b, i + 1, 1), 1
-        ).otherwise(0)
-    return out
 
 
 def hamming_bits_sql(a: str, b: str, nbits: int = 16) -> str:
@@ -316,23 +296,6 @@ def winnow_from_hashes(hv: Column, window: int = 4) -> Column:
         )
     wins = F.slice(m, 1, F.greatest(F.size(hv) - (window - 1), F.lit(1)))
     return F.array_distinct(wins)
-
-
-def winnow_fingerprints(col: Column, shingle_n: int = 3, window: int = 4) -> Column:
-    """Winnowing fingerprint set (MOSS): the min shingle-hash in every
-    sliding window of ``window`` consecutive k-gram hashes, deduplicated.
-
-    Guarantees at least one fingerprint per ``window + shingle_n - 1``
-    tokens, and that matching runs of that length between two documents
-    share a fingerprint — the standard local-fingerprinting scheme for
-    plagiarism/overlap detection. Built on the same one-md5-per-shingle
-    hash relation as minhash.
-
-    Convenience one-expression form — re-evaluates the hash subtree per
-    window; the scalable path materializes hashes first and calls
-    ``winnow_from_hashes`` (see text_winnowing in plans/extensions.py).
-    """
-    return winnow_from_hashes(shingle_hashes(col, shingle_n), window)
 
 
 def winnow_fingerprints_sql(col: str, shingle_n: int = 3, window: int = 4) -> str:

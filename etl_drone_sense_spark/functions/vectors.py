@@ -138,21 +138,6 @@ def hyperplanes(dim: int, nbits: int, seed: str = "hp") -> list[list[int]]:
     ]
 
 
-def plane_lit(plane: list[int]) -> Column:
-    return F.array(*[F.lit(float(w)) for w in plane])
-
-
-def hyperplane_bit(vec: Column, plane: list[int]) -> Column:
-    return F.when(dot(vec, plane_lit(plane)) >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-
-def hyperplane_bit_sql(vec: str, plane_expr: str) -> str:
-    """``plane_expr`` must be a COLUMN/CTE reference to the plane list, not
-    an inline literal: a literal inside ``dot_sql``'s per-index lambda gets
-    re-constructed per element per row (measured ~30× slower in DuckDB)."""
-    return f"CASE WHEN {dot_sql(vec, plane_expr)} >= 0 THEN '1' ELSE '0' END"
-
-
 def hyperplane_bit_fixed_sql(qvec: str, plane_expr: str) -> str:
     """Sign bit over a quantize_fixed_sql vector — integer arithmetic, so
     the result is evaluation-order-independent and matches any engine's

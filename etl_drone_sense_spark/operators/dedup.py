@@ -63,13 +63,6 @@ def minhash_from_hashes(hashes: Column, k: int = 12) -> Column:
     )
 
 
-def minhash_signature(text_col: Column, k: int = 12, shingle_n: int = 3) -> Column:
-    """Convenience one-expression signature. NOTE: inside a single projection
-    the shingle-hash subtree is re-evaluated per component; the scalable path
-    (``minhash_lsh_pairs``) materializes ``shingle_hashes`` first."""
-    return minhash_from_hashes(TXT.shingle_hashes(text_col, shingle_n), k)
-
-
 def _band_buckets(mhs: Column, k: int, bands: int) -> Column:
     """Per-band bucket keys: md5 of the '|'-joined signature slice."""
     rows = k // bands

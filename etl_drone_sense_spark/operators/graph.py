@@ -31,7 +31,11 @@ from pyspark.sql import functions as F
 _VIEW_IDS = itertools.count()
 
 
-def _narrow_private_session(spark: SparkSession, measured_rows: int) -> SparkSession:
+# The private-session loop discipline (narrow AQE-off SQLConf, observed
+# checkpoints, cross-session re-homing) is shared with the sampled BPE
+# trainer (operators/bpetrain.py), which loops over a vocab-scale relation
+# the way the label/distance loops here do.
+def narrow_private_session(spark: SparkSession, measured_rows: int) -> SparkSession:
     """A fresh session (shared SparkContext and RDDs, ISOLATED SQLConf)
     whose shuffle width is sized to the measured loop relation.
 
@@ -66,7 +70,7 @@ def _narrow_private_session(spark: SparkSession, measured_rows: int) -> SparkSes
     return priv
 
 
-def _observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+def observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
     """Eagerly ``localCheckpoint`` ``df`` and return it with the values
     observed while it materialized: ``rows`` (its row count) plus each
     aggregate in ``aggs`` under its keyword.
@@ -86,24 +90,7 @@ def _observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict
     return df.observe(obs, *cols).localCheckpoint(eager=True), obs.get
 
 
-# Public aliases (r14): the private-session loop discipline (narrow
-# AQE-off SQLConf + cross-session re-homing of checkpointed relations)
-# is shared by non-graph iterative operators — the sampled BPE trainer
-# (operators/bpetrain.py) loops over a vocab-scale relation exactly the
-# way the label/distance loops here do.
-def narrow_private_session(spark: SparkSession, measured_rows: int) -> SparkSession:
-    return _narrow_private_session(spark, measured_rows)
-
-
-def observed_checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
-    return _observed_checkpoint(df, **aggs)
-
-
 def on_session(df: DataFrame, target: SparkSession) -> DataFrame:
-    return _on_session(df, target)
-
-
-def _on_session(df: DataFrame, target: SparkSession) -> DataFrame:
     """Re-home ``df`` (which must already be materialized — a
     localCheckpointed LogicalRDD — so nothing is recomputed) onto
     ``target`` via a global temp view. RDDs belong to the shared
@@ -133,7 +120,7 @@ def connected_components(
     definition their own singleton cluster and never need relabeling.
 
     With ``narrow_shuffle=True`` (default) the propagation rounds run on
-    a PRIVATE session (``_narrow_private_session``) whose shuffle width
+    a PRIVATE session (``narrow_private_session``) whose shuffle width
     is sized to the measured edge count — the narrowing is invisible to
     the caller's session, so concurrent queries are unaffected (r10
     VERDICT item 1d: the old design mutated the session-global conf and
@@ -153,7 +140,7 @@ def connected_components(
     # re-analyze it — checkpointing truncates the lineage so round N's plan
     # is O(1), not O(N × input-plan). The pin is a narrow projection, so
     # it adds no job beyond the input's own.
-    pairs, seen = _observed_checkpoint(
+    pairs, seen = observed_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     )
     # Size the loop's shuffle width from the MEASURED edge count instead of
@@ -167,7 +154,7 @@ def connected_components(
     # session — no caller-visible conf mutation, nothing to restore.
     caller = edges.sparkSession
     if narrow_shuffle:
-        pairs = _on_session(pairs, _narrow_private_session(caller, 2 * seen["rows"]))
+        pairs = on_session(pairs, narrow_private_session(caller, 2 * seen["rows"]))
     sym = (
         pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -193,7 +180,7 @@ def connected_components(
         # flag (a node changes iff a neighbor's label beats its own),
         # and the checkpoint job counts the flags as it materializes —
         # no third shuffling join and no probe job per round.
-        flagged, seen = _observed_checkpoint(
+        flagged, seen = observed_checkpoint(
             labels.join(neighbor_min, "node", "left").select(
                 "node",
                 F.least(
@@ -211,7 +198,7 @@ def connected_components(
     if narrow_shuffle:
         # Hand the final (checkpointed) labels back to the caller's
         # session so downstream plans are built at the caller's width.
-        labels = _on_session(labels, caller)
+        labels = on_session(labels, caller)
     if not converged:
         # Partial labels are silently wrong for any component whose graph
         # diameter exceeds max_iters (long near-duplicate chains) — make
@@ -303,21 +290,21 @@ def pagerank_fixed_point(
     the u side alone — in a symmetric list every endpoint appears as a
     source, so the union with the v side is a second full edge scan for
     nothing."""
-    sym, seen = _observed_checkpoint(
+    sym, seen = observed_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     )
 
     caller = edges.sparkSession
     # The whole loop — adjacency build included — runs on a PRIVATE
     # session sized to the measured edge count (see
-    # _narrow_private_session: the narrowing is invisible to the
+    # narrow_private_session: the narrowing is invisible to the
     # caller, so nothing needs restoring and concurrent queries keep
     # their width). The adjacency build MUST share the loop's session:
     # its pinned hash(u, W) partitioning is what lets every round join
     # without moving the edges.
-    priv = _narrow_private_session(caller, seen["rows"])
+    priv = narrow_private_session(caller, seen["rows"])
     loop_w = int(priv.conf.get("spark.sql.shuffle.partitions"))
-    sym = _on_session(sym, priv)
+    sym = on_session(sym, priv)
     adj = sym.repartition(loop_w, "u").localCheckpoint(eager=True)
     # Node-scale out-degree: the groupBy rides adj's pinned partitioning
     # (no exchange), and the checkpoint keeps hash(u, W) for the
@@ -413,7 +400,7 @@ def pagerank_fixed_point(
         # the loop's scope.
         if i == iters or (i % checkpoint_every == 0 and iters - i >= 2):
             state = state.localCheckpoint(eager=True)
-    return _on_session(state.select("node", "rank"), caller)
+    return on_session(state.select("node", "rank"), caller)
 
 
 def flatten_hierarchy(
@@ -451,7 +438,7 @@ def flatten_hierarchy(
     evaluation — the registry query hash-checks this loop against DuckDB
     ``WITH RECURSIVE`` directly.
     """
-    state, seen = _observed_checkpoint(
+    state, seen = observed_checkpoint(
         nodes.select(
             F.col(key).alias("key"),
             F.coalesce(F.col(parent), F.col(key)).alias("ptr"),
@@ -468,8 +455,8 @@ def flatten_hierarchy(
     # The doubling rounds run on a PRIVATE session sized to the measured
     # node count — same scoping discipline as connected_components
     # above: no caller-visible conf mutation, nothing to restore.
-    priv = _narrow_private_session(caller, seen["rows"])
-    state = _on_session(state, priv)
+    priv = narrow_private_session(caller, seen["rows"])
+    state = on_session(state, priv)
     for _ in range(max_doublings):
         hop = state.select(
             F.col("key").alias("_k"),
@@ -477,7 +464,7 @@ def flatten_hierarchy(
             F.col("steps").alias("_s"),
             F.col("done").alias("_d"),
         )
-        state, seen = _observed_checkpoint(
+        state, seen = observed_checkpoint(
             state.join(hop, state.ptr == hop._k).select(
                 "key",
                 F.col("_p").alias("ptr"),
@@ -489,7 +476,7 @@ def flatten_hierarchy(
         if seen["open"] == 0:
             converged = True
             break
-    state = _on_session(state, caller)
+    state = on_session(state, caller)
     if not converged:
         warnings.warn(
             f"flatten_hierarchy did not converge after {max_doublings} "
@@ -569,16 +556,16 @@ def sssp_fixed_rounds(
     pin, 6.6 s rounds 1-4, 1.4 s rounds 5-6; private-session bootstrap
     measured 0.01 s, refuting the r12 spin-up hypothesis. The loop cost
     was full-relation relaxation; delta removes exactly that term."""
-    sym, seen = _observed_checkpoint(
+    sym, seen = observed_checkpoint(
         edges.select(
             F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
         )
     )
 
     caller = edges.sparkSession
-    priv = _narrow_private_session(caller, seen["rows"])
+    priv = narrow_private_session(caller, seen["rows"])
     loop_w = int(priv.conf.get("spark.sql.shuffle.partitions"))
-    sym = _on_session(sym, priv)
+    sym = on_session(sym, priv)
     adj = sym.repartition(loop_w, "u").localCheckpoint(eager=True)
 
     state = (
@@ -636,7 +623,7 @@ def sssp_fixed_rounds(
         # ~5 driver jobs to skip at most one near-free delta round. The
         # delta formulation already makes post-convergence rounds cheap
         # (no messages, node-scale re-aggregation only).
-    return _on_session(state.select("node", "dist"), caller)
+    return on_session(state.select("node", "dist"), caller)
 
 
 def connected_components_contract(
@@ -668,14 +655,14 @@ def connected_components_contract(
 
     Only nodes appearing in an edge are returned (singletons label
     themselves by omission), matching ``connected_components``."""
-    base, seen = _observed_checkpoint(
+    base, seen = observed_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
     caller = edges.sparkSession
-    priv = _narrow_private_session(caller, seen["rows"])
-    cur, cur_rows = _on_session(base, priv), seen["rows"]
+    priv = narrow_private_session(caller, seen["rows"])
+    cur, cur_rows = on_session(base, priv), seen["rows"]
 
     converged = False
     for _ in range(max_rounds):
@@ -709,7 +696,7 @@ def connected_components_contract(
             .select(F.col("v").alias("u"), F.col("_mn").alias("v"))
         )
         part_self = minsd.select("u", F.col("_mn").alias("v"))
-        nxt, seen = _observed_checkpoint(
+        nxt, seen = observed_checkpoint(
             part_nbrs.unionByName(part_self)
             .filter(F.col("u") != F.col("v"))
             .distinct()
@@ -735,7 +722,7 @@ def connected_components_contract(
     ).unionByName(
         cur.select(F.col("v").alias("node"), F.col("v").alias("component"))
     ).distinct()
-    return _on_session(labels.localCheckpoint(eager=True), caller)
+    return on_session(labels.localCheckpoint(eager=True), caller)
 
 
 def dedup_clusters(
@@ -792,14 +779,14 @@ def label_propagation_fixed(
     groupBy(v) over the count relation (<= message-scale in round 1,
     shrinking as labels coalesce). Lineage truncates every
     ``checkpoint_every`` rounds plus the final round."""
-    sym, seen = _observed_checkpoint(
+    sym, seen = observed_checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     )
 
     caller = edges.sparkSession
-    priv = _narrow_private_session(caller, seen["rows"])
+    priv = narrow_private_session(caller, seen["rows"])
     loop_w = int(priv.conf.get("spark.sql.shuffle.partitions"))
-    sym = _on_session(sym, priv)
+    sym = on_session(sym, priv)
     adj = sym.repartition(loop_w, "u").localCheckpoint(eager=True)
     # symmetric input: every node appears as a source, so the label
     # seed rides adj's pinned hash(u, W) partitioning (no exchange)
@@ -840,4 +827,4 @@ def label_propagation_fixed(
         )
         if i == iters or (i % checkpoint_every == 0 and iters - i >= 2):
             labels = labels.localCheckpoint(eager=True)
-    return _on_session(labels, caller)
+    return on_session(labels, caller)

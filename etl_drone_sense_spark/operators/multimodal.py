@@ -128,8 +128,6 @@ def _synth_media(
     if spread:
         from ..sources.readers import rebalance_for_compute
 
-        # no cache_key: callers pass docs from DIFFERENT sf_dirs, and
-        # the shuffle-free probe is cheap
         docs = rebalance_for_compute(docs)
     return docs.select("doc_id").mapInPandas(
         batches, schema="media_id long, payload binary"
@@ -3020,13 +3018,6 @@ def _zigzag(r: int) -> int:
 
 def _unzigzag(u: int) -> int:
     return (u >> 1) if u & 1 == 0 else -((u + 1) >> 1)
-
-
-def _rice_param(zigs: list[int]) -> int:
-    if not zigs:
-        return 0
-    mean = sum(zigs) // len(zigs)
-    return min(max(mean.bit_length() - 1, 0), 30)
 
 
 def _bits_of(vals, width: int) -> np.ndarray:

@@ -4,9 +4,8 @@ Batch forms over the ``events`` fixture; the streaming forms (watermarked)
 live in ``streaming/pipeline.py`` and share these semantics:
 
 * tumbling/sliding windows — ``F.window`` (epoch-aligned buckets);
-* session windows          — ``F.session_window`` (gap-based), plus an
-  equivalent lag+cumsum formulation whose SQL rendering is the DuckDB
-  oracle for the driver's correctness gate.
+* session windows          — ``F.session_window`` (gap-based); the DuckDB
+  oracle restates it as the equivalent lag+cumsum formulation.
 
 Scale shape: both are a single shuffle on the grouping key
 (user_id / user_id+window); map-side partial aggregation applies to the
@@ -17,7 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def tumbling_window_agg(events: DataFrame, duration: str = "15 minutes") -> DataFrame:
@@ -65,34 +63,4 @@ def sessionize(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
             "n_events",
             "sum_value",
         )
-    )
-
-
-def sessionize_lag(events: DataFrame, gap_seconds: int = 600) -> DataFrame:
-    """Equivalent gap-based sessionization via lag + running sum (the
-    'islands' formulation). Used to cross-check ``session_window`` and as
-    the SQL-oracle-friendly form. Output schema matches ``sessionize``."""
-    w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w_user)
-    # session_window semantics: an event extends the session iff it starts
-    # strictly before prev_ts + gap, i.e. new session when diff >= gap.
-    # Exact integer µs — double epochs would wobble at the boundary.
-    new_session = (
-        prev.isNull()
-        | ((F.unix_micros("ts") - F.unix_micros(prev)) >= gap_seconds * 1_000_000)
-    ).cast("int")
-    sessions = events.withColumn(
-        "_sess",
-        F.sum(new_session).over(
-            w_user.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    return (
-        sessions.groupBy("user_id", "_sess")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("sum_value"),
-        )
-        .select("user_id", "session_start", "n_events", "sum_value")
     )

@@ -23,7 +23,7 @@ from ..functions import text as TXT
 from ..functions import vectors as V
 from ..operators import merge as M
 from ..operators import similarity
-from ..sources.readers import built_once, rebalance_for_compute
+from ..sources.readers import built_once, rebalance_for_compute, scratch_dir
 from ..streaming import pipeline as SP
 from .registry import register, t
 from .extensions import _seeded_embeddings, _SEEDED_EMB_CTE
@@ -2072,9 +2072,8 @@ def _stream_view_click_join(
     drift between the left-outer and full-outer cells would silently
     split the matrix (review catch r5)."""
     import os
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="sg_ssjo_")
+    base = scratch_dir("sg_ssjo_")
     cdir, vdir, ckpt, out = (
         os.path.join(base, d) for d in ("clicks", "views", "ckpt", "out")
     )
@@ -3502,9 +3501,8 @@ def stream_domain_budget_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the stream projection; the stateful handler touches only
     (doc_id, domain, n_tokens)."""
     import os as _os
-    import tempfile
 
-    feed = _os.path.join(tempfile.mkdtemp(prefix="sg_dombudget_"), "feed")
+    feed = _os.path.join(scratch_dir("sg_dombudget_"), "feed")
     docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     SP.land_in_order(
         [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)], feed

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TXT
 from ..functions import vectors as V
 from ..operators import dedup, multimodal, sessionize, similarity
-from ..sources.readers import built_once, rebalance_for_compute
+from ..sources.readers import built_once, rebalance_for_compute, scratch_dir
 from ..streaming import pipeline as SP
 from .registry import dsum, dsum_sql, register, t
 
@@ -2941,10 +2941,9 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded schedule is what makes it SQL-expressible)."""
     import datetime
     import os
-    import tempfile
     import uuid
 
-    base = tempfile.mkdtemp(prefix="sg_tumble_replay_")
+    base = scratch_dir("sg_tumble_replay_")
     landing, ckpt = os.path.join(base, "landing"), os.path.join(base, "ckpt")
     ev = t(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts")).first()[0]
@@ -3040,9 +3039,8 @@ def stream_watermark_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded replay (like a stream's trigger clock), not a data path."""
     import datetime
     import os
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="sg_wm_replay_")
+    base = scratch_dir("sg_wm_replay_")
     landing, ckpt, out = (
         os.path.join(base, d) for d in ("landing", "ckpt", "out")
     )
@@ -3106,9 +3104,8 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same oracle hash certifies both geometries."""
     import datetime
     import os
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="sg_ssj_")
+    base = scratch_dir("sg_ssj_")
     cdir, vdir, ckpt, out = (
         os.path.join(base, d) for d in ("clicks", "views", "ckpt", "out")
     )

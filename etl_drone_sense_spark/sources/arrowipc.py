@@ -2,8 +2,8 @@
 
 Arrow IPC is the columnar interchange format of the pyarrow/polars/
 DuckDB/Rust-arrow ecosystem (``.arrow`` / ``.arrows`` / Feather V2
-files); Spark has no built-in reader for it, so this is a PySpark-4
-custom DataSource in the repo's avrolite mold — driver touches only
+files); Spark has no built-in reader for it, so this declares one on the
+repo's landing-format shell (sources/datasource.py) — driver touches only
 metadata, executors read record batches.
 
 Design (reference parity note: the reference, task.ts:1-224, reads only
@@ -18,9 +18,10 @@ Part B — alongside parquet/JSON/CSV/ORC/text/Avro/XML):
   reads just its batch range. A few-huge-files landing parallelizes the
   same as a many-files one, exactly like avrolite's block-aligned
   byte-range splits.
-* **Arrow stays Arrow.** ``read()`` yields ``pyarrow.RecordBatch``
-  objects — the Python DataSource API's Arrow fast path — so rows are
-  never materialized as Python objects anywhere in the scan. (The Avro
+* **Arrow stays Arrow.** ``iter_arrow_batches`` yields
+  ``pyarrow.RecordBatch`` objects — the Python DataSource API's Arrow
+  fast path — so rows are never materialized as Python objects anywhere
+  in the scan, batch or stream. (The Avro
   source must decode row-by-row because the wire format is row-major;
   IPC is already columnar.)
 * **Compression per file.** The writer emits uncompressed, LZ4-frame, or
@@ -31,19 +32,6 @@ Part B — alongside parquet/JSON/CSV/ORC/text/Avro/XML):
 from __future__ import annotations
 
 import os
-
-# File discovery shared by writer fixtures and the reader.
-_EXTS = (".arrow", ".arrows", ".feather")
-
-
-def _arrow_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(_EXTS)
-        )
-    return [path] if path.endswith(_EXTS) and os.path.isfile(path) else []
 
 
 def write_arrow_ipc(
@@ -127,26 +115,17 @@ def build_split_index(path: str, target_bytes: int) -> list[tuple[int, int]]:
     return [(s, min(s + group, n)) for s in range(0, n, group)]
 
 
-def iter_arrow_batches(path: str, start: int, end: int):
-    """Record batches [start, end) of an IPC file via memory-mapping —
-    the executor-side read. Zero-copy until a compressed buffer forces
-    decode."""
+def iter_arrow_batches(path: str, start: int = 0, end: int | None = None):
+    """Record batches [start, end) of an IPC file (``end=None``: to the
+    last) via memory-mapping — the executor-side read, batch scan and
+    stream alike. Zero-copy until a compressed buffer forces decode."""
     import pyarrow as pa
 
     with pa.memory_map(path, "r") as mm:
         reader = pa.ipc.open_file(mm)
-        for i in range(start, min(end, reader.num_record_batches)):
+        n = reader.num_record_batches
+        for i in range(start, n if end is None else min(end, n)):
             yield reader.get_batch(i)
-
-
-def iter_arrow_rows(path: str):
-    """Yield TUPLES (schema field order) from an IPC file — the
-    streaming-partition row path (the micro-batch stream base yields
-    rows, not batches). Memory is bounded by one record batch."""
-    with_batches = iter_arrow_batches(path, 0, 1 << 62)
-    for batch in with_batches:
-        cols = [c.to_pylist() for c in batch.columns]
-        yield from zip(*cols)
 
 
 def write_arrow_ipc_records(
@@ -194,95 +173,26 @@ def write_arrow_ipc_records(
     return int(sum(r["n"] for r in counts))
 
 
+def _schema(path: str) -> str:
+    import pyarrow as pa
+
+    with pa.memory_map(path, "r") as mm:
+        return spark_ddl_for(pa.ipc.open_file(mm).schema)
+
+
 def make_datasource():
-    """Build the DataSource class lazily (pyspark import kept out of the
-    pure-pyarrow layer, mirroring avrolite)."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
+    """``format("arrowipc")``: Arrow IPC / Feather V2 files, on the shared
+    landing shell (sources/datasource.py). Built lazily so the
+    pure-pyarrow layer imports without pyspark."""
+    from .datasource import landing_source
+
+    return landing_source(
+        "arrowipc",
+        (".arrow", ".arrows", ".feather"),
+        _schema,
+        iter_arrow_batches,
+        build_split_index,
     )
-
-    from .datasource import AppendOnlyLandingStreamReader
-
-    class _IpcPartition(InputPartition):
-        def __init__(self, path: str, start: int, end: int):
-            self.path = path
-            self.start = start
-            self.end = end
-
-    class ArrowIpcReader(DataSourceReader):
-        def __init__(self, options):
-            self.path = options.get("path")
-            if not self.path:
-                raise ValueError("arrowipc source requires a path")
-            self.split_target = int(
-                options.get("split_target_bytes", 32 * 1024 * 1024)
-            )
-            if self.split_target <= 0:
-                raise ValueError("split_target_bytes must be positive")
-
-        def partitions(self):
-            parts = []
-            for p in _arrow_files(self.path):
-                for s, e in build_split_index(p, self.split_target):
-                    parts.append(_IpcPartition(p, s, e))
-            if not parts:
-                raise ValueError(f"arrowipc: no batches under {self.path}")
-            return parts
-
-        def read(self, partition):
-            # RecordBatch yield = the DataSource Arrow fast path: the
-            # batch crosses to the JVM as Arrow, never as Python rows.
-            yield from iter_arrow_batches(
-                partition.path, partition.start, partition.end
-            )
-
-    class ArrowIpcStreamReader(AppendOnlyLandingStreamReader):
-        """Arrow IPC landing zone as a micro-batch STREAM — the shared
-        append-only offset protocol (prefix-hash enforced, exactly-once
-        via checkpointed file-count offsets) over ``.arrows`` files; one
-        partition per new file, executor-side decode. Streaming keeps
-        whole-file partitions (a landing file arrives as one object);
-        the record-batch split index is the BATCH scan's
-        multi-GB-file path."""
-
-        def __init__(self, options):
-            self.path = options.get("path")
-            if not self.path:
-                raise ValueError("arrowipc source requires a path")
-
-        def _list(self) -> list[str]:
-            return _arrow_files(self.path)
-
-        def _rows(self, path: str):
-            yield from iter_arrow_rows(path)
-
-    class ArrowIpcDataSource(DataSource):
-        """``format("arrowipc")`` — Arrow IPC / Feather V2 files, batch
-        scan with footer-indexed record-batch splits, and an append-only
-        landing STREAM."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "arrowipc"
-
-        def schema(self):
-            import pyarrow as pa
-
-            files = _arrow_files(self.options.get("path", ""))
-            if not files:
-                raise ValueError("arrowipc: no .arrow files at path")
-            with pa.memory_map(files[0], "r") as mm:
-                return spark_ddl_for(pa.ipc.open_file(mm).schema)
-
-        def reader(self, schema):
-            return ArrowIpcReader(self.options)
-
-        def streamReader(self, schema):
-            return ArrowIpcStreamReader(self.options)
-
-    return ArrowIpcDataSource
 
 
 def register(spark) -> None:

@@ -24,9 +24,10 @@ raise ``ValueError`` and quarantine. Anything else raises
 ``ValueError`` — same quarantine-friendly honesty as the multimodal
 codec tier.
 
-Scale posture: planning is driver-side metadata only; small landing
-files are one partition each and executors decode independently (the
-dronesense DataSource pattern). Files larger than ``split_target_bytes``
+Scale posture: the DataSource is declared on the shared landing shell
+(sources/datasource.py — planning is driver-side metadata only, batch and
+stream). Small files are one partition each and executors decode
+independently. Files larger than ``split_target_bytes``
 (option, default 32 MiB) are split at BLOCK boundaries by a driver-side
 sync-marker index (``build_split_index`` — cost proportional to block
 COUNT, ~30 bytes read per block, never the data), so one multi-GB
@@ -666,108 +667,28 @@ def _decode_block(raw: bytes, n_recs: int, fields, datetime):
 # --- PySpark DataSource -----------------------------------------------------
 
 
-def _avro_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".avro")
-        )
-    return [path]
+def _schema(path: str) -> str:
+    return spark_ddl_for(read_avro_header(path)[0])
+
+
+def _splits(path: str, target_bytes: int) -> list[tuple]:
+    """The whole file when it is at most ``target_bytes``, else its
+    block-aligned byte ranges: a few-huge-files landing parallelizes the
+    same as a many-files one."""
+    if os.path.getsize(path) <= target_bytes:
+        return [()]
+    return build_split_index(path, target_bytes)
 
 
 def make_datasource():
-    """Build the DataSource class lazily (pyspark import kept out of the
-    codec layer so the pure-python reader/writer work anywhere)."""
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
+    """``format("avrolite")``: Avro object container files, on the shared
+    landing shell (sources/datasource.py). Built lazily so the codec
+    layer imports without pyspark."""
+    from .datasource import landing_source
+
+    return landing_source(
+        "avrolite", (".avro",), _schema, iter_avro_rows, _splits
     )
-
-    from .datasource import AppendOnlyLandingStreamReader
-
-    class _AvroPartition(InputPartition):
-        def __init__(self, path: str, start: int | None = None, end: int | None = None):
-            self.path = path
-            self.start = start
-            self.end = end
-
-    class AvroLiteReader(DataSourceReader):
-        def __init__(self, options):
-            self.path = options.get("path")
-            if not self.path:
-                raise ValueError("avrolite source requires a path")
-            self.split_target = int(
-                options.get("split_target_bytes", 32 * 1024 * 1024)
-            )
-            if self.split_target <= 0:
-                raise ValueError("split_target_bytes must be positive")
-
-        def partitions(self):
-            # One partition per small file; large files fan out to
-            # block-aligned byte-range splits (driver cost ∝ block count
-            # — see build_split_index). A few-huge-files landing zone
-            # parallelizes the same as a many-files one.
-            parts = []
-            for p in _avro_files(self.path):
-                if os.path.getsize(p) > self.split_target:
-                    parts.extend(
-                        _AvroPartition(p, s, e)
-                        for s, e in build_split_index(p, self.split_target)
-                    )
-                else:
-                    parts.append(_AvroPartition(p))
-            return parts
-
-        def read(self, partition):
-            yield from iter_avro_rows(
-                partition.path, partition.start, partition.end
-            )
-
-    class AvroLiteStreamReader(AppendOnlyLandingStreamReader):
-        """Avro landing zone as a micro-batch STREAM — the shared
-        append-only offset protocol (prefix-hash enforced, exactly-once
-        via checkpointed file-count offsets) over ``.avro`` container
-        files; one partition per new file, executor-side decode.
-        Streaming keeps whole-file partitions (a landing file arrives as
-        one object); the byte-range split index is the BATCH scan's
-        multi-GB-file path."""
-
-        def __init__(self, options):
-            self.path = options.get("path")
-            if not self.path:
-                raise ValueError("avrolite source requires a path")
-
-        def _list(self) -> list[str]:
-            return _avro_files(self.path)
-
-        def _rows(self, path: str):
-            yield from iter_avro_rows(path)
-
-    class AvroLiteDataSource(DataSource):
-        """``format("avrolite")`` — Avro object container files (batch
-        scan with block-level splits, and an append-only landing
-        STREAM)."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "avrolite"
-
-        def schema(self):
-            files = _avro_files(self.options.get("path", ""))
-            if not files:
-                raise ValueError("avrolite: no .avro files at path")
-            schema, _, _, _ = read_avro_header(files[0])
-            return spark_ddl_for(schema)
-
-        def reader(self, schema):
-            return AvroLiteReader(self.options)
-
-        def streamReader(self, schema):
-            return AvroLiteStreamReader(self.options)
-
-    return AvroLiteDataSource
 
 
 def register(spark) -> None:

@@ -14,8 +14,11 @@ Decode modes mirror the reference's decode-or-throw (task.ts:119-121):
 
 from __future__ import annotations
 
+import atexit
 import json
 import operator
+import os
+import shutil
 import tempfile
 import threading
 import urllib.request
@@ -25,13 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import DRONE_LOCATION_SCHEMA, TPCH_SCHEMAS
-
-
-def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -49,8 +45,6 @@ def fixture_fingerprint(path: str) -> tuple[str, int, int]:
     1000×. Keying on the footer's stat makes every such cache self-heal.
     ``built_once`` below is the one place fixture-derived builds (tables,
     landing and sink dirs) are keyed on it."""
-    import os
-
     probe = path
     if os.path.isdir(path):
         probe = next(
@@ -67,6 +61,32 @@ def fixture_fingerprint(path: str) -> tuple[str, int, int]:
     return (probe, st.st_mtime_ns, st.st_size)
 
 
+_SCRATCH_ROOT: tuple[int, str] | None = None  # (creating pid, root)
+_SCRATCH_LOCK = threading.Lock()
+
+
+def _remove_scratch_root(pid: int, root: str) -> None:
+    # forked PySpark workers inherit atexit handlers; only the creator
+    # removes the root
+    if os.getpid() == pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory named ``prefix…`` under this process's scratch
+    root. The root is made on first use and removed at interpreter exit,
+    so a per-call landing, checkpoint or fixture dir never outlives the
+    process. Not removed earlier: most callers return a lazy scan over
+    it."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None or _SCRATCH_ROOT[0] != os.getpid():
+            _SCRATCH_ROOT = (os.getpid(), tempfile.mkdtemp(prefix="sg_scratch_"))
+            atexit.register(_remove_scratch_root, *_SCRATCH_ROOT)
+        root = _SCRATCH_ROOT[1]
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
 _BUILT: dict[tuple, object] = {}
 # Guards the check-then-build on _BUILT (r10 ADVICE): two concurrent first
 # calls would otherwise each write a full landing (one leaked). One lock
@@ -78,18 +98,18 @@ _BUILT_LOCK = threading.Lock()
 
 def built_once(sf_dir: str, table: str, prefix: str, build):
     """What ``build(work)`` returns, ``work`` being a fresh
-    ``tempfile.mkdtemp(prefix=prefix)``, built once per generation of the
+    ``scratch_dir(prefix)``, built once per generation of the
     fixture ``{sf_dir}/{table}.parquet``: a committed table root, a landing
     or sink dir, or a tuple of them. ``prefix`` identifies the calling
     site. Keyed on ``sf_dir`` as given plus the fixture's footer stat, so
     a rewrite builds again and a hard-linked copy at a new ``sf_dir``
     builds again too. A superseded entry of the same ``(prefix, sf_dir)``
-    is dropped; its dir is tempfile-owned and reaped with the OS tmpdir.
+    is dropped; its dir goes with the scratch root at exit.
     A ``build`` that raises stores nothing."""
     key = (prefix, sf_dir, fixture_fingerprint(f"{sf_dir}/{table}.parquet"))
     with _BUILT_LOCK:
         if key not in _BUILT:
-            value = build(tempfile.mkdtemp(prefix=prefix))
+            value = build(scratch_dir(prefix))
             for stale in [k for k in _BUILT if k[:2] == key[:2]]:
                 del _BUILT[stale]  # fingerprint rotated: fixture regenerated
             _BUILT[key] = value
@@ -142,8 +162,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(TPCH_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
-_SPLIT_DECISIONS: dict[str, bool] = {}
-
 # A SHUFFLE exchange node prints as a standalone word ('Exchange
 # hashpartitioning(...)', 'Exchange RoundRobinPartitioning(...)'); a
 # broadcast build prints as the single token 'BroadcastExchange', which \b
@@ -181,9 +199,7 @@ def safe_num_partitions(df: DataFrame, default: int | None = None) -> int | None
     return df.rdd.getNumPartitions()
 
 
-def rebalance_for_compute(
-    df: DataFrame, target: int | None = None, cache_key: str | None = None
-) -> DataFrame:
+def rebalance_for_compute(df: DataFrame, target: int | None = None) -> DataFrame:
     """Spread rows before a compute-heavy stage IF the source under-splits.
 
     Spark parallelizes a parquet scan at row-group granularity; a source
@@ -205,20 +221,11 @@ def rebalance_for_compute(
     plan→RDD conversion EXECUTES every upstream shuffle stage (measured:
     6.6 s of silent double execution probing a windowed subtree in the
     corpus pipeline). Both checks live in ``safe_num_partitions``.
-
-    ``cache_key`` memoizes the probe for repeated runs over the same
-    source, e.g. the bench loop.
     """
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
-    need = _SPLIT_DECISIONS.get(cache_key) if cache_key else None
-    if need is None:
-        n = safe_num_partitions(df)
-        # n is None ⇔ already spread (or cached) by an upstream shuffle
-        need = n is not None and n < target
-        if cache_key:
-            _SPLIT_DECISIONS[cache_key] = need
-    return df.repartition(target) if need else df
+    target = target or df.sparkSession.sparkContext.defaultParallelism
+    n = safe_num_partitions(df)
+    # n is None ⇔ already spread (or cached) by an upstream shuffle
+    return df.repartition(target) if n is not None and n < target else df
 
 
 def read_json_records(

@@ -127,3 +127,38 @@ def test_concurrent_first_calls_build_once(tmp_path):
     assert len(results) == n
     assert len(calls) == 1
     assert set(results) == {calls[0]}
+
+
+def test_scratch_root_is_removed_at_exit_by_its_creator_only(tmp_path):
+    """Build dirs live under one per-process scratch root that goes at
+    interpreter exit. A forked child inherits the exit handler but must
+    not remove its parent's root."""
+    import subprocess
+
+    sf, tmp = str(tmp_path / "sf"), tmp_path / "tmp"
+    _fixture(sf)
+    tmp.mkdir()
+    code = (
+        "import os, sys\n"
+        "from etl_drone_sense_spark.sources import readers as R\n"
+        "work = R.built_once(sys.argv[1], 't', 'sg_t_', lambda w: w)\n"
+        "open(os.path.join(work, 'f'), 'w').close()\n"
+        "pid = os.fork()\n"
+        "if pid == 0:\n"
+        "    sys.exit(0)\n"
+        "os.waitpid(pid, 0)\n"
+        "print(os.path.dirname(work), os.path.isfile(os.path.join(work, 'f')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, sf],
+        env={**os.environ, "TMPDIR": str(tmp)},
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    root, survived_child = out[0], out[1]
+    assert os.path.dirname(root) == str(tmp)
+    assert os.path.basename(root).startswith("sg_")
+    assert survived_child == "True"
+    assert os.listdir(tmp) == []

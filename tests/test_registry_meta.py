@@ -142,3 +142,25 @@ def test_plans_leave_replay_plumbing_to_streaming_pipeline():
         if tok in line
     ]
     assert not hits, hits
+
+
+def test_only_the_landing_shell_subclasses_the_datasource_api():
+    """sources/datasource.py is the one place that subclasses PySpark's
+    DataSource API; a format module that builds its own reader or stream
+    reader again forks the offset protocol and the split planning. The
+    stream path yields what the batch path yields, so no row-tuple twin of
+    the Arrow IPC batch reader comes back either."""
+    import pathlib
+    import re
+
+    base = r"DataSource|DataSourceReader|DataSourceStreamReader|InputPartition"
+    subclass = re.compile(rf"^\s*class \w+\((?:[\w.]+,\s*)*(?:{base})\)")
+    pkg = pathlib.Path(RG.__file__).parent.parent
+    files = sorted(pkg.rglob("*.py"))
+    hits = {
+        str(p.relative_to(pkg))
+        for p in files
+        if any(subclass.match(line) for line in p.read_text().splitlines())
+    }
+    assert hits == {"sources/datasource.py"}
+    assert not [p.name for p in files if "iter_arrow_rows" in p.read_text()]

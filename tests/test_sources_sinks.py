@@ -10,6 +10,8 @@ from __future__ import annotations
 import inspect
 import json
 import math
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -514,13 +516,13 @@ def test_stream_reader_rejects_out_of_order_landing(tmp_path):
     already-consumed file is re-read."""
     import pytest as _pytest
 
-    from etl_drone_sense_spark.sources.datasource import DroneSenseStreamReader
+    from etl_drone_sense_spark.sources.datasource import DroneSenseDataSource
 
     landing = tmp_path / "ooo"
     landing.mkdir()
     (landing / "part-0002.jsonl").write_text("")
     (landing / "part-0003.jsonl").write_text("")
-    rd = DroneSenseStreamReader({"path": str(landing)})
+    rd = DroneSenseDataSource({"path": str(landing)}).streamReader(None)
     start, end = rd.initialOffset(), rd.latestOffset()
     assert (end["idx"], end["last"]) == (2, "part-0003.jsonl")
     assert "h" in end  # consumed-prefix hash travels with the offset
@@ -620,13 +622,13 @@ def test_stream_reader_catches_removal_plus_insertion(tmp_path):
     exposes that the listing's first idx names changed."""
     import pytest as _pytest
 
-    from etl_drone_sense_spark.sources.datasource import DroneSenseStreamReader
+    from etl_drone_sense_spark.sources.datasource import DroneSenseDataSource
 
     landing = tmp_path / "swap"
     landing.mkdir()
     (landing / "part-0001.jsonl").write_text("")
     (landing / "part-0002.jsonl").write_text("")
-    rd = DroneSenseStreamReader({"path": str(landing)})
+    rd = DroneSenseDataSource({"path": str(landing)}).streamReader(None)
     end = rd.latestOffset()
     assert len(rd.partitions(rd.initialOffset(), end)) == 2
 
@@ -636,6 +638,121 @@ def test_stream_reader_catches_removal_plus_insertion(tmp_path):
     # now (part-0000, part-0002) — must refuse
     with _pytest.raises(RuntimeError, match="monotonic-naming"):
         rd.partitions(end, rd.latestOffset())
+
+
+def _land_jsonl(path, keys):
+    with open(path, "w") as fh:
+        for k in keys:
+            fh.write(json.dumps(dict(GOOD, id=str(k))) + "\n")
+
+
+def _land_avro(path, keys):
+    from etl_drone_sense_spark.sources import avrolite as AL
+
+    schema = {"type": "record", "name": "t", "fields": [{"name": "k", "type": "long"}]}
+    AL.write_avro(path, schema, [{"k": k} for k in keys], block_records=50)
+
+
+def _land_arrow(path, keys):
+    import pyarrow as pa
+
+    from etl_drone_sense_spark.sources import arrowipc as AI
+
+    AI.write_arrow_ipc(path, pa.table({"k": pa.array(keys, pa.int64())}), max_chunksize=50)
+
+
+def _datasource(fmt):
+    from etl_drone_sense_spark.sources import arrowipc, avrolite, datasource
+
+    return {
+        "dronesense": lambda: datasource.DroneSenseDataSource,
+        "avrolite": avrolite.make_datasource,
+        "arrowipc": arrowipc.make_datasource,
+    }[fmt]()
+
+
+# (format, landing extension, writer, splits files under split_target_bytes)
+LANDING_FORMATS = [
+    ("dronesense", ".jsonl", _land_jsonl, False),
+    ("avrolite", ".avro", _land_avro, True),
+    ("arrowipc", ".arrows", _land_arrow, True),
+]
+
+
+def _decoded_rows(reader, parts):
+    # a row tuple counts one, an Arrow record batch its num_rows
+    return sum(getattr(x, "num_rows", 1) for p in parts for x in reader.read(p))
+
+
+@pytest.mark.parametrize("fmt,ext,land,splits", LANDING_FORMATS)
+def test_landing_formats_share_one_shell(tmp_path, fmt, ext, land, splits):
+    """Every landing format plans through the one shell: one batch
+    partition per small file, byte/batch splits of a big file under a
+    small split_target_bytes (splitting formats only), whole-file stream
+    partitions, and a refusal naming the format and landing for an
+    out-of-order landing and for a removal plus insertion."""
+    DS = _datasource(fmt)
+    landing = tmp_path / fmt
+    landing.mkdir()
+    for i, n in enumerate((20, 20, 2000), 1):
+        land(str(landing / f"part-000{i}{ext}"), list(range(n)))
+    path = str(landing)
+
+    whole = DS({"path": path}).reader(None)
+    parts = whole.partitions()
+    assert len(parts) == 3
+    assert _decoded_rows(whole, parts) == 2040
+    fine = DS({"path": path, "split_target_bytes": "512"}).reader(None)
+    fine_parts = fine.partitions()
+    assert (len(fine_parts) > 3) == splits
+    assert _decoded_rows(fine, fine_parts) == 2040
+
+    rd = DS({"path": path, "split_target_bytes": "512"}).streamReader(None)
+    end = rd.latestOffset()
+    stream_parts = rd.partitions(rd.initialOffset(), end)
+    assert [(os.path.basename(p.path), p.span) for p in stream_parts] == [
+        (f"part-000{i}{ext}", ()) for i in (1, 2, 3)
+    ]
+    assert _decoded_rows(rd, stream_parts) == 2040
+
+    refusal = rf"{fmt} landing {re.escape(path)} violated the monotonic-naming"
+    land(str(landing / f"part-0000{ext}"), [1])  # lexically earlier, late
+    with pytest.raises(RuntimeError, match=refusal):
+        rd.partitions(end, rd.latestOffset())
+    # removal + insertion: position idx-1 still names part-0003
+    (landing / f"part-0001{ext}").unlink()
+    with pytest.raises(RuntimeError, match=refusal):
+        rd.partitions(end, rd.latestOffset())
+
+
+@pytest.mark.parametrize("fmt,ext,land,splits", LANDING_FORMATS)
+def test_landing_formats_agree_on_edges(tmp_path, fmt, ext, land, splits):
+    """One rule per edge for every format: a path naming one file is read
+    whatever its extension; a landing with nothing to read plans zero
+    partitions and reads as empty, never raises; a non-positive split
+    target is refused where the format splits."""
+    DS = _datasource(fmt)
+    odd = str(tmp_path / "landed.dat")
+    land(odd, list(range(5)))
+    reader = DS({"path": odd}).reader(None)
+    parts = reader.partitions()
+    assert [p.path for p in parts] == [odd]
+    assert _decoded_rows(reader, parts) == 5
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    reader = DS({"path": str(empty)}).reader(None)
+    assert reader.partitions() == []
+    assert list(reader.read(None)) == []  # Spark's stand-in partition
+    if fmt == "arrowipc":  # a file with no record batch plans nothing
+        land(str(empty / f"part-0001{ext}"), [])
+        assert DS({"path": str(empty)}).reader(None).partitions() == []
+
+    if splits:
+        with pytest.raises(ValueError, match="split_target_bytes"):
+            DS({"path": odd, "split_target_bytes": "0"}).reader(None)
+    with pytest.raises(ValueError, match=f"{fmt} source requires a path"):
+        DS({}).reader(None)
 
 
 def test_avrolite_executor_sink_roundtrip(spark, tmp_path):

@@ -7,7 +7,7 @@ import os
 import pytest
 
 from etl_drone_sense_spark.sources import table_commit as tc
-from etl_drone_sense_spark.sources.readers import read_table
+from etl_drone_sense_spark.sources.readers import read_table, scratch_dir
 
 
 @pytest.fixture
@@ -977,8 +977,6 @@ def test_partition_evolution_prunes_both_epochs(spark):
     predicate must SKIP files in BOTH layout epochs (coarse month-only
     ranges AND finer month+status ranges), and the pruned read must
     equal the unpruned filtered scan row-for-row."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from etl_drone_sense_spark.sources import table_commit as TC
@@ -990,7 +988,7 @@ def test_partition_evolution_prunes_both_epochs(spark):
     df = spark.createDataFrame(
         rows, "k long, o_month int, status string, val double"
     )
-    root = tempfile.mkdtemp(prefix="sg_pevo_test_")
+    root = scratch_dir("sg_pevo_test_")
     TC.commit(
         df.filter(F.col("k") % 2 == 0).repartitionByRange(4, "o_month"),
         root,
@@ -1037,8 +1035,6 @@ def _two_epoch_table(spark, tmp_prefix="sg_mig_test_"):
     """Shared fixture for the migration tests: epoch 1 = even keys in 4
     coarse month-range files, epoch 2 = odd keys in 12 (month, status)
     files. Returns (root, df, epoch1_files)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from etl_drone_sense_spark.sources import table_commit as TC
@@ -1047,7 +1043,7 @@ def _two_epoch_table(spark, tmp_prefix="sg_mig_test_"):
     df = spark.createDataFrame(
         rows, "k long, o_month int, status string, val double"
     )
-    root = tempfile.mkdtemp(prefix=tmp_prefix)
+    root = scratch_dir(tmp_prefix)
     TC.commit(
         df.filter(F.col("k") % 2 == 0).repartitionByRange(4, "o_month"),
         root,
@@ -1188,20 +1184,18 @@ def test_replace_files_requires_append_on_existing_table(spark):
     """_replace_files is a parent-manifest edit: overwrite mode and the
     first-commit append->overwrite flip would silently ignore it, so
     commit() must refuse both outright (r15 ADVICE)."""
-    import tempfile
-
     import pytest
 
     from etl_drone_sense_spark.sources import table_commit as TC
 
     df = spark.createDataFrame([(1, "a")], "k long, v string")
-    root = tempfile.mkdtemp(prefix="sg_repl_mode_")
+    root = scratch_dir("sg_repl_mode_")
     TC.commit(df, root)
     with pytest.raises(ValueError, match="requires mode='append'"):
         TC.commit(
             df, root, mode="overwrite", _replace_files=frozenset({"x"})
         )
-    fresh = tempfile.mkdtemp(prefix="sg_repl_first_")
+    fresh = scratch_dir("sg_repl_first_")
     with pytest.raises(ValueError, match="requires mode='append'"):
         TC.commit(
             df, fresh, mode="append", _replace_files=frozenset({"x"})

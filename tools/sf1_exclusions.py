@@ -46,6 +46,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_drone_sense_spark.schemas import TABLE_NAMES  # noqa: E402
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1 = os.path.join(REPO, ".scale_probe", "sf1_full_x10")
 
@@ -194,10 +196,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for t_ in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
+    for t_ in TABLE_NAMES:
         p = f"{SF1}/{t_}.parquet"
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.execute(f"CREATE VIEW {t_} AS SELECT * FROM '{src}'")

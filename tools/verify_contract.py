@@ -17,12 +17,9 @@ from pyspark.sql import SparkSession
 
 sys.path.insert(0, ".")
 import __spark_entry__ as E  # noqa: E402
+from etl_drone_sense_spark.schemas import TABLE_NAMES  # noqa: E402
 
 SF = os.environ.get("VERIFY_SF_DIR", "/root/testdata/sf0.01")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
 
 
 def canon(df_):
@@ -52,7 +49,7 @@ def main() -> int:
 
     qs, os_ = E.queries(), E.oracle_sql()
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         # fixture tables are single files; synthesized sf1 replicas are
         # Spark-written DIRECTORIES named *.parquet — glob those
         p = f"{SF}/{t}.parquet"
