@@ -298,15 +298,6 @@ def winnow_from_hashes(hv: Column, window: int = 4) -> Column:
     return F.array_distinct(wins)
 
 
-def winnow_fingerprints_sql(col: str, shingle_n: int = 3, window: int = 4) -> str:
-    hv = shingle_hashes_sql(col, shingle_n)
-    return (
-        f"list_distinct(list_transform("
-        f"range(1, greatest(len({hv}) - {window - 1}, 1) + 1), "
-        f"i -> list_aggregate(list_slice({hv}, i, i + {window - 1}), 'min')))"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Language identification (marker-n-gram classifier)
 # ---------------------------------------------------------------------------

@@ -3792,10 +3792,10 @@ def sim_ivf_topk_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_winnowing",
     # Staged so each array (tokens → shingles → hashes) materializes once:
-    # the single-expression rendering (TXT.winnow_fingerprints_sql) inlines
-    # the hash array into both the range bound and the slice — and the
-    # token array twice beneath that — which DuckDB re-evaluates per
-    # occurrence (~5× slower; same rows, hash-identical).
+    # a single-expression rendering over shingle_hashes_sql inlines the
+    # hash array into both the range bound and the slice — and the token
+    # array twice beneath that — which DuckDB re-evaluates per occurrence
+    # (~5× slower; same rows, hash-identical).
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, {TXT.tokens_sql('text')} AS tk FROM documents

@@ -16,6 +16,21 @@ stage id (``spark.sql.codegen.useIdInClassName``): AQE numbers codegen
 stages in the order it plans its query stages, which follows the order in
 which earlier stages finish, so a query like ``dedup_paragraph`` gave the
 same stage a new id, hence new source, on most calls.
+
+Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``)
+rather than from ``pyspark.daemon``.  Every PySpark task calls
+``importlib.invalidate_caches()`` before it reads a row, which makes each
+zip importer on the worker's path re-read its archive: the JVM puts
+``pyspark.zip``, the py4j zip and the ``spark-core`` jar there, though a
+pip-installed pyspark and py4j serve the same imports.  The daemon drops
+those ``$SPARK_HOME`` archives from ``sys.path`` before it imports pyspark,
+so its workers inherit the short path.  It does nothing where pyspark or
+py4j can only be imported from the archives (a cluster without a
+pip-installed pyspark), and it keeps archives outside ``$SPARK_HOME``.
+Because the daemon is a module of this package, the workers' path
+(``spark.executorEnv.PYTHONPATH``) names the directory holding the package:
+workers start in the JVM's working directory, which need not be the one the
+package was imported from.  A caller's ``extra_conf`` overrides both.
 """
 
 from __future__ import annotations
@@ -48,6 +63,13 @@ _DEFAULTS = {
     # AQE, which made identical code a cache miss: dedup_paragraph compiled
     # 6-48 classes per warm call with the id, 0-4 without it.
     "spark.sql.codegen.useIdInClassName": "false",
+    # Workers fork from a daemon that leaves Spark's own archives off their
+    # sys.path, and find it (and this package) in the directory holding the
+    # package (module docstring). Both are read when the context starts.
+    "spark.python.daemon.module": f"{__package__}.worker_daemon",
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
 }
