@@ -294,7 +294,7 @@ def train_merges_batched(
             eager=True
         )
         if stats_out is not None:
-            # Per-round amortization telemetry (tools/bpe_scale_probe.py):
+            # Per-round amortization telemetry (tools/lane.py --mode bpe):
             # admitted/|frontier| is the quantity that must NOT collapse
             # as the frontier concentrates at vocab scale.
             stats_out.append(

@@ -695,7 +695,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     label / IVF assignment exists yet — the sketch pass is one narrow scan,
     and the only shuffle keys are (band, bucket).
 
-    Two scale caveats, both MEASURED by tools/scale_probe.py:
+    Two scale caveats, both MEASURED by tools/lane.py (slope mode):
     * PAIR-EMISSION output is Σ(cluster choose 2) — quadratic in
       duplicate-cluster DEPTH. On a corpus whose clusters deepen with
       scale (mass replication), listing all pairs is the wrong
@@ -4164,8 +4164,8 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct non-blank paragraph, reassemble docs from survivors. Exact
     whole-doc duplicates in the fixture dedupe as single-paragraph docs;
     PARA_SEEDS exercise shared headers/footers, intra-doc repeats, and a
-    doc that dedupes to empty. Two shuffles total (fingerprint window +
-    doc-id rebuild), no doc-pair space."""
+    doc that dedupes to empty. No doc-pair space; the job and shuffle
+    shape is the "Scale shape" note on ``paragraph_dedup``."""
     from ..operators.dedup import paragraph_dedup as _pd
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")

@@ -190,10 +190,11 @@ def test_tpch_broadcast_strategy_holds_at_sf1_stats(spark):
     test pins the strategy-parity claim whenever the probe fixture is on
     disk; the threshold-off fallback design is pinned separately above."""
     import os
+    from pathlib import Path
 
     import pytest
 
-    sf1 = "/root/repo/.scale_probe/sf1_full_x10"
+    sf1 = str(Path(__file__).resolve().parents[1] / ".scale_probe" / "sf1_full_x10")
     if not os.path.isdir(os.path.join(sf1, "lineitem.parquet")):
         pytest.skip("sf1 probe fixture not synthesized (.scale_probe)")
     for name in ("q5_region_revenue", "q3_shipping_priority", "q18_large_volume"):

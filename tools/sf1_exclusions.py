@@ -32,7 +32,7 @@ failures. This harness certifies each with an alternative:
   against the width-independent 48-bit oracle.
 
 Writes SF1_EXCLUSIONS.json. Needs the kept sf1 fixture
-(.scale_probe/sf1_full_x10 — run ``tools/scale_probe.py --full --keep``
+(.scale_probe/sf1_full_x10 — run ``tools/lane.py --scale 10 --samples 0``
 first) and a sized driver heap (VERIFY_DRIVER_MEM=24g).
 """
 
@@ -184,7 +184,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     if not os.path.isdir(SF1):
-        print(f"missing sf1 fixture at {SF1}; run scale_probe --full --keep")
+        print(f"missing sf1 fixture at {SF1}; run tools/lane.py --scale 10 --samples 0")
         return 2
 
     builder = SparkSession.builder.master(
@@ -214,7 +214,7 @@ def main() -> int:
         print(f"unknown check names: {sorted(unknown)}", file=sys.stderr)
         return 2
     # named-subset runs MERGE into the existing report (same convention
-    # as scale_probe --only) so a targeted re-cert keeps the others
+    # as tools/lane.py's slope merge) so a targeted re-cert keeps the others
     report = {}
     out_path = os.path.join(REPO, "SF1_EXCLUSIONS.json")
     if only and os.path.isfile(out_path):
